@@ -42,11 +42,11 @@ from quicker_spark.model import bm25_idf, term_key
 from quicker_spark.plans.term_query import NewTermQuery, Or, TermQuery
 
 
-def _row_to_encoded(row: pd.Series, block_size: int) -> EncodedPostings:
-    """Stored row -> EncodedPostings. WAND callers must additionally call
-    ``.with_bounds(avgdl)`` — the block-max bound is derived from the
-    CURRENT avgdl at query time, never stored (keeps segments immutable
-    under maintenance)."""
+def _row_to_encoded(row, block_size: int) -> EncodedPostings:
+    """Stored row (a mapping of the postings columns) -> EncodedPostings.
+    WAND callers must additionally call ``.with_bounds(avgdl)`` — the
+    block-max bound is derived from the CURRENT avgdl at query time,
+    never stored (keeps segments immutable under maintenance)."""
     return EncodedPostings(
         df=int(row["df"]),
         ids=bytes(row["ids"]), tfs=bytes(row["tfs"]),
@@ -161,13 +161,13 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
     if exclude is not None:
         pseudo_in_trees |= {t for t in exclude.terms()
                             if t.startswith(PSEUDO_PREFIX)}
+    if demote is not None and not (0.0 <= float(demote_factor) <= 1.0):
+        raise ValueError(
+            f"demote_factor must be in [0, 1] (ES negative_boost): "
+            f"{demote_factor}")
     if demote is not None and demote.empty():
         demote = None
     if demote is not None:
-        if not (0.0 <= float(demote_factor) <= 1.0):
-            raise ValueError(
-                f"demote_factor must be in [0, 1] (ES negative_boost): "
-                f"{demote_factor}")
         if any(t.startswith(PSEUDO_PREFIX) for t in demote.terms()):
             raise ValueError(
                 "phrase pseudo-leaves are not supported in a demote "
@@ -271,11 +271,35 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
                       demote_json, float(demote_factor))
 
 
-def _score_segment_rows(pdf: pd.DataFrame, query: dict, strategy: str,
+def _frame_postings(pdf: pd.DataFrame, block_size: int) -> dict:
+    """One segment's kernel input frame -> {term: (df_global,
+    EncodedPostings)} in row order — the adapter from a Spark group to
+    :func:`_score_segment_rows`. Rows are built column-wise: ``iterrows``
+    and ``to_dict("records")`` box per row and cost several times more."""
+    cols = list(pdf.columns)
+    rows = (dict(zip(cols, vals))
+            for vals in zip(*(pdf[c].to_numpy() for c in cols)))
+    return {r["term"]: (int(r["df_global"]), _row_to_encoded(r, block_size))
+            for r in rows}
+
+
+def full_match_terms(q: TermQuery) -> tuple[set[str], set[str]]:
+    """Validate a full-match-set request -> (scan terms, negated-only
+    terms: scanned for the in-tree setdiff, never scored). Shared by
+    both tiers' ``_scored_matches`` so they reject the same requests."""
+    terms = q.terms()
+    if any(t.startswith(PSEUDO_PREFIX) for t in terms):
+        raise ValueError(
+            "phrase pseudo-leaves are not supported on the "
+            "full-match-set scoring path (collapse/sort/facet) — "
+            "it scans postings, not the positional sidecar")
+    return terms, terms - q.pos_terms()
+
+
+def _score_segment_rows(postings: dict, query: dict, strategy: str,
                         n_query_terms: int, n_docs: int, avgdl: float,
                         k: int, on: int, off: int, or_flags: tuple,
-                        k1: float, b: float, block_size: int,
-                        enc_cache: dict | None = None,
+                        k1: float, b: float,
                         dec_cache: dict | None = None,
                         boosts: dict | None = None,
                         after: tuple | None = None,
@@ -285,15 +309,17 @@ def _score_segment_rows(pdf: pd.DataFrame, query: dict, strategy: str,
                         extra_leaf_ids: dict | None = None,
                         demote: dict | None = None,
                         demote_factor: float = 1.0):
-    """Score ONE query against one segment's posting rows (``pdf``: one
-    row per query term present in the segment) -> (doc_ids, scores).
+    """Score ONE query against one segment -> (doc_ids, scores).
+    ``postings``: {term: (df_global, EncodedPostings)}, one entry per
+    scanned query term present in the segment.
 
-    This is the shared per-segment body of the single-query and batch
-    kernels — batch serving is rank-identical to issuing the queries
-    one at a time because both run exactly this code per query. The
-    optional caches let a batch kernel share decoded/encoded posting
-    runs between queries that reuse a term (decode once per segment,
-    not once per query).
+    This is the shared per-segment body of the Spark kernels (via
+    :func:`_frame_postings`) and the resident tier — batch serving and
+    ``LocalSearcher`` are rank-identical to one-at-a-time Spark searches
+    because all of them run exactly this code per query. ``dec_cache``
+    ({term: decoded run}) is read and filled here, so callers can share
+    decoded runs between queries that reuse a term (decode once per
+    segment, not once per query).
 
     strategy: 'wand' (flat OR, block-max pruned), 'conj' (flat AND,
     skip-pointer intersection + block-max pruned), 'taat' (any tree,
@@ -310,21 +336,17 @@ def _score_segment_rows(pdf: pd.DataFrame, query: dict, strategy: str,
         # the single-pass exhaustive decode still wins (measured
         # ~30ms TAAT vs ~150ms interval walk on a dense 150k-doc
         # segment — down from 4.9s with round 2's per-doc pivot walk).
-        dense = sum(1 for _, r in pdf.iterrows()
-                    if int(r["df_global"]) * 20 > n_docs)
+        dense = sum(1 for dfg, _ in postings.values() if dfg * 20 > n_docs)
         strat = "taat" if dense >= 2 else strat[:4]
     _e = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-    if len(pdf) == 0:
+    if not postings:
         return _e
-    if strategy.startswith("conj") and len(pdf) < n_query_terms:
+    if strategy.startswith("conj") and len(postings) < n_query_terms:
         # a query term has no postings in this segment: the
         # intersection is empty here (reference early-exit,
         # skiplist_reverse_index.go:88-90)
         return _e
-    idf = {
-        r["term"]: bm25_idf(n_docs, int(r["df_global"]))
-        for _, r in pdf.iterrows()
-    }
+    idf = {t: bm25_idf(n_docs, dfg) for t, (dfg, _) in postings.items()}
     if boosts:
         # per-term boost folds into the idf WEIGHT (Lucene boost
         # semantics: contribution = (boost * idf) * u). Both pruned
@@ -335,34 +357,24 @@ def _score_segment_rows(pdf: pd.DataFrame, query: dict, strategy: str,
         # make w * block_max an UNDER-estimate and break admissibility.
         idf = {t: boosts.get(t, 1.0) * v for t, v in idf.items()}
 
-    def encoded(r) -> EncodedPostings:
-        if enc_cache is None:
-            return _row_to_encoded(r, block_size)
-        e = enc_cache.get(r["term"])
-        if e is None:
-            e = enc_cache[r["term"]] = _row_to_encoded(r, block_size)
-        return e
-
     if strat in ("wand", "conj"):
         # with_bounds is idempotent at fixed avgdl (and a no-op re-store
-        # when avgdl == avgdl_ref), so sharing encodings across a batch
-        # of queries is safe
-        postings = {r["term"]: encoded(r).with_bounds(avgdl, k1, b)
-                    for _, r in pdf.iterrows()}
+        # when avgdl == avgdl_ref), so sharing encodings across queries
+        # and threads is safe
+        bounded = {t: e.with_bounds(avgdl, k1, b)
+                   for t, (_, e) in postings.items()}
         scorer = (score_segment_wand if strat == "wand"
                   else score_segment_conjunctive)
-        return scorer(postings, idf, avgdl, k, on, off, or_flags, k1, b,
+        return scorer(bounded, idf, avgdl, k, on, off, or_flags, k1, b,
                       after=after)
     if dec_cache is None:
-        decoded = {r["term"]: _row_to_encoded(r, block_size).decode_all()
-                   for _, r in pdf.iterrows()}
-    else:
-        decoded = {}
-        for _, r in pdf.iterrows():
-            d = dec_cache.get(r["term"])
-            if d is None:
-                d = dec_cache[r["term"]] = encoded(r).decode_all()
-            decoded[r["term"]] = d
+        dec_cache = {}
+    decoded = {}
+    for t, (_, e) in postings.items():
+        d = dec_cache.get(t)
+        if d is None:
+            d = dec_cache[t] = e.decode_all()
+        decoded[t] = d
     return score_segment_exhaustive(
         query, decoded, idf, avgdl, k, on, off, or_flags, k1, b,
         after=after, exclude=exclude, exclude_only=exclude_only,
@@ -423,8 +435,9 @@ def _make_topk_kernel(query_json: str, n_docs: int, avgdl: float,
                     # here (the conj early-exit)
                     extra[p.key] = np.empty(0, dtype=np.int64)
         ids, scores = _score_segment_rows(
-            pdf, query, strategy, n_query_terms, n_docs, avgdl,
-            k, on, off, or_flags, k1, b, block_size, boosts=boost_map,
+            _frame_postings(pdf, block_size), query, strategy,
+            n_query_terms, n_docs, avgdl, k, on, off, or_flags, k1, b,
+            boosts=boost_map,
             after=after, exclude=exclude, exclude_only=excl_only,
             min_match=min_match, extra_leaf_ids=extra,
             demote=demote, demote_factor=demote_factor)
@@ -502,16 +515,16 @@ def _make_batch_kernel(specs: list, n_docs: int, avgdl: float,
               xj, xonly, msm in specs]
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        enc_cache: dict = {}
+        postings = _frame_postings(pdf, block_size)
         dec_cache: dict = {}
         outs = []
         for (qid, query, strat, terms, nqt, on, off, or_flags, bst,
              aft, excl, xonly, msm) in parsed:
-            sub = pdf[pdf["term"].isin(terms)]
+            sub = {t: p for t, p in postings.items() if t in terms}
             ids, scores = _score_segment_rows(
                 sub, query, strat, nqt, n_docs, avgdl,
-                k, on, off, or_flags, k1, b, block_size,
-                enc_cache=enc_cache, dec_cache=dec_cache, boosts=bst,
+                k, on, off, or_flags, k1, b,
+                dec_cache=dec_cache, boosts=bst,
                 after=aft, exclude=excl, exclude_only=xonly,
                 min_match=msm)
             if len(ids):
@@ -1465,18 +1478,10 @@ class SearchEngine:
         so nothing is dropped. The building block for operators that
         rank within the full match set (field collapsing); cost is
         proportional to the match set, exactly like the boolean path."""
-        terms = q.terms()
-        if any(t.startswith(PSEUDO_PREFIX) for t in terms):
-            raise ValueError(
-                "phrase pseudo-leaves are not supported on the "
-                "full-match-set scoring path (collapse/sort/facet) — "
-                "it scans postings, not the positional sidecar")
+        terms, neg = full_match_terms(q)
         if not terms:
             return self.spark.createDataFrame(
                 [], "doc_id long, score double")
-        # nested-must_not terms: scanned for the in-tree setdiff,
-        # never scored — same split as the top-k path
-        neg = terms - q.pos_terms()
         n_docs = int(self.stats["n_docs"])
         kern = _make_topk_kernel(
             q.to_json(), n_docs, float(self.stats["avgdl"]),

@@ -22,10 +22,14 @@ therefore rank- AND score-identical to ``SearchEngine.search``
 boosts, paging cursors, excludes, and quorums; the ``bm25_local_top10``
 driver query certifies it against the DuckDB oracle).
 
-Hot terms' postings stay resident across calls (raw rows + encoded /
-decoded forms, LRU-bounded by ``max_terms``), so repeated-term workloads
-serve at kernel speed — the resident-index property the reference's
-workers have by construction.
+Hot terms stay resident in the form the kernels consume (``df_global``
++ per-segment ``EncodedPostings`` + decoded runs, LRU-bounded by
+``max_terms``), so a warm query builds no DataFrame and serves at
+kernel speed — the resident-index property the reference's workers have
+by construction. Segments score in the calling thread: the GIL
+serializes the Python between numpy calls, so a per-query thread pool
+only adds overhead. Many threads may share one searcher: residency is
+mutated under one lock, scoring runs outside it on per-call snapshots.
 
 Scale story: nothing here is driver-specific. At the 10^12-doc design
 point this class IS the per-shard serving worker — one long-lived
@@ -44,14 +48,17 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
 
 from quicker_spark.engine import (
+    SearchSpec,
     _row_to_encoded,
     _score_segment_rows,
+    full_match_terms,
     resolve_search_spec,
 )
 from quicker_spark.functions.buckets import term_bucket
@@ -69,21 +76,13 @@ class LocalSearcher:
     no Spark job; pyarrow pruned reads + the engine's numpy kernels.
 
     ``max_terms`` bounds the resident cache (LRU over terms; a term's
-    residency = its raw posting rows + encoded/decoded kernel forms).
+    residency = its df_global + per-segment encoded and decoded runs).
 
-    ``threads`` scores a query's segments concurrently (default: up to 8
-    or the machine's cores). Segments are disjoint and the global merge
-    is a total order on (score desc, doc_id asc), so completion order
-    cannot change results — rank identity holds at any thread count
-    (tested). The kernels are numpy-vectorized, so the GIL is released
-    for the decode/score inner loops; one searcher instance still serves
-    ONE query at a time (the per-segment caches are not locked against
-    concurrent queries — give each serving thread its own instance, the
-    reference's one-index-per-worker shape).
+    Safe to share between threads: concurrent calls return exactly the
+    sequential answers (tested), whatever the ``max_terms`` cap.
     """
 
-    def __init__(self, index_dir: str, max_terms: int = 65536,
-                 threads: int | None = None):
+    def __init__(self, index_dir: str, max_terms: int = 65536):
         import pyarrow.dataset as pads
 
         self.index_dir = index_dir
@@ -100,17 +99,17 @@ class LocalSearcher:
         self._has_bucket = ("bucket" in self._post_ds.schema.names
                             and self._n_buckets > 1)
         self.max_terms = int(max_terms)
-        self.threads = (min(8, os.cpu_count() or 1)
-                        if threads is None else max(1, int(threads)))
-        # resident state, all keyed/evicted by term (LRU)
-        self._rows: OrderedDict[str, pd.DataFrame] = OrderedDict()
-        self._df_global: dict[str, int] = {}
-        self._seg_enc: dict[int, dict] = {}   # segment -> {term: Encoded}
-        self._seg_dec: dict[int, dict] = {}   # segment -> {term: decoded}
-        # positional-sidecar residency (phrase serving): term -> sidecar
-        # rows, LRU-bounded by the same cap as the postings cache
+        self._block_size = int(self.stats["block_size"])
+        # resident state, LRU over terms: term -> (df_global,
+        # {segment: EncodedPostings}, {segment: decoded run}); the
+        # decoded dict only grows, and dies with its term's entry
+        self._rows: OrderedDict[str, tuple] = OrderedDict()
+        # positional-sidecar residency (phrase serving): term ->
+        # {segment: decoded sidecar run}, LRU-bounded by the same cap
         self._pos_ds = None                   # opened lazily (optional)
-        self._pos_rows: OrderedDict[str, pd.DataFrame] = OrderedDict()
+        self._pos_runs: OrderedDict[str, dict] = OrderedDict()
+        # guards every mutation of _rows, _pos_runs and the decoded dicts
+        self._lock = threading.Lock()
 
     # -- residency ----------------------------------------------------------
     def _check_fresh(self) -> None:
@@ -123,64 +122,78 @@ class LocalSearcher:
                 "index mutated since open (stats.json changed); "
                 "re-open a LocalSearcher on the new generation")
 
-    def _evict_to_cap(self) -> None:
-        while len(self._rows) > self.max_terms:
-            term, _ = self._rows.popitem(last=False)
-            self._df_global.pop(term, None)
-            for seg_cache in self._seg_enc.values():
-                seg_cache.pop(term, None)
-            for seg_cache in self._seg_dec.values():
-                seg_cache.pop(term, None)
+    def _resident(self, cache: OrderedDict, terms: set[str], load) -> dict:
+        """LRU-resident entries of ``cache`` for ``terms``: hits move to
+        the MRU end; misses come from ``load(sorted missing)`` (one
+        pruned read, outside the lock). Returns a snapshot taken BEFORE
+        eviction, so the current call keeps its inputs even when
+        ``max_terms`` is smaller than its own term count."""
+        snap = {}
+        with self._lock:
+            for t in terms:
+                if t in cache:
+                    cache.move_to_end(t)
+                    snap[t] = cache[t]
+        missing = sorted(terms - snap.keys())
+        if missing:
+            fresh = load(missing)
+            with self._lock:
+                for t in missing:
+                    # a concurrent caller may have inserted t meanwhile:
+                    # keep its entry (same bytes, maybe more runs decoded)
+                    snap[t] = cache.setdefault(t, fresh[t])
+                    cache.move_to_end(t)
+                while len(cache) > self.max_terms:
+                    cache.popitem(last=False)
+        return snap
 
-    def _ensure_terms(self, terms: set[str]) -> dict[str, pd.DataFrame]:
-        """Fetch every missing term's posting rows + df_global in ONE
-        pruned pyarrow read each; absent terms negative-cache an empty
-        frame so repeats never re-read. Returns a {term: rows} snapshot
-        taken BEFORE eviction, so the current query keeps its inputs even
-        when ``max_terms`` is smaller than the query's own term count."""
+    def _pruned_filter(self, ds, missing: list[str]):
+        """term IN missing, plus the bucket-directory pruning the Spark
+        plan gets from _bucket_filter (v5 layout)."""
         import pyarrow.compute as pc
 
-        missing = sorted(t for t in terms if t not in self._rows)
-        for t in terms - set(missing):
-            self._rows.move_to_end(t)
-        if not missing:
-            self._dfg_live = {t: self._df_global[t] for t in terms}
-            return {t: self._rows[t] for t in terms}
         filt = pc.field("term").isin(missing)
-        if self._has_bucket:
-            # directory-level pruning: same PartitionFilters the Spark
-            # plan gets from _bucket_filter
+        if self._has_bucket and "bucket" in ds.schema.names:
             bks = sorted({term_bucket(t, self._n_buckets) for t in missing})
             filt = pc.field("bucket").isin(bks) & filt
-        pdf = self._post_ds.to_table(filter=filt).to_pandas()
+        return filt
+
+    def _ensure_terms(self, terms: set[str]) -> dict[str, tuple]:
+        """{term: resident entry} for ``terms``; absent terms negative-
+        cache an empty entry so repeats never re-read."""
+        return self._resident(self._rows, terms, self._load_terms)
+
+    def _load_terms(self, missing: list[str]) -> dict[str, tuple]:
+        import pyarrow.compute as pc
+
+        rows = self._post_ds.to_table(
+            filter=self._pruned_filter(self._post_ds, missing))
         ts = self._ts_ds.to_table(
             filter=pc.field("term").isin(missing),
-            columns=["term", "df_global"]).to_pandas()
-        dfg = dict(zip(ts["term"], ts["df_global"].astype(np.int64)))
-        for t in missing:
-            rows = pdf[pdf["term"] == t]
-            self._rows[t] = rows
-            # engine: left join + fillna(0) — absent terms score df 0
-            self._df_global[t] = int(dfg.get(t, 0))
-        snapshot = {t: self._rows[t] for t in terms}
-        self._dfg_live = {t: self._df_global[t] for t in terms}
-        self._evict_to_cap()
-        return snapshot
+            columns=["term", "df_global"]).to_pydict()
+        # engine: left join + fillna(0) — absent terms score df 0
+        dfg = dict(zip(ts["term"], ts["df_global"]))
+        fresh = {t: (int(dfg.get(t, 0)), {}, {}) for t in missing}
+        for r in rows.to_pylist():
+            fresh[r["term"]][1][int(r["segment_id"])] = _row_to_encoded(
+                r, self._block_size)
+        return fresh
 
-    def _gather(self, scan_terms: set[str]) -> pd.DataFrame:
-        """Assemble the kernel input frame: one row per (segment, term in
-        scan_terms) with df_global attached — the same rows the Spark
-        path's pruned scan + broadcast term-stats join produces."""
-        rows = self._ensure_terms(scan_terms)
-        frames = [rows[t] for t in sorted(scan_terms) if len(rows[t])]
-        if not frames:
-            return pd.DataFrame()
-        pdf = pd.concat(frames, ignore_index=True)
-        # df lookups go through the live-query snapshot: eviction under a
-        # tiny max_terms cap must never starve the query that triggered it
-        pdf["df_global"] = (pdf["term"].map(self._dfg_live)
-                            .astype(np.int64))
-        return pdf
+    def _gather(self, scan_terms: set[str]) -> dict[int, tuple]:
+        """Assemble the kernel inputs per segment: ({term: (df_global,
+        EncodedPostings)}, {term: resident decoded run}) over the
+        scan_terms present there — the same rows the Spark path's pruned
+        scan + term-stats join produces, without building a frame."""
+        entries = self._ensure_terms(scan_terms)
+        segs: dict[int, tuple] = {}
+        for t in sorted(scan_terms):
+            dfg, enc, dec = entries[t]
+            for seg, e in enc.items():
+                post, memo = segs.setdefault(seg, ({}, {}))
+                post[t] = (dfg, e)
+                if seg in dec:
+                    memo[t] = dec[seg]
+        return segs
 
     # -- positional sidecar (phrase serving) --------------------------------
     def _positions_dataset(self, fields: set[str]):
@@ -206,27 +219,27 @@ class LocalSearcher:
                 partitioning="hive")
         return self._pos_ds
 
-    def _gather_positions(self, terms: set[str]) -> dict[str, pd.DataFrame]:
-        """Sidecar rows per phrase term — the same bucket-directory +
-        term-IN pruned read the postings cache uses, LRU-resident."""
-        import pyarrow.compute as pc
+    def _gather_positions(self, terms: set[str]) -> dict[int, dict]:
+        """Decoded sidecar runs {segment: {term: run}} for the phrase
+        terms — the same bucket-directory + term-IN pruned read the
+        postings cache uses, LRU-resident."""
+        by_seg: dict[int, dict] = {}
+        for t, runs in self._resident(self._pos_runs, terms,
+                                      self._load_positions).items():
+            for seg, run in runs.items():
+                by_seg.setdefault(seg, {})[t] = run
+        return by_seg
 
-        missing = sorted(t for t in terms if t not in self._pos_rows)
-        for t in terms - set(missing):
-            self._pos_rows.move_to_end(t)
-        if missing:
-            filt = pc.field("term").isin(missing)
-            if self._has_bucket and "bucket" in self._pos_ds.schema.names:
-                bks = sorted({term_bucket(t, self._n_buckets)
-                              for t in missing})
-                filt = pc.field("bucket").isin(bks) & filt
-            pdf = self._pos_ds.to_table(filter=filt).to_pandas()
-            for t in missing:
-                self._pos_rows[t] = pdf[pdf["term"] == t]
-        snapshot = {t: self._pos_rows[t] for t in terms}
-        while len(self._pos_rows) > self.max_terms:
-            self._pos_rows.popitem(last=False)
-        return snapshot
+    def _load_positions(self, missing: list[str]) -> dict[str, dict]:
+        from quicker_spark.functions.phrase import decode_positions_row
+
+        fresh: dict[str, dict] = {t: {} for t in missing}
+        for r in self._pos_ds.to_table(
+                filter=self._pruned_filter(self._pos_ds, missing)
+        ).to_pylist():
+            fresh[r["term"]][int(r["segment_id"])] = decode_positions_row(
+                r["ids"], r["tfs"], r["dls"], r["bits"], r["pos"])
+        return fresh
 
     def _phrase_extra_ids(self, phrases: tuple, segments,
                           on: int, off: int,
@@ -235,21 +248,13 @@ class LocalSearcher:
         adjacency match set from the sidecar rows — the same
         phrase_match_docs kernel the Spark path runs per segment."""
         from quicker_spark.engine import PhraseSpec
-        from quicker_spark.functions.phrase import (decode_positions_row,
-                                                    phrase_match_docs)
+        from quicker_spark.functions.phrase import phrase_match_docs
 
         specs = tuple(PhraseSpec(*p) for p in phrases)
         self._positions_dataset({p.field for p in specs})
-        pterms = {k for p in specs for k in p.term_keys}
-        rows = self._gather_positions(pterms)
+        decoded = self._gather_positions(
+            {k for p in specs for k in p.term_keys})
         by_seg: dict[int, dict] = {}
-        decoded: dict[int, dict] = {}
-        for t, pdf in rows.items():
-            for _, r in pdf.iterrows():
-                seg = int(r["segment_id"])
-                decoded.setdefault(seg, {})[t] = decode_positions_row(
-                    bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
-                    bytes(r["bits"]), bytes(r["pos"]))
         for seg in segments:
             dec = decoded.get(seg, {})
             extra = {}
@@ -395,55 +400,54 @@ class LocalSearcher:
                                    demote_factor=demote_factor)
         if spec.empty:
             return _empty_hits()
-        query = json.loads(q.to_json())
-        exclude_tree = (json.loads(spec.exclude_json)
-                        if spec.exclude_json else None)
-        demote_tree = (json.loads(spec.demote_json)
-                       if spec.demote_json else None)
-        pdf = self._gather(set(spec.terms) | set(spec.neg_terms))
-        if len(pdf) == 0:
+        return self._score_segments(q, spec, k, on, off, tuple(or_flags),
+                                    boosts)
+
+    def _scored_matches(self, q: TermQuery, on: int = 0, off: int = 0,
+                        or_flags: tuple = ()) -> pd.DataFrame:
+        """EVERY boolean match of ``q`` BM25-scored — same contract and
+        errors as :meth:`SearchEngine._scored_matches`: the TAAT kernel
+        keeping n_docs per segment, so nothing is dropped."""
+        terms, neg = full_match_terms(q)
+        if not terms:
             return _empty_hits()
-        groups = [(int(seg), g)
-                  for seg, g in pdf.groupby("segment_id", sort=False)]
-        extra_by_seg: dict[int, dict] = {}
-        if spec.phrases:
-            extra_by_seg = self._phrase_extra_ids(
-                spec.phrases, [s for s, _ in groups],
-                on, off, tuple(or_flags))
+        spec = SearchSpec(sorted(terms - neg), "taat", 0, frozenset(neg),
+                          None, None, False)
+        return self._score_segments(q, spec, int(self.stats["n_docs"]),
+                                    on, off, or_flags)
 
-        def _one(seg: int, g: pd.DataFrame):
-            return _score_segment_rows(
-                g, query, spec.strategy, len(spec.terms),
-                int(self.stats["n_docs"]), float(self.stats["avgdl"]),
-                k, on, off, tuple(or_flags),
-                float(self.stats["k1"]), float(self.stats["b"]),
-                int(self.stats["block_size"]),
-                enc_cache=self._seg_enc.setdefault(seg, {}),
-                dec_cache=self._seg_dec.setdefault(seg, {}),
-                boosts=boosts, after=spec.after, exclude=exclude_tree,
-                exclude_only=spec.neg_terms, min_match=spec.msm,
-                extra_leaf_ids=extra_by_seg.get(seg),
-                demote=demote_tree, demote_factor=spec.demote_factor)
-
-        if self.threads > 1 and len(groups) > 1:
-            # the reference's per-worker scatter: disjoint segments score
-            # concurrently (numpy kernels release the GIL); the total-
-            # order merge below makes completion order irrelevant
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(
-                    max_workers=min(self.threads, len(groups))) as ex:
-                parts = list(ex.map(lambda sg: _one(*sg), groups))
-        else:
-            parts = [_one(seg, g) for seg, g in groups]
-        out_ids = [p[0] for p in parts]
-        out_scores = [p[1] for p in parts]
-        ids = np.concatenate(out_ids) if out_ids else np.empty(0, np.int64)
-        scores = (np.concatenate(out_scores) if out_scores
-                  else np.empty(0, np.float64))
-        # global merge = orderBy(score desc, doc_id asc).limit(k)
-        order = np.lexsort((ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": ids[order].astype(np.int64),
-                             "score": scores[order]})
+    def _score_segments(self, q: TermQuery, spec: SearchSpec, k: int,
+                        on: int, off: int, or_flags: tuple,
+                        boosts: dict | None = None) -> pd.DataFrame:
+        """Score every segment holding a scan term with the engine's
+        shared per-segment body, in the calling thread; merge =
+        orderBy(score desc, doc_id asc).limit(k)."""
+        segs = self._gather(set(spec.terms) | spec.neg_terms)
+        if not segs:
+            return _empty_hits()
+        extra_by_seg = (self._phrase_extra_ids(spec.phrases, list(segs),
+                                               on, off, or_flags)
+                        if spec.phrases else {})
+        query = json.loads(q.to_json())
+        exclude = json.loads(spec.exclude_json) if spec.exclude_json else None
+        demote = json.loads(spec.demote_json) if spec.demote_json else None
+        st = self.stats
+        parts = [_score_segment_rows(
+            post, query, spec.strategy, len(spec.terms), int(st["n_docs"]),
+            float(st["avgdl"]), k, on, off, or_flags, float(st["k1"]),
+            float(st["b"]), dec_cache=memo, boosts=boosts, after=spec.after,
+            exclude=exclude, exclude_only=spec.neg_terms, min_match=spec.msm,
+            extra_leaf_ids=extra_by_seg.get(seg), demote=demote,
+            demote_factor=spec.demote_factor)
+            for seg, (post, memo) in segs.items()]
+        with self._lock:
+            # publish the runs this call decoded, for terms still resident
+            for seg, (_, memo) in segs.items():
+                for t, d in memo.items():
+                    if t in self._rows:
+                        self._rows[t][2].setdefault(seg, d)
+        return _top_k(np.concatenate([p[0] for p in parts]),
+                      np.concatenate([p[1] for p in parts]), k)
 
     def search_rescore(self, q: TermQuery, rescore_q: TermQuery,
                        k: int = 10, window_size: int = 50,
@@ -455,7 +459,7 @@ class LocalSearcher:
         contract, errors, and bitwise scores as
         :meth:`SearchEngine.search_rescore`: primary top-window from the
         resident postings, secondary = the rescore query's full scored
-        match set (the same TAAT kernel with nothing dropped), combined
+        match set (:meth:`_scored_matches`), combined
         as query_weight * primary + rescore_weight * secondary (0 where
         the rescorer doesn't match), top-k ties doc_id asc."""
         if window_size < k:
@@ -466,9 +470,7 @@ class LocalSearcher:
                           or_flags=or_flags)
         if not len(win):
             return _empty_hits()
-        # full scored match set: keep-all top-k (nothing dropped)
-        sec = self.search(rescore_q, k=2 ** 62, on=on, off=off,
-                          or_flags=or_flags, mode="taat")
+        sec = self._scored_matches(rescore_q, on, off, tuple(or_flags))
         r = dict(zip(sec["doc_id"].to_numpy(),
                      sec["score"].to_numpy()))
         qw, rw = float(query_weight), float(rescore_weight)
@@ -476,10 +478,7 @@ class LocalSearcher:
                          for d, s in zip(win["doc_id"].to_numpy(),
                                          win["score"].to_numpy())],
                         dtype=np.float64)
-        ids = win["doc_id"].to_numpy()
-        order = np.lexsort((ids, -comb))[:k]
-        return pd.DataFrame({"doc_id": ids[order].astype(np.int64),
-                             "score": comb[order]})
+        return _top_k(win["doc_id"].to_numpy(), comb, k)
 
     def search_phrase(self, words, field: str = "content", k: int = 10,
                       on: int = 0, off: int = 0, or_flags: tuple = (),
@@ -491,8 +490,7 @@ class LocalSearcher:
         adjacency match set, score with the shared
         ``score_segment_phrase`` kernel; global merge is the same
         (score desc, doc_id asc) total order."""
-        from quicker_spark.functions.phrase import (decode_positions_row,
-                                                    score_segment_phrase)
+        from quicker_spark.functions.phrase import score_segment_phrase
         from quicker_spark.model import bm25_idf
 
         self._check_fresh()
@@ -502,7 +500,7 @@ class LocalSearcher:
             return _empty_hits()
         terms = [f"{field}\x01{w}" for w in words]
         need = set(terms)
-        rows = self._gather_positions(need)
+        decoded = self._gather_positions(need)
         # engine parity: term stats left-join + fillna(0)
         import pyarrow.compute as pc
         ts = self._ts_ds.to_table(
@@ -511,13 +509,6 @@ class LocalSearcher:
         dfg = dict(zip(ts["term"], ts["df_global"].astype(np.int64)))
         idf = {t: bm25_idf(int(self.stats["n_docs"]), int(dfg.get(t, 0)))
                for t in need}
-        decoded: dict[int, dict] = {}
-        for t, pdf in rows.items():
-            for _, r in pdf.iterrows():
-                seg = int(r["segment_id"])
-                decoded.setdefault(seg, {})[t] = decode_positions_row(
-                    bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
-                    bytes(r["bits"]), bytes(r["pos"]))
         parts = []
         for seg in sorted(decoded):
             dec = decoded[seg]
@@ -529,11 +520,8 @@ class LocalSearcher:
                     gap=int(gap)))
         if not parts:
             return _empty_hits()
-        ids = np.concatenate([p[0] for p in parts])
-        scores = np.concatenate([p[1] for p in parts])
-        order = np.lexsort((ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": ids[order].astype(np.int64),
-                             "score": scores[order]})
+        return _top_k(np.concatenate([p[0] for p in parts]),
+                      np.concatenate([p[1] for p in parts]), k)
 
     def search_many(self, queries: dict[str, TermQuery], k: int = 10,
                     **kwargs) -> pd.DataFrame:
@@ -611,6 +599,13 @@ def _levenshtein(a: str, b: str) -> int:
                            prev[j - 1] + (ca != cb)))
         prev = cur
     return prev[-1]
+
+
+def _top_k(ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+    """Global merge = orderBy(score desc, doc_id asc).limit(k)."""
+    order = np.lexsort((ids, -scores))[:k]
+    return pd.DataFrame({"doc_id": ids[order].astype(np.int64),
+                         "score": scores[order]})
 
 
 def _empty_hits() -> pd.DataFrame:

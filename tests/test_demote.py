@@ -148,3 +148,8 @@ def test_validation_errors(eng):
     with pytest.raises(ValueError, match="pseudo-leaves"):
         eng.search(_q(), k=5,
                    demote=TermQuery(keyword=PSEUDO_PREFIX + "p0"))
+    # the factor is validated even when the demote tree is empty
+    from quicker_spark.serving import LocalSearcher
+    for tier in (eng, LocalSearcher(eng.index_dir)):
+        with pytest.raises(ValueError, match="demote_factor"):
+            tier.search(_q(), k=5, demote=TermQuery(), demote_factor=5.0)

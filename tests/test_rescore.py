@@ -98,3 +98,14 @@ def test_local_tier_bitwise_identity(eng):
 def test_window_guard(eng):
     with pytest.raises(ValueError, match="window_size"):
         eng.search_rescore(_q(), _rq(), k=10, window_size=5)
+
+
+def test_pseudo_leaf_rescorer_rejected_on_both_tiers(eng):
+    from quicker_spark.engine import PSEUDO_PREFIX
+    from quicker_spark.plans.term_query import TermQuery
+    from quicker_spark.serving import LocalSearcher
+
+    rq = Or(TermQuery(keyword=PSEUDO_PREFIX + "p0"))
+    for tier in (eng, LocalSearcher(eng.index_dir)):
+        with pytest.raises(ValueError, match="full-match-set"):
+            tier.search_rescore(_q(), rq, k=10, window_size=WINDOW)
