@@ -7,8 +7,9 @@ re-expressed Spark-first:
 - corpus ingestion over an Iceberg/parquet table of source-code rows
   ``(repo, path, commit, lang, content)``
 - vectorized (Arrow/pandas-UDF) tokenization — no per-row Python
-- per-segment sorted posting lists, delta + varbyte compressed, built with a
-  salted two-phase repartition-by-term merge (hot-token skew safe)
+- per-segment sorted posting lists, delta + varbyte compressed, built by
+  one map-side-combined exchange on (segment, term) (hot-token skew safe)
+  into a term-bucketed layout
 - boolean AND/OR query trees with bit-feature flag predicates (exact
   semantics of the reference's ``filterByBits``,
   reference: internal/reverse_index/skiplist_reverse_index.go:158-171)

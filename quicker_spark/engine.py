@@ -39,6 +39,7 @@ from quicker_spark.functions.kernels import (
 )
 from quicker_spark.functions.buckets import term_bucket
 from quicker_spark.model import bm25_idf, term_key
+from quicker_spark.operators.build import IndexConfig
 from quicker_spark.plans.term_query import NewTermQuery, Or, TermQuery
 
 
@@ -634,6 +635,8 @@ class SearchEngine:
         self.index_dir = index_dir
         with open(os.path.join(index_dir, "stats.json")) as fh:
             self.stats = json.load(fh)
+        # refuses an index without the term-bucketed layout
+        self._n_buckets = IndexConfig.from_stats(self.stats).term_buckets
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
         self._docs: DataFrame | None = None
@@ -713,18 +716,15 @@ class SearchEngine:
 
     # -- helpers ------------------------------------------------------------
     def _bucket_filter(self, df: DataFrame, terms) -> DataFrame:
-        """Partition-prune a bucket-partitioned tree (v5 layout:
-        ``segment_id=S/bucket=B``, bucket = md5(term) % term_buckets) to
+        """Partition-prune a bucket-partitioned tree
+        (``segment_id=S/bucket=B``, bucket = md5(term) % term_buckets) to
         the query terms' bucket directories — the scan reads
         ``len(buckets)/term_buckets`` of each segment instead of trusting
         row-group stats, which cannot discriminate between term-sorted
-        files holding hash-random term subsets. No-op on legacy v4
-        trees (no ``bucket`` partition column / term_buckets absent)."""
-        nb = int(self.stats.get("term_buckets") or 0)
-        if nb > 1 and "bucket" in df.columns:
-            df = df.filter(F.col("bucket").isin(
-                sorted({term_bucket(t, nb) for t in terms})))
-        return df
+        files holding hash-random term subsets."""
+        nb = self._n_buckets
+        return df.filter(F.col("bucket").isin(
+            sorted({term_bucket(t, nb) for t in terms})))
 
     def _postings_for(self, terms: set[str]) -> DataFrame:
         # bucket partition pruning first (directory-level), then the term
@@ -1515,10 +1515,11 @@ class SearchEngine:
         match). Returns the window's top-k under the combined score
         (ties doc_id asc).
 
-        Plan shape: the window is k-bounded driver state (a broadcast
-        side), the secondary pass is :meth:`_scored_matches` — cost
-        proportional to ``rescore_q``'s match set, never the corpus —
-        and the combine is one broadcast-hash join + TakeOrdered. The
+        Plan shape: the window is k-bounded, the secondary pass is
+        :meth:`_scored_matches` — cost proportional to ``rescore_q``'s
+        match set, never the corpus — and the combine is one LEFT OUTER
+        join on doc_id (the window is the preserved side, so it can never
+        be the broadcast build side) + TakeOrdered. The
         expensive rescorer runs once over its match set instead of
         inside every primary candidate's scoring loop, which is the
         entire point of the ES rescore window. No reference analog
@@ -1537,8 +1538,7 @@ class SearchEngine:
                     + F.coalesce(
                         F.lit(float(rescore_weight)) * F.col("r_score"),
                         F.lit(0.0)))
-        hits = (F.broadcast(win)
-                .join(sec, "doc_id", "left")
+        hits = (win.join(sec, "doc_id", "left")
                 .select("doc_id", combined.alias("score"))
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         return self.hydrate(hits) if hydrate else hits

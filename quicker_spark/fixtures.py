@@ -130,3 +130,26 @@ def corpus_df(spark, n_docs: int, partitions: int | None = None):
     return rng.mapInPandas(
         gen, "repo string, path string, commit string, lang string, content string"
     )
+
+
+# Hand-written edge cases for the tokenizer and the NULL-field contract:
+# empty / whitespace-only / unicode / mixed-case content, a NULL lang, an
+# empty lang and a NULL content. A NULL field indexes as '' (it never
+# drops the doc's other terms) and a NULL or empty lang emits no term.
+EDGE_ROWS = [
+    ("r1", "a.py", "c1", "python", "def foo(): return 1"),
+    ("r2", "b.py", "c2", "go", ""),
+    ("r3", "c.py", "c3", "java", "   \t  "),
+    ("r4", "d.py", "c4", "js", "héllo wörld déf naïve"),
+    ("r5", "e.py", "c5", "rust", "DEF Def def dEf"),
+    ("r6", "f.py", "c6", "c", "x1_y2 x1_y2 x1_y2 z"),
+    ("r7", "g.py", "c7", None, "null lang still indexed"),
+    ("r8", "h.py", "c8", "", "empty lang still indexed"),
+    ("r9", "i.py", "c9", "python", None),
+]
+
+
+def edge_corpus_pdf() -> pd.DataFrame:
+    """The :data:`EDGE_ROWS` corpus (NULLs kept as ``None``)."""
+    return pd.DataFrame(EDGE_ROWS,
+                        columns=["repo", "path", "commit", "lang", "content"])

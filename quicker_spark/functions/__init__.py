@@ -4,7 +4,7 @@ from quicker_spark.functions.codec import (
     delta_encode,
     delta_decode,
 )
-from quicker_spark.functions.tokenize import TOKEN_RE, tokenize_udf, tokenize_col
+from quicker_spark.functions.tokenize import TOKEN_RE, tokenize_col
 
 __all__ = [
     "varbyte_encode",
@@ -12,6 +12,5 @@ __all__ = [
     "delta_encode",
     "delta_decode",
     "TOKEN_RE",
-    "tokenize_udf",
     "tokenize_col",
 ]

@@ -39,7 +39,9 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# default bucket count for new indexes (IndexConfig.term_buckets)
+# default bucket count for new indexes (IndexConfig.term_buckets). Every
+# index is bucketed: IndexConfig rejects counts < 2, and both readers
+# refuse an index whose stats.json has none (rebuild it)
 N_BUCKETS_DEFAULT = 32
 
 

@@ -12,17 +12,17 @@ and the DuckDB oracle SQL so all three agree bit-for-bit):
 
     lowercase the text, then extract maximal runs of ``[a-z0-9_]``
 
-Two implementations of the same spec:
+Three implementations of the same spec:
 
 - :func:`tokenize_col` — pure Catalyst expression (``lower`` + ``split`` +
-  ``filter``). Whole-stage-codegen'd JVM path; the default for builds
-  because it avoids the Arrow round-trip entirely.
-- :func:`tokenize_udf` — Arrow ``pandas_udf`` using pandas' C string
-  kernels. Kept as the extension point for real code-aware tokenizers
-  (camelCase splitting, BPE, language-specific rules) that can't be said in
-  Catalyst expressions.
+  ``filter``); computes each doc's ``doc_len`` in the forward index.
+- :func:`batch_doc_term_tfs` — pandas' C string kernels
+  (``str.findall(TOKEN_RE)``) over a whole Arrow batch; the build wave's
+  term frequencies.
+- :func:`tokenize_py` — one Python string, for the oracle and tests.
 
-Both produce identical arrays on any input (tested).
+All three produce identical tokens on any input (tested), so ``doc_len``
+and the term frequencies always count the same tokens.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # One regex, three engines: python `re`, pandas `.str.findall`, and (in
 # complement form) Spark `split` / DuckDB `string_split_regex`.
@@ -51,12 +50,6 @@ def tokenize_col(content: Column) -> Column:
     return F.filter(parts, lambda t: t != F.lit(""))
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(content: pd.Series) -> pd.Series:
-    """Arrow-vectorized tokenizer (same spec as :func:`tokenize_col`)."""
-    return content.fillna("").str.lower().str.findall(TOKEN_RE)
-
-
 def tokenize_py(text: str) -> list[str]:
     """Single-string tokenizer for the driver-side oracle/tests."""
     import re
@@ -70,9 +63,8 @@ def batch_doc_term_tfs(fields: tuple[str, ...], cols):
     ``cols`` are pandas Series (one per field, call order = ``fields``).
     Returns flattened parallel arrays ``(doc_idx, terms, tfs)`` — one entry
     per unique (doc, field-namespaced term) pair in the batch, sorted
-    stable by ``doc_idx``. Shared by the exploding ``make_term_tf_udf``
-    (the two-phase build) and the packed-partial wave path, so both build
-    modes count terms through the identical code.
+    stable by ``doc_idx``. The packed wave's map side
+    (build._make_pack_iter) counts every term through it.
 
     Counting is C-speed: per field, flatten the batch's token lists,
     `pd.factorize` to int codes, then one `np.unique` over the combined
@@ -80,7 +72,8 @@ def batch_doc_term_tfs(fields: tuple[str, ...], cols):
     ~26 us/token and made this UDF the whole build's bottleneck — python
     time, invisible to JVM CPU metrics.)
 
-    A field named ``lang`` is taken verbatim as a single term, the rest
+    NULL fields count as ``''``. A field named ``lang`` is taken
+    verbatim as a single term (an empty/NULL lang emits none); the rest
     are tokenized.
     """
     import numpy as np
@@ -91,7 +84,7 @@ def batch_doc_term_tfs(fields: tuple[str, ...], cols):
     for fname, col in zip(fields, cols):
         filled = col.fillna("")
         if fname == "lang":
-            # empty/NULL lang emits no term (parity with _terms_col)
+            # empty/NULL lang emits no term
             mask = (filled != "").to_numpy()
             if mask.any():
                 idxs = np.nonzero(mask)[0].astype(np.int64)
@@ -126,30 +119,3 @@ def batch_doc_term_tfs(fields: tuple[str, ...], cols):
     order = np.argsort(docs, kind="stable")
     return docs[order], terms[order], tfs[order]
 
-
-def make_term_tf_udf(fields: tuple[str, ...]):
-    """Arrow UDF computing each doc's field-namespaced (terms[], tfs[]) in
-    one batch-vectorized pass — tokenize + count INSIDE the batch, so the
-    build explodes unique pairs directly and skips the
-    groupBy(term, doc).count() shuffle entirely (~40% fewer shuffled rows,
-    one less stage barrier). Counting shared with the packed wave path via
-    :func:`batch_doc_term_tfs`.
-
-    ``fields`` are column names in call order.
-    """
-    import numpy as np
-
-    @F.pandas_udf("struct<terms:array<string>,tfs:array<int>>")
-    def term_tf(*cols: pd.Series) -> pd.DataFrame:
-        n = len(cols[0])
-        docs, terms, tfs = batch_doc_term_tfs(fields, cols)
-        if len(docs) == 0:
-            empty = [[] for _ in range(n)]
-            return pd.DataFrame({"terms": empty, "tfs": [list(e) for e in empty]})
-        bounds = np.searchsorted(docs, np.arange(n + 1, dtype=np.int64))
-        return pd.DataFrame({
-            "terms": [terms[s:e].tolist() for s, e in zip(bounds, bounds[1:])],
-            "tfs": [tfs[s:e].tolist() for s, e in zip(bounds, bounds[1:])],
-        })
-
-    return term_tf

@@ -1,27 +1,20 @@
-"""Index build: two-phase posting construction, checkpointed waves.
+"""Index build: one packed posting wave per group of segments, written
+into the term-bucketed layout, checkpointed wave by wave.
 
-Default dataflow per wave (``wave_mode='packed'`` — single exchange):
+Dataflow per wave:
 
 1. one Arrow pass over the forward-index rows: tokenize + count each
    batch (batch_doc_term_tfs), group the batch's entries by
-   (segment, term), emit packed int64 buffers — the MAP-SIDE COMBINE of
-   the skew-defeating two-phase merge the north rule mandates (a hot
-   term's work arrives as many bounded batch-partials, never one
-   planet-sized row)
-2. ONE hash exchange on (segment, term-bucket) + a spillable
-   in-partition sort by (segment, term)
+   (segment, term), emit packed varbyte buffers — the MAP-SIDE COMBINE
+   that defeats skew (a hot term's work arrives as many bounded
+   batch-partials, never one planet-sized row)
+2. ONE hash exchange on (segment, term) + a spillable in-partition sort
+   by (segment, term)
 3. streaming merge+encode (mapInPandas): concatenate each contiguous
-   group, block-encode it, and the output is already clustered and
-   term-sorted for the direct partitioned write
-
-The ``wave_mode='twophase'`` parity path keeps the original
-explode -> groupBy(term, doc) -> salted collect_list partials ->
-flatten merge -> encode -> re-exchange-for-write pipeline; both modes
-write bit-identical postings files (tests/test_wave_modes.py). packed
-deletes the JVM object aggregation and the SECOND full exchange of the
-encoded index, which made the wave memory-bandwidth-bound at 8 pinned
-cores (BENCH.md round 4: back-to-back 200k-doc local[8] A/B, wave
-45.6s -> 19.6s).
+   group and block-encode it
+4. one small exchange of the ENCODED rows on (segment, md5-term-bucket),
+   so the write lands one term-sorted file per
+   ``wave=K/segment_id=S/bucket=B`` directory (bucket_cluster)
 
 Segmentation itself is the coarse salt: a term's GLOBAL posting list is
 partitioned across segments by doc_id range (the reference shards docs
@@ -50,13 +43,8 @@ from pyspark.sql import types as T
 from quicker_spark.functions.buckets import N_BUCKETS_DEFAULT, bucket_col
 from quicker_spark.functions.kernels import DEFAULT_BLOCK, encode_postings_batch
 from quicker_spark.io import atomic_write_json
-from quicker_spark.functions.tokenize import (
-    make_term_tf_udf,
-    tokenize_col,
-    tokenize_udf,
-)
 from quicker_spark.model import B, K1
-from quicker_spark.operators.docs import prepare_docs, release_id_cache
+from quicker_spark.operators.docs import prepare_docs
 
 
 # On-disk layout version. Bumped whenever the postings schema or docs
@@ -73,37 +61,19 @@ INDEX_FORMAT = 5
 @dataclass
 class IndexConfig:
     seg_docs: int = 100_000          # docs per segment (doc_id range)
-    # intra-segment salt fan-out for hot terms. None = auto: one salt per
-    # 500k docs of segment span — a hot term's single-reducer list is
-    # ~30 B/entry, so salting (an extra full shuffle) only pays for its
-    # exchange once segment runs reach tens of MB.
-    n_salts: int | None = None
     block_size: int = DEFAULT_BLOCK  # postings per compressed block
     k1: float = K1
     b: float = B
     wave_segments: int = 64          # segments per checkpointed build wave
     fields: tuple[str, ...] = ("content", "repo", "path", "lang")
-    use_arrow_tokenizer: bool = False  # Arrow UDF tokenizer in explode mode
     n_parts: int | None = None       # doc-id assignment parallelism
     id_col: str | None = None        # trust a pre-assigned dense int64 id
-    # 'arrow_pairs': tokenize+count per doc in one Arrow UDF pass, explode
-    # unique (term, tf) pairs — one less shuffle stage, ~40% fewer rows.
-    # 'explode': pure-Catalyst explode + groupBy().count() (parity path).
-    tf_mode: str = "arrow_pairs"
-    # 'packed': single-exchange wave — map-side packed partial posting
-    # blobs, one bucketed shuffle, streaming merge+encode, direct
-    # clustered write (see wave_postings_packed). 'twophase': the
-    # explode -> groupBy collect_list -> encode -> re-exchange-for-write
-    # path (parity reference; also the path `tf_mode` applies to).
-    # Both modes produce bit-identical postings files (tested).
-    wave_mode: str = "packed"
     # term->directory fan-out of the clustered write
     # (wave=K/segment_id=S/bucket=B, bucket = md5(term) % term_buckets):
     # the query planner maps each query term to its bucket driver-side,
     # so every term-pruned scan is a PARTITION-pruned scan reading
     # 1/term_buckets of each segment (see functions/buckets.py for the
-    # sizing law). Fixed per index (persisted in stats.json); <= 1
-    # disables bucketing (legacy v4 layout).
+    # sizing law). Fixed per index (persisted in stats.json); >= 2.
     term_buckets: int = N_BUCKETS_DEFAULT
     # pre-warm one python worker per task slot with a pipeline-shaped
     # dummy wave before the first real wave (see warm_python_workers).
@@ -112,10 +82,10 @@ class IndexConfig:
     # tiny test corpora skip it.
     warm_workers: bool = True
 
-    def effective_salts(self) -> int:
-        if self.n_salts is not None:
-            return max(1, int(self.n_salts))
-        return max(1, self.seg_docs // 500_000)
+    def __post_init__(self):
+        if int(self.term_buckets) < 2:
+            raise ValueError(
+                f"term_buckets must be >= 2, got {self.term_buckets}")
 
     @classmethod
     def from_stats(cls, stats: dict) -> "IndexConfig":
@@ -123,21 +93,24 @@ class IndexConfig:
         created with from its own ``stats.json`` — every cfg field that
         shapes the on-disk layout is persisted there, so maintenance and
         streaming compaction can never silently rebuild a generation
-        with mismatched geometry."""
+        with mismatched geometry. Both readers call it at open: an index
+        without a term-bucketed layout (``term_buckets >= 2``) is
+        refused."""
+        nb = int(stats.get("term_buckets") or 0)
+        if nb < 2:
+            raise ValueError(
+                "index has no term-bucketed layout (stats.json "
+                f"term_buckets={stats.get('term_buckets')!r}, need >= 2); "
+                "rebuild this index")
         return cls(
             seg_docs=int(stats["seg_docs"]),
-            n_salts=int(stats["n_salts"]),
             block_size=int(stats["block_size"]),
             k1=float(stats["k1"]), b=float(stats["b"]),
             wave_segments=int(stats.get("wave_segments", 64)),
             fields=tuple(stats.get("fields", ("content", "repo", "path",
                                               "lang"))),
             id_col=stats.get("id_col"),
-            tf_mode=stats.get("tf_mode", "arrow_pairs"),
-            wave_mode=stats.get("wave_mode", "packed"),
-            # legacy (pre-v5) indexes have no bucket directories — 0 keeps
-            # maintenance writing the layout the index actually has
-            term_buckets=int(stats.get("term_buckets", 0)),
+            term_buckets=nb,
         )
 
 
@@ -165,114 +138,6 @@ POSTINGS_SCHEMA = T.StructType([
 ])
 
 
-def _encode_udf(avgdl: float, k1: float, b: float, block_size: int):
-    """Arrow UDF: aligned primitive arrays -> block-compressed layout.
-
-    Whole-batch vectorized (encode_postings_batch): one varbyte pass per
-    stream per Arrow batch instead of ~30 numpy calls per posting run.
-    ``avgdl`` only seeds the tight reference bound (avgdl_ref) — it does
-    not make the bytes stats-dependent.
-    """
-
-    @F.pandas_udf(POSTINGS_SCHEMA)
-    def enc(doc_ids: pd.Series, tfs: pd.Series, dls: pd.Series,
-            bits: pd.Series) -> pd.DataFrame:
-        rows = encode_postings_batch(
-            doc_ids.to_numpy(), tfs.to_numpy(), dls.to_numpy(),
-            bits.to_numpy(), avgdl, k1, b, block_size)
-        return pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
-
-    return enc
-
-
-def _terms_col(cfg: IndexConfig):
-    """array<string> of field-namespaced terms for one doc (single pass).
-
-    Every field is coalesced to '' so a NULL in one indexed column never
-    nulls the whole concat (silently dropping ALL the doc's terms), and an
-    empty/NULL lang emits no term — identical contract to the arrow_pairs
-    mode's fillna(''), so both build modes produce the same postings on
-    NULL-bearing corpora."""
-    tok = tokenize_udf if cfg.use_arrow_tokenizer else tokenize_col
-    parts = []
-    for f_name in cfg.fields:
-        c = F.coalesce(F.col(f_name), F.lit(""))
-        if f_name == "lang":
-            parts.append(
-                F.when(c == "", F.array().cast("array<string>"))
-                .otherwise(F.array(F.concat(F.lit("lang\x01"), c)))
-            )
-        else:
-            parts.append(
-                F.transform(tok(c),
-                            lambda t: F.concat(F.lit(f_name + "\x01"), t))
-            )
-    return F.concat(*parts)
-
-
-def wave_postings(docs_wave: DataFrame, cfg: IndexConfig,
-                  avgdl: float) -> DataFrame:
-    """The posting build for one wave of segments."""
-    if cfg.tf_mode == "arrow_pairs":
-        udf = make_term_tf_udf(cfg.fields)
-        tf = docs_wave.select(
-            "segment_id", "doc_id", F.col("doc_len").alias("dl"),
-            F.col("bits_feature").alias("bitsf"),
-            udf(*[F.col(f) for f in cfg.fields]).alias("p"),
-        ).select(
-            "segment_id", "doc_id", "dl", "bitsf",
-            F.explode(F.arrays_zip("p.terms", "p.tfs")).alias("z"),
-        ).select("segment_id", F.col("z.terms").alias("term"),
-                 "doc_id", "dl", "bitsf", F.col("z.tfs").alias("tf"))
-    else:
-        toks = docs_wave.select(
-            "segment_id", "doc_id", F.col("doc_len").alias("dl"),
-            F.col("bits_feature").alias("bitsf"),
-            F.explode(_terms_col(cfg)).alias("term"),
-        )
-        tf = toks.groupBy("segment_id", "term", "doc_id", "dl", "bitsf").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-    # Postings stay UNSORTED through both aggregations — the encoder's
-    # numpy lexsort orders each run by doc_id. (JVM sort_array over struct
-    # arrays doubled the merge stage's GC time; the order of collect_list
-    # is nondeterministic either way, so the sort must happen once at the
-    # end regardless.)
-    entry = F.struct("doc_id", "tf", "dl", "bitsf")
-    n_salts = cfg.effective_salts()
-    if n_salts > 1:
-        # salted two-phase merge: a hot term's segment run is built by
-        # n_salts reducers, each list bounded by seg_docs/n_salts
-        partial = (
-            tf.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(n_salts)))
-            .groupBy("segment_id", "term", "salt")
-            .agg(F.collect_list(entry).alias("plist"))
-        )
-        merged = partial.groupBy("segment_id", "term").agg(
-            F.flatten(F.collect_list("plist")).alias("plist")
-        )
-    else:
-        # single-shuffle path: a segment bounds every run at seg_docs
-        # entries (~30B each), so one reducer per term is safe for
-        # moderate seg_docs — skip the salt exchange entirely
-        merged = tf.groupBy("segment_id", "term").agg(
-            F.collect_list(entry).alias("plist")
-        )
-    cols = merged.select(
-        "segment_id", "term",
-        F.transform("plist", lambda x: x["doc_id"]).alias("a_ids"),
-        F.transform("plist", lambda x: x["tf"]).alias("a_tfs"),
-        F.transform("plist", lambda x: x["dl"]).alias("a_dls"),
-        F.transform("plist", lambda x: x["bitsf"]).alias("a_bits"),
-    )
-    enc = _encode_udf(avgdl, cfg.k1, cfg.b, cfg.block_size)
-    return cols.select(
-        "segment_id", "term",
-        enc("a_ids", "a_tfs", "a_dls", "a_bits").alias("e"),
-    ).select("segment_id", "term", "e.*",
-             F.lit(float(avgdl)).alias("avgdl_ref"))
-
-
 # packed-partial rows shuffled by the single-exchange wave: one row per
 # (map-batch, segment, term), the four per-entry streams delta+varbyte
 # encoded map-side (~5-6 B/entry: ids as a per-partial restarting delta
@@ -296,8 +161,8 @@ PARTIAL_SCHEMA = T.StructType([
     T.StructField("bits_raw", T.BinaryType()),
 ])
 
-# final wave output: identical columns (names, types, order) to the
-# twophase path's written files, so readers cannot tell the modes apart
+# final wave output: the written postings columns, before bucket_cluster
+# adds the bucket partition column
 WAVE_OUT_SCHEMA = T.StructType(
     [T.StructField("segment_id", T.LongType()),
      T.StructField("term", T.StringType())]
@@ -310,10 +175,9 @@ def _make_pack_iter(fields: tuple[str, ...]):
     """mapInPandas stage 1 of the packed wave: per Arrow batch, tokenize +
     count (shared batch_doc_term_tfs), then group the batch's (doc, term)
     entries by (segment, term) and emit ONE row per group with the entry
-    streams packed as raw int64 bytes. This is the map-side combine of the
-    two-phase merge: every reducer-side object the old path built with
-    ``collect_list`` (JVM struct arrays, GC-heavy) becomes a flat buffer
-    produced C-side, and the term string crosses the shuffle once per
+    streams varbyte-packed. This is the map-side combine: every partial
+    is a flat buffer produced C-side (no JVM ``collect_list`` of struct
+    arrays), and the term string crosses the shuffle once per
     batch-partial instead of once per posting entry."""
     import numpy as np
 
@@ -460,23 +324,19 @@ def _make_merge_encode_iter(avgdl: float, k1: float, b: float,
 
 def wave_postings_packed(docs_wave: DataFrame, cfg: IndexConfig,
                          avgdl: float) -> DataFrame:
-    """Single-exchange posting build for one wave (cfg.wave_mode='packed').
+    """Single-exchange posting build for one wave.
 
-    Pipeline: map-side packed partials (phase 1 of the skew-defeating
-    two-phase merge — every partial is bounded by the Arrow batch) -> ONE
-    hash exchange on (segment, term-bucket) -> spillable in-partition sort
-    by (segment, term) -> streaming merge+encode -> the result is already
-    clustered for the partitioned write, term-sorted within files.
+    Pipeline: map-side packed partials (every partial is bounded by the
+    Arrow batch) -> ONE hash exchange on (segment, term) -> spillable
+    in-partition sort by (segment, term) -> streaming merge+encode, whose
+    output is term-sorted per (segment, term) group.
 
-    vs the twophase path this deletes: the JVM collect_list aggregation
-    (object hash agg + GC over millions of struct arrays), the four
-    array<struct> transforms, and the SECOND full exchange that
-    re-clustered the encoded index for writing — on the measured 1M-doc
-    build the wave moved every posting byte through the shuffle machinery
-    twice and was memory-bandwidth-bound at 8 cores (BENCH.md round 4).
-    Hot-term bound: one (segment, term) run materializes at most seg_docs
-    entries (~32 B raw each) inside the encoder — the same bound the old
-    merge stage had after flattening its salted partials.
+    Partials are flat varbyte buffers, so no JVM collect_list of struct
+    arrays (object hash agg + GC) is built, and raw entries cross one
+    exchange: the wave is memory-bandwidth-bound at 8 cores (BENCH.md
+    round 4), so payload bytes set its speed. Hot-term bound: one
+    (segment, term) run materializes at most seg_docs entries (~32 B raw
+    each) inside the encoder.
     """
     pack = _make_pack_iter(cfg.fields)
     partial = docs_wave.select(
@@ -535,10 +395,7 @@ def warm_python_workers(spark: SparkSession, cfg: IndexConfig,
                 F.lit(0).cast("long").alias("bits_feature"),
                 *str_cols)
     )
-    if cfg.wave_mode == "packed":
-        wave = wave_postings_packed(dummy, cfg, avgdl or 10.0)
-    else:
-        wave = wave_postings(dummy, cfg, avgdl or 10.0)
+    wave = wave_postings_packed(dummy, cfg, avgdl or 10.0)
     wave.write.format("noop").mode("overwrite").save()
     return time.time() - t0
 
@@ -580,7 +437,7 @@ def write_wave(spark: SparkSession, docs_df: DataFrame, wave: list[int],
                rebuild_segs: list[int] | None = None) -> float:
     """Build + checkpoint one wave of segments; returns elapsed seconds.
 
-    Layout: ``postings/wave=K/segment_id=S`` and
+    Layout: ``postings/wave=K/segment_id=S/bucket=B`` and
     ``manifest/wave=K/segment_id=S`` — the wave is the unit of build
     resume, the SEGMENT subdirectory is the unit of maintenance rewrite.
 
@@ -607,48 +464,11 @@ def write_wave(spark: SparkSession, docs_df: DataFrame, wave: list[int],
         (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         & F.col("segment_id").isin(segs)
     )
-    # twophase bucket/salt sizing: the clustered exchange runs at
-    # min(distinct keys, shuffle partitions) tasks, so target ~3 keys per
-    # SHUFFLE PARTITION — sizing off defaultParallelism under-fills the
-    # stage whenever segments are few and large (the packed path
-    # partitions per-term and needs no salt)
-    par = spark.sparkContext.defaultParallelism
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", str(par)))
-    n_salt = max(1, -(-3 * max(par, sp) // max(1, len(segs))))
-    if cfg.wave_mode == "packed":
-        post = wave_postings_packed(docs_wave, cfg, avgdl)
-        if cfg.term_buckets > 1:
-            # one small exchange of the ENCODED rows clusters them into
-            # bucket directories the query planner can partition-prune
-            writer = (bucket_cluster(post, cfg.term_buckets)
-                      .write.mode("overwrite")
-                      .partitionBy("segment_id", "bucket"))
-        else:
-            # legacy v4 layout: the merge output is already clustered by
-            # (segment, term) and term-sorted, but the planner cannot see
-            # a mapInPandas ordering, so the partitioned writer would
-            # insert its own (unstable) sort by segment_id — make the
-            # required prefix explicit to keep files term-sorted
-            writer = (post.sortWithinPartitions("segment_id", "term")
-                      .write.mode("overwrite").partitionBy("segment_id"))
-    else:
-        post = wave_postings(docs_wave, cfg, avgdl)
-        if cfg.term_buckets > 1:
-            writer = (bucket_cluster(post, cfg.term_buckets)
-                      .write.mode("overwrite")
-                      .partitionBy("segment_id", "bucket"))
-        else:
-            # legacy: cluster by segment before the write — a few
-            # term-hash-salted files per segment directory (each file
-            # stays term-sorted through the split), not one file per
-            # (task x segment) combination
-            writer = (post.repartition(
-                          F.col("segment_id"),
-                          F.pmod(F.xxhash64("term"), F.lit(n_salt)))
-                      # partition-col prefix: see bucket_cluster — without
-                      # it the writer inserts an unstable segment_id sort
-                      .sortWithinPartitions("segment_id", "term")
-                      .write.mode("overwrite").partitionBy("segment_id"))
+    # one small exchange of the ENCODED rows clusters them into bucket
+    # directories the query planner can partition-prune
+    writer = (bucket_cluster(wave_postings_packed(docs_wave, cfg, avgdl),
+                             cfg.term_buckets)
+              .write.mode("overwrite").partitionBy("segment_id", "bucket"))
     if rebuild_segs is None:
         writer.parquet(wave_dir)
     else:
@@ -702,8 +522,10 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
 
     Layout:
       docs/        forward index, sorted by doc_id (range-prunable)
-      stats.json   {n_docs, total_len, avgdl, k1, b, seg_docs, block_size}
+      stats.json   corpus stats {n_docs, total_len, avgdl} + the build
+                   geometry IndexConfig.from_stats reads back
       postings/wave=N/   block-compressed posting runs per wave
+                         (segment_id=S/bucket=B directories)
       manifest/wave=N/   per-segment lineage rows (checkpoint ledger)
       term_stats/  global document frequency per term
     """
@@ -790,7 +612,6 @@ def _build_index_body(spark: SparkSession, corpus: DataFrame, out_dir: str,
         finally:
             if prev_sp is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        release_id_cache(docs)  # no-op since ids became deterministic
         t_agg = time.time()
         agg = obs.get
         stats = {
@@ -798,9 +619,7 @@ def _build_index_body(spark: SparkSession, corpus: DataFrame, out_dir: str,
             "max_doc_id": int(agg["mx"]) if agg["mx"] is not None else -1,
             "k1": cfg.k1, "b": cfg.b, "seg_docs": cfg.seg_docs,
             "block_size": cfg.block_size, "fields": list(cfg.fields),
-            "n_salts": cfg.effective_salts(), "wave_segments": cfg.wave_segments,
-            "id_col": cfg.id_col, "tf_mode": cfg.tf_mode,
-            "wave_mode": cfg.wave_mode,
+            "wave_segments": cfg.wave_segments, "id_col": cfg.id_col,
             "term_buckets": cfg.term_buckets,
             "format": INDEX_FORMAT,
         }

@@ -100,15 +100,6 @@ def assign_doc_ids(df: DataFrame, key_cols=DOC_KEY_COLS,
             .drop("_h", "_tb", "_b", "_off"))
 
 
-def release_id_cache(df: DataFrame) -> None:
-    """Historical seam (kept for callers): the round-3 id assignment
-    fenced a nondeterministic expression behind a corpus-sized cache that
-    callers had to release after the docs write. Ids are now a pure
-    deterministic function of the data (:func:`assign_doc_ids`), so there
-    is nothing to release — this is a no-op."""
-    return None
-
-
 def dedupe_latest(df: DataFrame, key_cols=DOC_KEY_COLS,
                   order_col: str | None = None) -> DataFrame:
     """Latest-write-wins upsert semantics (reference deletes then re-inserts

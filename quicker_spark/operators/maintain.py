@@ -64,11 +64,7 @@ from pyspark.sql import functions as F
 from quicker_spark.io import atomic_write_json, commit_partition_ops
 from quicker_spark.operators.build import IndexConfig, _success, write_wave
 from quicker_spark.operators.positions import refresh_positions
-from quicker_spark.operators.docs import (
-    DOC_KEY_COLS,
-    prepare_docs,
-    release_id_cache,
-)
+from quicker_spark.operators.docs import DOC_KEY_COLS, prepare_docs
 
 _PENDING = "maintain_pending.json"
 _DOCS_STAGING = "docs_staging"
@@ -488,7 +484,6 @@ def upsert_docs(spark: SparkSession, index_dir: str, new_corpus: DataFrame,
     merged = kept.unionByName(new_docs.select(*kept.columns))
     ops, after = _stage_docs(merged, segs, index_dir)
     new_docs.unpersist()
-    release_id_cache(new_docs)
     new_stats = _apply_stats_delta(stats, before, after, new_max=new_max)
     present = {s for s, v in after.items() if v["n"] > 0}
 

@@ -6,35 +6,23 @@ internal/reverseindex/skiplist_reverse_index.go:23-36 — values are
 capability: exact-phrase queries over any indexed text field. It is a
 DERIVED artifact of an existing index directory — built from the
 engine's own ``docs`` forward index, laid out exactly like the main
-postings tree (``positions/wave=K/segment_id=S``, files sorted by term)
-so the same partition-pruned term scan and segment-parallel Arrow kernel
-serve it, and the same segment-granular maintenance keeps it consistent:
-:func:`refresh_positions` rewrites only the (wave, segment) directories a
-delete/upsert touched (maintain._commit calls it whenever the sidecar
-exists).
+postings tree (``positions/wave=K/segment_id=S/bucket=B``, files sorted
+by term) so the same partition-pruned term scan and segment-parallel
+Arrow kernel serve it, and the same segment-granular maintenance keeps
+it consistent: :func:`refresh_positions` rewrites only the (wave,
+segment) directories a delete/upsert touched (maintain._commit calls it
+whenever the sidecar exists).
 
-Scale shape mirrors the main build, mode for mode
-(IndexConfig.wave_mode, read from the index's own stats.json so the
-sidecar always builds the way its index did):
-
-- ``packed`` (default): ONE exchange. A map-side Arrow pass tokenizes
-  each batch, groups its occurrences by (segment, term), and emits
-  packed int64 buffers — doc ids / tfs / dls / bits plus the flat
-  ascending-per-doc position stream. One hash exchange on
-  (segment, term-bucket), a spillable in-partition sort by
-  (segment, term), then a streaming merge+encode whose output is
-  already clustered and term-sorted for the partitioned write. This
-  matters MORE here than for the main postings: the two-phase path
-  shuffles one row per TOKEN OCCURRENCE (the heaviest shuffle in the
-  repo — ~10 rows per posting entry at code-corpus tf), while packed
-  partials carry a term string once per batch-partial and 8 B per
-  occurrence.
-- ``twophase``: the parity path — tokenise + posexplode map-side,
-  per-(term, doc) position lists aggregated with one shuffle, hot
-  terms through the same salted two-phase merge as the postings build
-  (IndexConfig.effective_salts), a second exchange clusters for the
-  write. Both modes write bit-identical positions files
-  (tests/test_wave_modes.py).
+Scale shape mirrors the main build: ONE exchange of packed partials.
+A map-side Arrow pass tokenizes each batch, groups its occurrences by
+(segment, term), and emits varbyte-packed buffers — doc ids / tfs / dls /
+bits plus the flat ascending-per-doc position stream. One hash exchange,
+a spillable in-partition sort by (segment, term), then a streaming
+merge+encode; build.bucket_cluster then clusters the encoded rows into
+the same ``segment_id=S/bucket=B`` directories as the main postings. The
+term string crosses the shuffle once per batch-partial and each
+occurrence costs ~1-2 B, instead of one shuffle row per TOKEN
+OCCURRENCE (~10 rows per posting entry at code-corpus tf).
 """
 
 from __future__ import annotations
@@ -48,9 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from quicker_spark.functions.phrase import encode_positions_batch
-from quicker_spark.functions.tokenize import tokenize_col
 from quicker_spark.io import atomic_write_json
-from quicker_spark.operators.build import IndexConfig
+from quicker_spark.operators.build import IndexConfig, bucket_cluster
 
 POSITIONS_STRUCT = T.StructType([
     T.StructField("df", T.LongType()),
@@ -64,77 +51,6 @@ POSITIONS_STRUCT = T.StructType([
 # default: positions only for the free-text field — repo/path/lang are
 # identifier-like fields where phrase adjacency is meaningless
 DEFAULT_POSITION_FIELDS = ("content",)
-
-
-def _encode_positions_udf():
-    @F.pandas_udf(POSITIONS_STRUCT)
-    def enc(a_ids, a_dls, a_bits, a_tfs, a_pos):
-        import pandas as pd
-        rows = encode_positions_batch(a_ids, a_dls, a_bits, a_tfs, a_pos)
-        return pd.DataFrame(
-            rows, columns=["df", "ids", "tfs", "dls", "bits", "pos"])
-    return enc
-
-
-def wave_positions(docs_wave: DataFrame, cfg: IndexConfig,
-                   fields=DEFAULT_POSITION_FIELDS) -> DataFrame:
-    """Positional posting rows for one wave of docs segments.
-
-    Positions are the token's ordinal in ITS FIELD's token array (the
-    tokenizer spec shared with the oracle: maximal ``[a-z0-9_]`` runs on
-    lowered text), so adjacency never crosses a field boundary. One
-    pipeline per field, unioned — terms are field-namespaced
-    (``field\\x01token``) exactly like the main postings."""
-    parts = []
-    for f_name in fields:
-        toks = docs_wave.select(
-            "segment_id", "doc_id", F.col("doc_len").alias("dl"),
-            F.col("bits_feature").alias("bitsf"),
-            F.posexplode(
-                tokenize_col(F.coalesce(F.col(f_name), F.lit("")))
-            ).alias("p", "t"),
-        ).withColumn("term", F.concat(F.lit(f_name + "\x01"), F.col("t")))
-        parts.append(toks.select("segment_id", "term", "doc_id", "dl",
-                                 "bitsf", "p"))
-    toks = parts[0]
-    for extra in parts[1:]:
-        toks = toks.unionByName(extra)
-
-    perdoc = toks.groupBy("segment_id", "term", "doc_id", "dl", "bitsf").agg(
-        F.sort_array(F.collect_list("p")).alias("ps"))
-    entry = F.struct("doc_id", "dl", "bitsf", "ps")
-    n_salts = cfg.effective_salts()
-    if n_salts > 1:
-        # salted two-phase merge — a hot term's per-reducer state is
-        # bounded by seg_docs/n_salts docs (same law as wave_postings,
-        # and positions payloads are HEAVIER than postings entries, so
-        # the bound matters sooner here)
-        partial = (
-            perdoc.withColumn("salt", F.pmod(F.col("doc_id"),
-                                             F.lit(n_salts)))
-            .groupBy("segment_id", "term", "salt")
-            .agg(F.collect_list(entry).alias("plist"))
-        )
-        merged = partial.groupBy("segment_id", "term").agg(
-            F.flatten(F.collect_list("plist")).alias("plist"))
-    else:
-        merged = perdoc.groupBy("segment_id", "term").agg(
-            F.collect_list(entry).alias("plist"))
-    # flatten JVM-side: parallel doc-order arrays + ONE flat position
-    # stream per row — the Arrow encoder never sees nested lists
-    cols = merged.select(
-        "segment_id", "term",
-        F.transform("plist", lambda x: x["doc_id"]).alias("a_ids"),
-        F.transform("plist", lambda x: x["dl"]).alias("a_dls"),
-        F.transform("plist", lambda x: x["bitsf"]).alias("a_bits"),
-        F.transform("plist", lambda x: F.size(x["ps"])).alias("a_tfs"),
-        F.flatten(F.transform("plist", lambda x: x["ps"])).alias("a_pos"),
-    )
-    enc = _encode_positions_udf()
-    return cols.select(
-        "segment_id", "term",
-        enc("a_ids", "a_dls", "a_bits", "a_tfs", "a_pos").alias("e"),
-    ).select("segment_id", "term", "e.*")
 
 
 # packed-partial rows for the single-exchange positions wave: one row per
@@ -158,8 +74,8 @@ POS_PARTIAL_SCHEMA = T.StructType([
     T.StructField("pos_raw", T.BinaryType()),
 ])
 
-# identical columns (names, types, order) to the twophase path's written
-# files, so readers cannot tell the modes apart
+# the written sidecar columns, before bucket_cluster adds the bucket
+# partition column
 POS_WAVE_OUT_SCHEMA = T.StructType(
     [T.StructField("segment_id", T.LongType()),
      T.StructField("term", T.StringType())]
@@ -376,13 +292,11 @@ def _make_pos_merge_encode_iter():
 def wave_positions_packed(docs_wave: DataFrame, cfg: IndexConfig,
                           n_buckets: int,
                           fields=DEFAULT_POSITION_FIELDS) -> DataFrame:
-    """Single-exchange positional build for one wave
-    (cfg.wave_mode='packed'): map-side packed occurrence partials -> ONE
-    hash exchange on (segment, term-bucket) -> spillable in-partition
-    sort -> streaming merge+encode, pre-clustered and term-sorted for the
-    partitioned write. Deletes the per-token-occurrence shuffle row, the
-    JVM collect_list of position structs, and the second full exchange of
-    the encoded sidecar."""
+    """Single-exchange positional build for one wave: map-side packed
+    occurrence partials -> ONE hash exchange on (segment, term-hash
+    bucket) -> spillable in-partition sort -> streaming merge+encode,
+    term-sorted per (segment, term) group. No per-token-occurrence
+    shuffle row and no JVM collect_list of position structs."""
     pack = _make_pos_pack_iter(tuple(fields))
     partial = docs_wave.select(
         "segment_id", "doc_id", "doc_len", "bits_feature",
@@ -402,10 +316,11 @@ def write_positions_wave(spark: SparkSession, docs_df: DataFrame,
                          wkey: int | None = None,
                          rebuild_segs: list[int] | None = None) -> None:
     """Build + write one wave of positional postings
-    (``positions/wave=K/segment_id=S``). Same granularity contract as
-    build.write_wave: ``rebuild_segs=None`` is the idempotent full-wave
-    overwrite; a seg list is the maintenance-granular rewrite (affected
-    segment dirs removed first so emptied segments can't resurrect)."""
+    (``positions/wave=K/segment_id=S/bucket=B``). Same granularity
+    contract as build.write_wave: ``rebuild_segs=None`` is the idempotent
+    full-wave overwrite; a seg list is the maintenance-granular rewrite
+    (affected segment dirs removed first so emptied segments can't
+    resurrect)."""
     wkey = min(wave) if wkey is None else wkey
     segs = sorted(int(s) for s in (rebuild_segs if rebuild_segs is not None
                                    else wave))
@@ -414,33 +329,16 @@ def write_positions_wave(spark: SparkSession, docs_df: DataFrame,
     docs_wave = docs_df.filter(
         (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         & F.col("segment_id").isin(segs))
-    # same occupancy-targeted salt law as build.write_wave: ~3 keys per
-    # shuffle partition so the clustered write never under-fills slots
+    # exchange width for the merge: ~3 keys per shuffle partition so the
+    # stage never under-fills slots when a wave holds few segments
     par = spark.sparkContext.defaultParallelism
     sp = int(spark.conf.get("spark.sql.shuffle.partitions", str(par)))
-    n_salt = max(1, -(-3 * max(par, sp) // max(1, len(segs))))
-    if cfg.wave_mode == "packed":
-        rows = wave_positions_packed(docs_wave, cfg, n_salt, fields)
-    else:
-        rows = wave_positions(docs_wave, cfg, fields)
-    if cfg.term_buckets > 1:
-        # same bucket-partitioned layout as the main postings tree, so
-        # phrase serving gets the same partition-pruned term scan
-        from quicker_spark.operators.build import bucket_cluster
-        writer = (bucket_cluster(rows, cfg.term_buckets)
-                  .write.mode("overwrite")
-                  .partitionBy("segment_id", "bucket"))
-    elif cfg.wave_mode == "packed":
-        # legacy v4: merge output is clustered and term-sorted, but the
-        # planner can't see a mapInPandas ordering — make the partition
-        # prefix explicit or the writer inserts its own unstable sort
-        writer = (rows.sortWithinPartitions("segment_id", "term")
-                  .write.mode("overwrite").partitionBy("segment_id"))
-    else:
-        writer = (rows.repartition(F.col("segment_id"),
-                                   F.pmod(F.xxhash64("term"), F.lit(n_salt)))
-                  .sortWithinPartitions("segment_id", "term")
-                  .write.mode("overwrite").partitionBy("segment_id"))
+    n_hash = max(1, -(-3 * max(par, sp) // max(1, len(segs))))
+    rows = wave_positions_packed(docs_wave, cfg, n_hash, fields)
+    # same bucket-partitioned layout as the main postings tree, so phrase
+    # serving gets the same partition-pruned term scan
+    writer = (bucket_cluster(rows, cfg.term_buckets)
+              .write.mode("overwrite").partitionBy("segment_id", "bucket"))
     if rebuild_segs is None:
         writer.parquet(wave_dir)
     else:

@@ -83,17 +83,22 @@ class Oracle:
         self.postings: dict[str, dict[int, int]] = {}
         self.doc_len: dict[int, int] = {}
         for doc_id, (_sha, r) in enumerate(keyed):
-            toks = tokenize_py(r["content"])
+            # the engine's NULL-field contract: a NULL field indexes as
+            # '', and a NULL or empty lang emits no lang term
+            text = {f: "" if pd.isna(r[f]) else r[f]
+                    for f in ("content", "repo", "path", "lang")}
+            toks = tokenize_py(text["content"])
             fields = {
                 "content": toks,
-                "repo": tokenize_py(r["repo"]),
-                "path": tokenize_py(r["path"]),
-                "lang": [r["lang"]],
+                "repo": tokenize_py(text["repo"]),
+                "path": tokenize_py(text["path"]),
+                "lang": [text["lang"]] if text["lang"] else [],
             }
             self.docs[doc_id] = {
                 "id": business_id(r["repo"], r["path"], r["commit"]),
-                "bits": LANG_BITS.get(r["lang"], 0),
-                "content_sha": hashlib.sha256(r["content"].encode()).hexdigest(),
+                "bits": LANG_BITS.get(text["lang"], 0),
+                "content_sha": hashlib.sha256(
+                    text["content"].encode()).hexdigest(),
                 **{k: r[k] for k in ("repo", "path", "commit", "lang")},
             }
             self.doc_len[doc_id] = len(toks)

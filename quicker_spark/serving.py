@@ -62,6 +62,7 @@ from quicker_spark.engine import (
     resolve_search_spec,
 )
 from quicker_spark.functions.buckets import term_bucket
+from quicker_spark.operators.build import IndexConfig
 from quicker_spark.plans.term_query import TermQuery
 
 
@@ -90,14 +91,13 @@ class LocalSearcher:
         with open(self._stats_path) as fh:
             self.stats = json.load(fh)
         self._stats_mtime = os.path.getmtime(self._stats_path)
+        # refuses an index without the term-bucketed layout
+        self._n_buckets = IndexConfig.from_stats(self.stats).term_buckets
         self._post_ds = pads.dataset(
             os.path.join(index_dir, "postings"), partitioning="hive")
         self._ts_ds = pads.dataset(os.path.join(index_dir, "term_stats"))
         self._docs_ds = pads.dataset(
             os.path.join(index_dir, "docs"), partitioning="hive")
-        self._n_buckets = int(self.stats.get("term_buckets") or 0)
-        self._has_bucket = ("bucket" in self._post_ds.schema.names
-                            and self._n_buckets > 1)
         self.max_terms = int(max_terms)
         self._block_size = int(self.stats["block_size"])
         # resident state, LRU over terms: term -> (df_global,
@@ -147,16 +147,13 @@ class LocalSearcher:
                     cache.popitem(last=False)
         return snap
 
-    def _pruned_filter(self, ds, missing: list[str]):
+    def _pruned_filter(self, missing: list[str]):
         """term IN missing, plus the bucket-directory pruning the Spark
-        plan gets from _bucket_filter (v5 layout)."""
+        plan gets from _bucket_filter."""
         import pyarrow.compute as pc
 
-        filt = pc.field("term").isin(missing)
-        if self._has_bucket and "bucket" in ds.schema.names:
-            bks = sorted({term_bucket(t, self._n_buckets) for t in missing})
-            filt = pc.field("bucket").isin(bks) & filt
-        return filt
+        bks = sorted({term_bucket(t, self._n_buckets) for t in missing})
+        return pc.field("bucket").isin(bks) & pc.field("term").isin(missing)
 
     def _ensure_terms(self, terms: set[str]) -> dict[str, tuple]:
         """{term: resident entry} for ``terms``; absent terms negative-
@@ -167,7 +164,7 @@ class LocalSearcher:
         import pyarrow.compute as pc
 
         rows = self._post_ds.to_table(
-            filter=self._pruned_filter(self._post_ds, missing))
+            filter=self._pruned_filter(missing))
         ts = self._ts_ds.to_table(
             filter=pc.field("term").isin(missing),
             columns=["term", "df_global"]).to_pydict()
@@ -235,7 +232,7 @@ class LocalSearcher:
 
         fresh: dict[str, dict] = {t: {} for t in missing}
         for r in self._pos_ds.to_table(
-                filter=self._pruned_filter(self._pos_ds, missing)
+                filter=self._pruned_filter(missing)
         ).to_pylist():
             fresh[r["term"]][int(r["segment_id"])] = decode_positions_row(
                 r["ids"], r["tfs"], r["dls"], r["bits"], r["pos"])

@@ -84,10 +84,10 @@ def _stage_cfg(staging: str, cfg: IndexConfig) -> None:
     path = os.path.join(staging, "_ingest_cfg.json")
     if not os.path.exists(path):
         atomic_write_json(path, {
-            "seg_docs": cfg.seg_docs, "n_salts": cfg.effective_salts(),
-            "block_size": cfg.block_size, "k1": cfg.k1, "b": cfg.b,
-            "wave_segments": cfg.wave_segments, "fields": list(cfg.fields),
-            "id_col": cfg.id_col, "tf_mode": cfg.tf_mode,
+            "seg_docs": cfg.seg_docs, "block_size": cfg.block_size,
+            "k1": cfg.k1, "b": cfg.b, "wave_segments": cfg.wave_segments,
+            "fields": list(cfg.fields), "id_col": cfg.id_col,
+            "term_buckets": cfg.term_buckets,
         })
 
 

@@ -6,7 +6,7 @@ Ship the package as a zip and submit:
     spark-submit --py-files dist/quicker_spark.zip \
         scripts/build_index_cli.py \
         --corpus /data/corpus_parquet --out /data/index \
-        --seg-docs 100000 --salts 16
+        --seg-docs 100000
 
 On a cluster the same command runs unchanged (master from spark-submit);
 locally pass --master local[32]. `--corpus fixtures:N` generates the
@@ -30,7 +30,6 @@ def main() -> None:
                          "or fixtures:N for the synthetic corpus")
     ap.add_argument("--out", required=True, help="index output directory")
     ap.add_argument("--seg-docs", type=int, default=100_000)
-    ap.add_argument("--salts", type=int, default=16)
     ap.add_argument("--wave-segments", type=int, default=64)
     ap.add_argument("--fields", type=str, default="content,repo,path,lang")
     ap.add_argument("--id-col", type=str, default=None)
@@ -54,8 +53,7 @@ def main() -> None:
         corpus = read_corpus(spark, args.corpus)
 
     cfg = IndexConfig(
-        seg_docs=args.seg_docs, n_salts=args.salts,
-        wave_segments=args.wave_segments,
+        seg_docs=args.seg_docs, wave_segments=args.wave_segments,
         fields=tuple(args.fields.split(",")), id_col=args.id_col,
     )
     report = build_index(spark, corpus, args.out, cfg,

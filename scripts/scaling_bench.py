@@ -72,10 +72,7 @@ def run_single(cores: int, n_docs: int, reps: int = 1) -> dict:
     shutil.rmtree(warm_dir, ignore_errors=True)
     build_index(spark, corpus_df(spark, max(n_docs // 20, 1000),
                                  partitions=cores * 2),
-                warm_dir, IndexConfig(seg_docs=200_000,
-                                         wave_mode=os.environ.get(
-                                             "QS_WAVE_MODE", "packed")),
-                             resume=False)
+                warm_dir, IndexConfig(seg_docs=200_000), resume=False)
     shutil.rmtree(warm_dir, ignore_errors=True)
 
     # Materialize the synthetic corpus to parquet ONCE, untimed: the
@@ -111,10 +108,7 @@ def run_single(cores: int, n_docs: int, reps: int = 1) -> dict:
         spark.catalog.clearCache()  # no cross-rep reuse of the rank cache
         t0 = time.time()
         report = build_index(spark, corpus, out_dir,
-                             IndexConfig(seg_docs=200_000,
-                                         wave_mode=os.environ.get(
-                                             "QS_WAVE_MODE", "packed")),
-                             resume=False)
+                             IndexConfig(seg_docs=200_000), resume=False)
         rep_secs.append(time.time() - t0)
     build_s = min(rep_secs)
 

@@ -97,7 +97,7 @@ def main() -> None:
     thr.start()
     t0 = time.time()
     report = build_index(spark, corpus, out_dir,
-                         IndexConfig(seg_docs=200_000, wave_mode="packed"),
+                         IndexConfig(seg_docs=200_000),
                          resume=False)
     build_s = time.time() - t0
     stop.set()

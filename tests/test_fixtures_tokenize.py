@@ -1,8 +1,13 @@
 import numpy as np
 import pytest
 
-from quicker_spark.fixtures import corpus_df, corpus_pdf, generate_batch
-from quicker_spark.functions.tokenize import tokenize_col, tokenize_py, tokenize_udf
+from quicker_spark.fixtures import (
+    corpus_df,
+    corpus_pdf,
+    edge_corpus_pdf,
+    generate_batch,
+)
+from quicker_spark.functions.tokenize import tokenize_col, tokenize_py
 
 
 def test_corpus_deterministic_and_batch_independent():
@@ -56,66 +61,59 @@ def test_tokenize_py_spec():
     assert tokenize_py(None) == []
 
 
-@pytest.mark.usefixtures("spark")
 def test_tokenizers_agree(spark):
+    """doc_len comes from the Catalyst tokenize_col, term frequencies from
+    the pandas findall in batch_doc_term_tfs; both must equal tokenize_py
+    on every row of a corpus plus the edge strings (empty, whitespace,
+    unicode, mixed case, NULL)."""
+    from collections import Counter
+
+    import pandas as pd
     from pyspark.sql import functions as F
 
-    df = corpus_df(spark, 40, partitions=2).select("content")
-    both = df.select(
-        tokenize_col(F.col("content")).alias("a"),
-        tokenize_udf(F.col("content")).alias("b"),
-    )
-    mismatch = both.filter(F.col("a") != F.col("b")).count()
-    assert mismatch == 0
-    # and agree with the python tokenizer
-    rows = both.select("a").limit(5).collect()
-    texts = df.limit(5).collect()
-    for r, t in zip(rows, texts):
-        assert r["a"] == tokenize_py(t["content"])
+    from quicker_spark.functions.tokenize import TOKEN_RE, batch_doc_term_tfs
+
+    texts = (corpus_pdf(40)["content"].tolist()
+             + edge_corpus_pdf()["content"].tolist()
+             + ["İstanbul ǅemal ﬁle ＡＢＣ x１ \u212aelvin"])
+    assert None in texts
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, content string")
+    catalyst = {r["i"]: r["a"] for r in df.select(
+        "i", tokenize_col(F.coalesce(F.col("content"), F.lit("")))
+        .alias("a")).collect()}
+    col = pd.Series(texts, dtype=object)
+    found = col.fillna("").str.lower().str.findall(TOKEN_RE)
+    didx, terms, tfs = batch_doc_term_tfs(("content",), [col])
+    counted = {i: Counter() for i in range(len(texts))}
+    for d, t, n in zip(didx, terms, tfs):
+        counted[int(d)][t.split("\x01", 1)[1]] = int(n)
+    for i, text in enumerate(texts):
+        want = tokenize_py(text)
+        assert catalyst[i] == want, text
+        assert found[i] == want, text
+        assert counted[i] == Counter(want), text
 
 
-def test_tf_modes_agree_on_edge_corpus(spark, tmp_path):
-    """arrow_pairs and pure-Catalyst explode tf modes build identical
-    postings, including empty / whitespace / unicode / null-ish content."""
-    import shutil
-
-    from quicker_spark.engine import SearchEngine
+def test_edge_corpus_postings_match_oracle(spark, tmp_path,
+                                           postings_match_oracle):
+    """One build of the edge corpus (empty / whitespace / unicode / NULL
+    content, NULL and empty lang) decodes to exactly the Oracle's
+    postings."""
     from quicker_spark.operators.build import IndexConfig, build_index
+    from quicker_spark.oracle import Oracle
 
-    rows = [
-        ("r1", "a.py", "c1", "python", "def foo(): return 1"),
-        ("r2", "b.py", "c2", "go", ""),
-        ("r3", "c.py", "c3", "java", "   \t  "),
-        ("r4", "d.py", "c4", "js", "héllo wörld déf naïve"),
-        ("r5", "e.py", "c5", "rust", "DEF Def def dEf"),
-        ("r6", "f.py", "c6", "c", "x1_y2 x1_y2 x1_y2 z"),
-        # NULL-bearing rows: a NULL in one indexed field must not drop the
-        # doc's other terms, and a NULL/empty lang must emit no lang term
-        ("r7", "g.py", "c7", None, "null lang still indexed"),
-        ("r8", "h.py", "c8", "", "empty lang still indexed"),
-        ("r9", "i.py", "c9", "python", None),
-    ]
+    pdf = edge_corpus_pdf()
     corpus = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string")
-
-    def postings_of(mode):
-        out = str(tmp_path / f"idx_{mode}")
-        shutil.rmtree(out, ignore_errors=True)
-        build_index(spark, corpus, out,
-                    IndexConfig(seg_docs=10, tf_mode=mode, n_salts=2),
-                    resume=False)
-        eng = SearchEngine(spark, out)
-        rows_ = eng.postings.select("segment_id", "term", "df", "ids", "tfs",
-                                    "dls", "bits").collect()
-        return sorted((r["segment_id"], r["term"], r["df"], bytes(r["ids"]),
-                       bytes(r["tfs"]), bytes(r["dls"]), bytes(r["bits"]))
-                      for r in rows_)
-
-    p_arrow = postings_of("arrow_pairs")
-    terms = {t for (_s, t, *_rest) in p_arrow}
+        pdf, "repo string, path string, commit string, lang string, "
+             "content string")
+    out = str(tmp_path / "idx")
+    build_index(spark, corpus, out, IndexConfig(seg_docs=4), resume=False)
+    assert postings_match_oracle(out, Oracle(pdf)) > 10
+    terms = {r["term"] for r in
+             spark.read.parquet(out + "/postings").select("term").collect()}
     # NULL lang didn't kill the doc's content terms, and no empty lang term
     assert "content\x01indexed" in terms
     assert "lang\x01" not in terms
     # NULL content doc still indexes its repo/path fields
     assert "repo\x01r9" in terms
-    assert p_arrow == postings_of("explode")

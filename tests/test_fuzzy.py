@@ -11,7 +11,7 @@ from quicker_spark.oracle import Oracle
 from quicker_spark.plans.term_query import NewTermQuery, Or
 
 N_DOCS = 300
-CFG = IndexConfig(seg_docs=80, n_salts=2, wave_segments=2, block_size=32)
+CFG = IndexConfig(seg_docs=80, wave_segments=2, block_size=32)
 
 
 @pytest.fixture(scope="module")

@@ -18,7 +18,7 @@ from quicker_spark.oracle import Oracle
 from quicker_spark.plans.term_query import And, NewTermQuery, Or
 
 N_DOCS = 400
-CFG = IndexConfig(seg_docs=90, n_salts=4, wave_segments=2, block_size=32)
+CFG = IndexConfig(seg_docs=90, wave_segments=2, block_size=32)
 
 
 @pytest.fixture(scope="module")
@@ -144,7 +144,7 @@ def test_hydration_returns_business_payload(engine, oracle):
 def test_resume_skips_finished_waves(spark, tmp_path):
     out = str(tmp_path / "idx")
     corpus = corpus_df(spark, 200, partitions=4)
-    cfg = IndexConfig(seg_docs=50, n_salts=4, wave_segments=1, block_size=32)
+    cfg = IndexConfig(seg_docs=50, wave_segments=1, block_size=32)
     # killed build: only 2 of 4 waves complete
     r1 = build_index(spark, corpus, out, cfg, max_waves=2)
     assert r1.waves_run == 2
@@ -198,7 +198,7 @@ def test_build_releases_id_cache(spark, tmp_path):
         out = str(tmp_path / f"leak{i}")
         shutil.rmtree(out, ignore_errors=True)
         build_index(spark, corpus_df(spark, 80, partitions=3), out,
-                    IndexConfig(seg_docs=50, n_salts=2), resume=False)
+                    IndexConfig(seg_docs=50), resume=False)
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after <= before, f"leaked {after - before} persisted RDDs"
 

@@ -4,8 +4,8 @@ The local path must be rank- AND score-identical to the Spark path on
 the same index bytes — it reuses `resolve_search_spec` and
 `_score_segment_rows`, so any drift is a wiring bug. Bitwise equality
 is asserted across modes, flags, boosts, paging cursors, excludes, and
-quorums, on both the v5 bucket-partitioned layout and the legacy
-unbucketed one.
+quorums, on the bucket-partitioned layout; an index without it is
+refused by both tiers.
 """
 
 from __future__ import annotations
@@ -240,14 +240,30 @@ def test_lookup_and_hydrate(eng, ls):
     assert hyd["content"].notna().all()
 
 
-def test_legacy_unbucketed_layout(spark, eng, tmp_path):
+def test_legacy_unbucketed_layout(spark, idx, tmp_path):
+    """The unbucketed (pre-v5) layout is gone: a config without term
+    buckets is rejected, and both readers refuse an index whose
+    stats.json lacks ``term_buckets >= 2`` with the same error."""
+    import json
+
+    for nb in (0, 1):
+        with pytest.raises(ValueError, match="term_buckets"):
+            IndexConfig(seg_docs=100, term_buckets=nb)
     out = str(tmp_path / "idx_v4")
-    build_index(spark, spark.createDataFrame(corpus_pdf(300)), out,
-                IndexConfig(seg_docs=100, term_buckets=0), resume=False)
-    ls4 = LocalSearcher(out)
-    assert not ls4._has_bucket
-    q = Or(_t("def"), _t("return"))
-    _assert_same(eng.search(q, k=7), ls4.search(q, k=7))
+    shutil.copytree(idx, out)
+    with open(out + "/stats.json") as fh:
+        stats = json.load(fh)
+    for legacy in ({k: v for k, v in stats.items() if k != "term_buckets"},
+                   {**stats, "term_buckets": 0}):
+        with open(out + "/stats.json", "w") as fh:
+            json.dump(legacy, fh)
+        errors = []
+        for open_index in (lambda: SearchEngine(spark, out),
+                           lambda: LocalSearcher(out)):
+            with pytest.raises(ValueError, match="rebuild this index") as e:
+                open_index()
+            errors.append(str(e.value))
+        assert errors[0] == errors[1]
 
 
 def test_stale_after_maintenance(spark, tmp_path):

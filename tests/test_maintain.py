@@ -23,7 +23,7 @@ from quicker_spark.oracle import Oracle
 from quicker_spark.plans.term_query import And, NewTermQuery, Or
 
 N_DOCS = 300
-CFG = IndexConfig(seg_docs=100, wave_segments=2, n_salts=4)
+CFG = IndexConfig(seg_docs=100, wave_segments=2)
 
 QUERIES = [
     Or(NewTermQuery("content", "def"), NewTermQuery("content", "return")),

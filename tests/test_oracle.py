@@ -5,9 +5,10 @@ internal/reverse_index/test/skiplist_reverse_index_test.go:13-37, and
 boolean/bit-filter scenarios mirroring index_service/test/indexer_test.go.
 """
 
+import hashlib
 import math
 
-from quicker_spark.fixtures import corpus_pdf
+from quicker_spark.fixtures import corpus_pdf, edge_corpus_pdf
 from quicker_spark.model import LANG_BITS, bm25_idf, bm25_term_score, filter_by_bits
 from quicker_spark.oracle import Oracle, intersect_sorted, union_sorted
 from quicker_spark.plans.term_query import And, NewTermQuery, Or
@@ -69,6 +70,26 @@ def test_oracle_bit_filter_restricts_lang():
     off = o.eval_bool(q, off=LANG_BITS["python"])
     assert set(off).isdisjoint(py)
     assert sorted(set(py) | set(off)) == o.eval_bool(q)
+
+    # edge corpus: the engine's NULL-field contract — a NULL or empty lang
+    # emits no lang term and sets no lang bit; NULL content indexes as ''
+    e = Oracle(edge_corpus_pdf())
+    assert {t for t in e.postings if t.startswith("lang\x01")} == {
+        "lang\x01" + lang for lang in ("python", "go", "java", "js", "rust",
+                                        "c")}
+    no_lang = [d for d, doc in e.docs.items() if not doc["lang"]]
+    assert len(no_lang) == 2
+    assert all(e.docs[d]["bits"] == 0 for d in no_lang)
+    assert all(e.doc_len[d] == 4 for d in no_lang)
+    py = e.eval_bool(NewTermQuery("lang", "python"))
+    assert len(py) == 2
+    assert e.eval_bool(NewTermQuery("content", "indexed"),
+                       off=LANG_BITS["python"]) == no_lang
+    (null_content,) = [d for d, doc in e.docs.items() if doc["repo"] == "r9"]
+    assert e.doc_len[null_content] == 0
+    assert e.docs[null_content]["content_sha"] == hashlib.sha256(
+        b"").hexdigest()
+    assert null_content in e.eval_bool(NewTermQuery("repo", "r9"))
 
 
 def test_oracle_topk_scores_sane():

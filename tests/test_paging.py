@@ -22,7 +22,7 @@ from quicker_spark.operators.build import IndexConfig, build_index
 from quicker_spark.plans.term_query import And, NewTermQuery, Or
 
 N_DOCS = 300
-CFG = IndexConfig(seg_docs=80, n_salts=2, wave_segments=2, block_size=32)
+CFG = IndexConfig(seg_docs=80, wave_segments=2, block_size=32)
 
 
 @pytest.fixture(scope="module")

@@ -21,7 +21,7 @@ from quicker_spark.operators.positions import build_positions
 from quicker_spark.plans.term_query import And, NewTermQuery
 
 N_DOCS = 300
-CFG = IndexConfig(seg_docs=70, n_salts=2, wave_segments=2, block_size=32)
+CFG = IndexConfig(seg_docs=70, wave_segments=2, block_size=32)
 
 
 @pytest.fixture(scope="module")

@@ -26,7 +26,7 @@ def dirs(tmp_path):
 def _drain(spark, dirs):
     src = spark.readStream.schema(SCHEMA).parquet(dirs["src"])
     q = stream_ingest(spark, src, dirs["idx"], dirs["ckpt"],
-                      IndexConfig(seg_docs=200, n_salts=4))
+                      IndexConfig(seg_docs=200))
     q.awaitTermination(240)
     assert not q.isActive
 
@@ -84,7 +84,7 @@ def test_stream_compaction_cadence(spark, dirs):
 
     src = (spark.readStream.schema(SCHEMA)
            .option("maxFilesPerTrigger", 1).parquet(dirs["src"]))
-    cfg = IndexConfig(seg_docs=200, n_salts=4)
+    cfg = IndexConfig(seg_docs=200)
     q = stream_ingest(spark, src, dirs["idx"], dirs["ckpt"], cfg,
                       compact_every=2)
     q.awaitTermination(240)
@@ -114,6 +114,34 @@ def test_stream_compaction_cadence(spark, dirs):
     hits = SearchEngine(spark, dirs["idx"]).search(
         NewTermQuery("content", "compactedzebra"), k=5).collect()
     assert len(hits) == 1
+
+
+def test_flush_recovers_staged_geometry(spark, dirs):
+    """A flush with no cfg (e.g. after a crash) bootstraps from the staged
+    generation's persisted config — including its term-bucketed layout,
+    never the unbucketed one."""
+    import glob
+    import json
+
+    from quicker_spark.streaming.ingest import flush_ingest
+
+    for b in (corpus_pdf(40), corpus_pdf(30, start=1000)):
+        spark.createDataFrame(b).coalesce(1).write.mode(
+            "append").parquet(dirs["src"])
+    src = (spark.readStream.schema(SCHEMA)
+           .option("maxFilesPerTrigger", 1).parquet(dirs["src"]))
+    q = stream_ingest(spark, src, dirs["idx"], dirs["ckpt"],
+                      IndexConfig(seg_docs=50), compact_every=5)
+    q.awaitTermination(240)
+    assert not q.isActive
+    assert not os.path.exists(dirs["idx"] + "/stats.json")  # only staged
+    assert flush_ingest(spark, dirs["idx"]) is True
+    with open(dirs["idx"] + "/stats.json") as fh:
+        stats = json.load(fh)
+    assert stats["term_buckets"] == 32
+    assert stats["seg_docs"] == 50
+    assert glob.glob(dirs["idx"] + "/postings/wave=*/segment_id=*/bucket=*")
+    assert SearchEngine(spark, dirs["idx"]).count() == 70
 
 
 def test_io_seam(spark, tmp_path):
@@ -200,7 +228,7 @@ def test_compact_ignores_orphan_batches(spark, dirs):
     with open(os.path.join(staging, "_staged_batches.json"), "w") as fh:
         json.dump([1], fh)
     assert flush_ingest(spark, dirs["idx"],
-                        IndexConfig(seg_docs=200, n_salts=4)) is True
+                        IndexConfig(seg_docs=200)) is True
     # only the owned batch was applied
     assert SearchEngine(spark, dirs["idx"]).count() == 30
 

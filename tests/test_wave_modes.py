@@ -1,44 +1,31 @@
-"""The packed single-exchange wave (cfg.wave_mode='packed') must write
-bit-identical postings files to the twophase reference path — same terms,
-same encoded byte streams, same block metadata — on a corpus that spans
-multiple segments, waves, salts, and NULL-bearing fields. The encoder's
-per-run doc_id lexsort is what makes both modes order-independent."""
+"""The packed single-exchange wave must write exactly the Oracle's
+postings and positions — every (segment, term) run decoded back to its
+doc ids, tfs, doc lengths, bits (and token ordinals for the sidecar) — on
+a corpus that spans multiple segments, waves, input partitions and
+NULL-bearing fields; and every file it writes must be term-sorted."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from quicker_spark.fixtures import corpus_df
+from quicker_spark.functions.phrase import decode_positions_row
+from quicker_spark.functions.tokenize import tokenize_py
+from quicker_spark.model import term_key
 from quicker_spark.operators.build import IndexConfig, build_index
+from quicker_spark.oracle import Oracle
+
+CFG = IndexConfig(seg_docs=80, wave_segments=2, block_size=16)
 
 
-def _postings_key(spark, out):
-    df = spark.read.parquet(out + "/postings")
-    rows = df.select(
-        "segment_id", "term", "df",
-        F.md5(F.col("ids")).alias("h_ids"), F.md5(F.col("tfs")).alias("h_tfs"),
-        F.md5(F.col("dls")).alias("h_dls"), F.md5(F.col("bits")).alias("h_bits"),
-        F.col("block_last").cast("string").alias("bl"),
-        F.col("block_max_u_ref").cast("string").alias("bu"),
-        F.col("off_ids").cast("string").alias("oi"),
-    ).collect()
-    return sorted(tuple(r) for r in rows)
-
-
-@pytest.mark.parametrize("n_salts", [1, 4])
-def test_packed_wave_bit_identical(spark, tmp_path, n_salts):
+def test_packed_wave_matches_oracle(spark, tmp_path, postings_match_oracle):
     # inject NULL langs to exercise the fillna/no-term contract
     corpus = corpus_df(spark, 350, partitions=5).withColumn(
         "lang", F.when(F.crc32("path") % 7 == 0, F.lit(None))
         .otherwise(F.col("lang")))
-    outs = {}
-    for mode in ("twophase", "packed"):
-        out = str(tmp_path / mode / f"s{n_salts}")
-        cfg = IndexConfig(seg_docs=80, n_salts=n_salts, wave_segments=2,
-                          block_size=16, wave_mode=mode)
-        build_index(spark, corpus, out, cfg)
-        outs[mode] = _postings_key(spark, out)
-    assert outs["twophase"] == outs["packed"]
-    assert len(outs["packed"]) > 100
+    pdf = corpus.toPandas()
+    assert pdf["lang"].isna().any()
+    out = str(tmp_path / "idx")
+    build_index(spark, corpus, out, CFG)
+    assert postings_match_oracle(out, Oracle(pdf)) > 100
 
 
 def test_packed_wave_files_term_sorted(spark, tmp_path):
@@ -50,8 +37,7 @@ def test_packed_wave_files_term_sorted(spark, tmp_path):
 
     out = str(tmp_path / "sorted")
     build_index(spark, corpus_df(spark, 300, partitions=4), out,
-                IndexConfig(seg_docs=100, wave_segments=4, block_size=16,
-                            wave_mode="packed"))
+                IndexConfig(seg_docs=100, wave_segments=4, block_size=16))
     files = glob.glob(
         out + "/postings/wave=*/segment_id=*/bucket=*/*.parquet")
     assert files
@@ -60,37 +46,47 @@ def test_packed_wave_files_term_sorted(spark, tmp_path):
         assert terms == sorted(terms), f
 
 
-def _positions_key(spark, out):
-    df = spark.read.parquet(out + "/positions")
-    rows = df.select(
-        "segment_id", "term", "df",
-        F.md5(F.col("ids")).alias("h_ids"), F.md5(F.col("tfs")).alias("h_tfs"),
-        F.md5(F.col("dls")).alias("h_dls"), F.md5(F.col("bits")).alias("h_bits"),
-        F.md5(F.col("pos")).alias("h_pos"),
-    ).collect()
-    return sorted(tuple(r) for r in rows)
-
-
-@pytest.mark.parametrize("n_salts", [1, 4])
-def test_packed_positions_bit_identical(spark, tmp_path, n_salts):
-    """The packed single-exchange positions wave must write bit-identical
-    sidecar files to the twophase path — including the flat position
-    stream, whose bytes depend on the encoder's doc-order gather being
-    independent of partial arrival order. Multi-field sidecar exercises
-    the field-namespace boundary (positions restart per field)."""
+def test_packed_positions_match_oracle(spark, tmp_path):
+    """The packed positions wave must store, per (segment, term), each
+    doc's token ordinals within ITS FIELD (positions restart per field of
+    a multi-field sidecar), with the doc's doc_len and bits."""
     from quicker_spark.operators.positions import build_positions
 
+    fields = ("content", "path")
     corpus = corpus_df(spark, 350, partitions=5)
-    outs = {}
-    for mode in ("twophase", "packed"):
-        out = str(tmp_path / mode / f"ps{n_salts}")
-        cfg = IndexConfig(seg_docs=80, n_salts=n_salts, wave_segments=2,
-                          block_size=16, wave_mode=mode)
-        build_index(spark, corpus, out, cfg)
-        build_positions(spark, out, fields=("content", "path"))
-        outs[mode] = _positions_key(spark, out)
-    assert outs["twophase"] == outs["packed"]
-    assert len(outs["packed"]) > 100
+    pdf = corpus.toPandas()
+    out = str(tmp_path / "idx")
+    build_index(spark, corpus, out, CFG)
+    build_positions(spark, out, fields=fields)
+
+    got = {}
+    for r in spark.read.parquet(out + "/positions").collect():
+        ids, tfs, dls, bits, pos = decode_positions_row(
+            r["ids"], r["tfs"], r["dls"], r["bits"], r["pos"])
+        assert r["df"] == len(ids)
+        got[(r["segment_id"], r["term"])] = (
+            ids.tolist(), tfs.tolist(), dls.tolist(), bits.tolist(),
+            pos.tolist())
+
+    oracle = Oracle(pdf)
+    rows = {(r["repo"], r["path"], r["commit"]): r
+            for r in pdf.to_dict("records")}
+    occ: dict[tuple, dict[int, list[int]]] = {}
+    for d, doc in oracle.docs.items():
+        row = rows[(doc["repo"], doc["path"], doc["commit"])]
+        for f in fields:
+            for p, w in enumerate(tokenize_py(row[f])):
+                key = (d // CFG.seg_docs, term_key(f, w))
+                occ.setdefault(key, {}).setdefault(d, []).append(p)
+    want = {}
+    for key, per_doc in occ.items():
+        ds = sorted(per_doc)
+        want[key] = (ds, [len(per_doc[d]) for d in ds],
+                     [oracle.doc_len[d] for d in ds],
+                     [oracle.docs[d]["bits"] for d in ds],
+                     [p for d in ds for p in per_doc[d]])
+    assert got == want
+    assert len(got) > 100
 
 
 def test_packed_positions_files_term_sorted(spark, tmp_path):
@@ -105,8 +101,7 @@ def test_packed_positions_files_term_sorted(spark, tmp_path):
 
     out = str(tmp_path / "pos_sorted")
     build_index(spark, corpus_df(spark, 300, partitions=4), out,
-                IndexConfig(seg_docs=100, wave_segments=4, block_size=16,
-                            wave_mode="packed"))
+                IndexConfig(seg_docs=100, wave_segments=4, block_size=16))
     build_positions(spark, out, fields=("content",))
     files = glob.glob(
         out + "/positions/wave=*/segment_id=*/bucket=*/*.parquet")
