@@ -23,6 +23,8 @@ stages ARE the scatter-gather (SURVEY.md §3.3).
 
 __version__ = "0.1.0"
 
+# first: every worker that unpickles an engine function installs it
+from quicker_spark import zipcache  # noqa: F401
 from quicker_spark.plans.term_query import TermQuery, And, Or, Empty, NewTermQuery
 
 __all__ = [

@@ -272,7 +272,19 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
                       demote_json, float(demote_factor))
 
 
-def _frame_postings(pdf: pd.DataFrame, block_size: int) -> dict:
+def read_df_global(ts_ds, terms) -> dict[str, int]:
+    """{term: df_global, 0 when absent} from the ``term_stats`` dataset.
+    The IN filter prunes row groups of the term-sorted files, so the
+    read is bounded by the query terms, never the vocabulary."""
+    import pyarrow.compute as pc
+    terms = sorted(set(terms))
+    ts = ts_ds.to_table(filter=pc.field("term").isin(terms),
+                        columns=["term", "df_global"]).to_pydict()
+    dfg = dict(zip(ts["term"], ts["df_global"]))
+    return {t: int(dfg.get(t, 0)) for t in terms}
+
+
+def _frame_postings(pdf: pd.DataFrame, block_size: int, dfg: dict) -> dict:
     """One segment's kernel input frame -> {term: (df_global,
     EncodedPostings)} in row order — the adapter from a Spark group to
     :func:`_score_segment_rows`. Rows are built column-wise: ``iterrows``
@@ -280,7 +292,7 @@ def _frame_postings(pdf: pd.DataFrame, block_size: int) -> dict:
     cols = list(pdf.columns)
     rows = (dict(zip(cols, vals))
             for vals in zip(*(pdf[c].to_numpy() for c in cols)))
-    return {r["term"]: (int(r["df_global"]), _row_to_encoded(r, block_size))
+    return {r["term"]: (dfg[r["term"]], _row_to_encoded(r, block_size))
             for r in rows}
 
 
@@ -386,7 +398,7 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
 def _make_topk_kernel(query_json: str, n_docs: int, avgdl: float,
                       k: int, on: int, off: int, or_flags: tuple,
                       k1: float, b: float, block_size: int, strategy: str,
-                      n_query_terms: int, boosts: tuple = (),
+                      n_query_terms: int, dfg: dict, boosts: tuple = (),
                       after: tuple | None = None,
                       exclude_json: str | None = None,
                       exclude_only: tuple = (),
@@ -394,10 +406,8 @@ def _make_topk_kernel(query_json: str, n_docs: int, avgdl: float,
                       phrases: tuple = (),
                       demote_json: str | None = None,
                       demote_factor: float = 1.0):
-    """The idf arrives as a ``df_global`` column broadcast-joined onto
-    the postings rows — no per-query driver collect of term stats (one
-    less Spark job per search; at 10^12 docs the global term-stats table
-    is executor-side data, never driver state).
+    """``dfg``: :func:`read_df_global` of the scanned terms, read on
+    the driver — the scan needs no term-stats join, nor a job for one.
 
     ``phrases``: PhraseSpec-shaped tuples. When present, the kernel
     input frame is the postings scan UNIONED with the positional
@@ -436,7 +446,7 @@ def _make_topk_kernel(query_json: str, n_docs: int, avgdl: float,
                     # here (the conj early-exit)
                     extra[p.key] = np.empty(0, dtype=np.int64)
         ids, scores = _score_segment_rows(
-            _frame_postings(pdf, block_size), query, strategy,
+            _frame_postings(pdf, block_size, dfg), query, strategy,
             n_query_terms, n_docs, avgdl, k, on, off, or_flags, k1, b,
             boosts=boost_map,
             after=after, exclude=exclude, exclude_only=excl_only,
@@ -482,12 +492,11 @@ def _make_synonym_kernel(groups: tuple, idf_groups: tuple, avgdl: float,
 
 def _make_dismax_kernel(tie: float, n_docs: int, avgdl: float, k: int,
                         on: int, off: int, or_flags: tuple,
-                        k1: float, b: float, block_size: int):
+                        k1: float, b: float, block_size: int, dfg: dict):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         dec = {r["term"]: _row_to_encoded(r, block_size).decode_all()
                for _, r in pdf.iterrows()}
-        idf = {r["term"]: bm25_idf(n_docs, int(r["df_global"]))
-               for _, r in pdf.iterrows()}
+        idf = {t: bm25_idf(n_docs, dfg[t]) for t in dec}
         ids, scores = score_segment_dismax(
             dec, idf, avgdl, k, tie, on, off, or_flags, k1, b)
         return pd.DataFrame({"doc_id": ids, "score": scores})
@@ -496,7 +505,8 @@ def _make_dismax_kernel(tie: float, n_docs: int, avgdl: float, k: int,
 
 
 def _make_batch_kernel(specs: list, n_docs: int, avgdl: float,
-                       k: int, k1: float, b: float, block_size: int):
+                       k: int, k1: float, b: float, block_size: int,
+                       dfg: dict):
     """Per-segment kernel scoring MANY queries in one pass over the
     segment's (deduplicated) posting rows. ``specs`` is a list of
     (qid, query_json, strategy, terms_tuple, n_query_terms, on, off,
@@ -516,7 +526,7 @@ def _make_batch_kernel(specs: list, n_docs: int, avgdl: float,
               xj, xonly, msm in specs]
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        postings = _frame_postings(pdf, block_size)
+        postings = _frame_postings(pdf, block_size, dfg)
         dec_cache: dict = {}
         outs = []
         for (qid, query, strat, terms, nqt, on, off, or_flags, bst,
@@ -542,10 +552,10 @@ def _make_batch_kernel(specs: list, n_docs: int, avgdl: float,
 
 def _make_phrase_kernel(phrase_terms: tuple, n_docs: int, avgdl: float,
                         k: int, on: int, off: int, or_flags: tuple,
-                        k1: float, b: float, gap: int = 0):
+                        k1: float, b: float, dfg: dict, gap: int = 0):
     """Per-segment exact-phrase scorer over the positional sidecar rows
-    (one row per phrase term present in the segment). idf arrives as the
-    broadcast-joined ``df_global`` column, same as the BM25 kernels."""
+    (one row per phrase term present in the segment); ``dfg`` as in
+    :func:`_make_topk_kernel`."""
     from quicker_spark.functions.phrase import (
         decode_positions_row,
         score_segment_phrase,
@@ -566,7 +576,7 @@ def _make_phrase_kernel(phrase_terms: tuple, n_docs: int, avgdl: float,
             decoded[r["term"]] = decode_positions_row(
                 bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
                 bytes(r["bits"]), bytes(r["pos"]))
-            idf[r["term"]] = bm25_idf(n_docs, int(r["df_global"]))
+            idf[r["term"]] = bm25_idf(n_docs, dfg[r["term"]])
         ids, scores = score_segment_phrase(
             list(phrase_terms), decoded, idf, avgdl, k, on, off,
             or_flags, k1, b, gap=gap)
@@ -631,6 +641,7 @@ class SearchEngine:
     """Load an index directory built by :func:`quicker_spark.operators.build.build_index`."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
+        import pyarrow.dataset as pads
         self.spark = spark
         self.index_dir = index_dir
         with open(os.path.join(index_dir, "stats.json")) as fh:
@@ -639,6 +650,7 @@ class SearchEngine:
         self._n_buckets = IndexConfig.from_stats(self.stats).term_buckets
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        self._ts_ds = pads.dataset(os.path.join(index_dir, "term_stats"))
         self._docs: DataFrame | None = None
 
     # -- forward index -----------------------------------------------------
@@ -816,21 +828,18 @@ class SearchEngine:
         terms, strategy, msm = spec.terms, spec.strategy, spec.msm
         neg_terms, exclude_json = spec.neg_terms, spec.exclude_json
         after = spec.after
+        scan_terms = set(terms) | neg_terms
         kern = _make_topk_kernel(
             q.to_json(), int(self.stats["n_docs"]), float(self.stats["avgdl"]),
             k, on, off, tuple(or_flags), self.stats["k1"], self.stats["b"],
             self.stats["block_size"], strategy, len(terms),
+            read_df_global(self._ts_ds, scan_terms),
             boosts=tuple(sorted((boosts or {}).items())), after=after,
             exclude_json=exclude_json, exclude_only=tuple(sorted(neg_terms)),
             min_match=msm, phrases=spec.phrases,
             demote_json=spec.demote_json, demote_factor=spec.demote_factor,
         )
-        scan_terms = set(terms) | neg_terms
-        ts = F.broadcast(
-            self.term_stats.filter(F.col("term").isin(list(scan_terms))))
-        scan = (self._postings_for(scan_terms)
-                .join(ts, "term", "left")
-                .fillna(0, subset=["df_global"]))
+        scan = self._postings_for(scan_terms)
         if spec.phrases:
             scan = scan.unionByName(
                 self._positions_for(spec.phrases),
@@ -878,8 +887,8 @@ class SearchEngine:
                     ) -> DataFrame:
         """BM25 top-k for MANY queries in ONE Spark job — the cluster
         serving shape. A query batch shares a single term-pruned postings
-        scan (the union of every query's terms), one broadcast of the
-        combined term stats, and one per-segment Arrow kernel that scores
+        scan (the union of every query's terms), one driver read of their
+        df_global, and one per-segment Arrow kernel that scores
         every query against the segment (posting runs reused across
         queries that share a term); the per-query global top-k is a
         single window shuffle over <= n_queries * n_segments * k rows.
@@ -970,13 +979,9 @@ class SearchEngine:
         kern = _make_batch_kernel(
             specs, int(self.stats["n_docs"]), float(self.stats["avgdl"]),
             k, self.stats["k1"], self.stats["b"],
-            self.stats["block_size"])
-        ts = F.broadcast(
-            self.term_stats.filter(F.col("term").isin(list(all_terms))))
+            self.stats["block_size"], read_df_global(self._ts_ds, all_terms))
         seg_hits = (
             self._postings_for(all_terms)
-            .join(ts, "term", "left")
-            .fillna(0, subset=["df_global"])
             .groupBy("segment_id")
             .applyInPandas(kern, "qid string, doc_id long, score double")
         )
@@ -1006,8 +1011,8 @@ class SearchEngine:
         tokens of the previous (0 = exact phrase).
 
         Plan shape = the BM25 serving path: term-pruned positions scan
-        (row-group stats on term-sorted files), broadcast term stats,
-        one Arrow kernel per segment, TakeOrdered top-k merge."""
+        (row-group stats on term-sorted files), df_global in the kernel
+        closure, one Arrow kernel per segment, TakeOrdered top-k merge."""
         from quicker_spark.operators.positions import positions_meta
 
         meta = positions_meta(self.index_dir)
@@ -1027,17 +1032,14 @@ class SearchEngine:
         kern = _make_phrase_kernel(
             terms, int(self.stats["n_docs"]), float(self.stats["avgdl"]),
             k, on, off, tuple(or_flags), self.stats["k1"],
-            self.stats["b"], gap=int(gap))
+            self.stats["b"], read_df_global(self._ts_ds, terms),
+            gap=int(gap))
         pos = (self._bucket_filter(
                    self.spark.read.parquet(
                        os.path.join(self.index_dir, "positions")),
                    set(terms))
                .filter(F.col("term").isin(list(set(terms)))))
-        ts = F.broadcast(
-            self.term_stats.filter(F.col("term").isin(list(set(terms)))))
-        seg_hits = (pos.join(ts, "term", "left")
-                    .fillna(0, subset=["df_global"])
-                    .groupBy("segment_id")
+        seg_hits = (pos.groupBy("segment_id")
                     .applyInPandas(kern, "doc_id long, score double"))
         hits = seg_hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         return self.hydrate(hits) if hydrate else hits
@@ -1181,6 +1183,7 @@ class SearchEngine:
         k1, b = self.stats["k1"], self.stats["b"]
         bs = self.stats["block_size"]
         boosts = dict(search_kwargs.get("boosts") or {})
+        dfg = read_df_global(self._ts_ds, terms)
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
             outs = []
@@ -1195,8 +1198,7 @@ class SearchEngine:
                     continue
                 sel = pos_c[m]
                 w = boosts.get(r["term"], 1.0) * bm25_idf(
-                    n_docs, int(r["df_global"])) if boosts else bm25_idf(
-                    n_docs, int(r["df_global"]))
+                    n_docs, dfg[r["term"]])
                 u = bm25_u(tfs[sel], dls[sel], avgdl, k1, b)
                 field, _, word = r["term"].partition("\x01")
                 outs.append(pd.DataFrame({
@@ -1216,12 +1218,8 @@ class SearchEngine:
 
         seg_docs = int(self.stats["seg_docs"])
         segs = sorted({int(i) // seg_docs for i in hit_ids})
-        ts = F.broadcast(
-            self.term_stats.filter(F.col("term").isin(terms)))
         return (self._postings_for(set(terms))
                 .filter(F.col("segment_id").isin(segs))
-                .join(ts, "term", "left")
-                .fillna(0, subset=["df_global"])
                 .groupBy("segment_id")
                 .applyInPandas(kern, empty_schema)
                 .orderBy("doc_id", "field", "word"))
@@ -1248,12 +1246,10 @@ class SearchEngine:
             return []
         keys = {f"{field}\x01{t}": t for t in tf}
         n_docs = int(self.stats["n_docs"])
-        df = {r["term"]: int(r["df_global"])
-              for r in self.term_stats.filter(
-                  F.col("term").isin(list(keys))).collect()}
+        df = read_df_global(self._ts_ds, keys)
         ranked = sorted(
             tf, key=lambda t: (-(float(tf[t]) * bm25_idf(
-                n_docs, df.get(f"{field}\x01{t}", 0))), t))
+                n_docs, df[f"{field}\x01{t}"])), t))
         return ranked[:int(max_terms)]
 
     def more_like_this(self, doc_id: int, field: str = "content",
@@ -1487,12 +1483,9 @@ class SearchEngine:
             q.to_json(), n_docs, float(self.stats["avgdl"]),
             n_docs, on, off, tuple(or_flags), self.stats["k1"],
             self.stats["b"], self.stats["block_size"], "taat",
-            len(terms - neg), exclude_only=tuple(sorted(neg)))
-        ts = F.broadcast(
-            self.term_stats.filter(F.col("term").isin(list(set(terms)))))
+            len(terms - neg), read_df_global(self._ts_ds, terms),
+            exclude_only=tuple(sorted(neg)))
         return (self._postings_for(set(terms))
-                .join(ts, "term", "left")
-                .fillna(0, subset=["df_global"])
                 .groupBy("segment_id")
                 .applyInPandas(kern, "doc_id long, score double"))
 
@@ -1817,13 +1810,11 @@ class SearchEngine:
         members = sorted({m for ks in norm.values() for m in ks})
         if not members:
             return self._empty_hits(hydrate)
-        dfs = {r["term"]: int(r["df_global"])
-               for r in self.term_stats.filter(
-                   F.col("term").isin(members)).collect()}
+        dfs = read_df_global(self._ts_ds, members)
         n_docs = int(self.stats["n_docs"])
         idf_groups = tuple(
-            (g, bm25_idf(n_docs, max(dfs.get(m, 0) for m in ms)))
-            for g, ms in norm.items() if any(m in dfs for m in ms))
+            (g, bm25_idf(n_docs, max(dfs[m] for m in ms)))
+            for g, ms in norm.items() if any(dfs[m] for m in ms))
         if not idf_groups:
             return self._empty_hits(hydrate)
         live = {g for g, _ in idf_groups}
@@ -1863,12 +1854,9 @@ class SearchEngine:
         kern = _make_dismax_kernel(
             float(tie), int(self.stats["n_docs"]),
             float(self.stats["avgdl"]), k, on, off, tuple(or_flags),
-            self.stats["k1"], self.stats["b"], self.stats["block_size"])
-        ts = F.broadcast(
-            self.term_stats.filter(F.col("term").isin(list(terms))))
+            self.stats["k1"], self.stats["b"], self.stats["block_size"],
+            read_df_global(self._ts_ds, terms))
         seg_hits = (self._postings_for(terms)
-                    .join(ts, "term", "left")
-                    .fillna(0, subset=["df_global"])
                     .groupBy("segment_id")
                     .applyInPandas(kern, "doc_id long, score double"))
         hits = seg_hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

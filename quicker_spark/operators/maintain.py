@@ -81,6 +81,16 @@ def _write_stats(index_dir: str, stats: dict) -> None:
     atomic_write_json(os.path.join(index_dir, "stats.json"), stats)
 
 
+def _swap_term_stats(index_dir: str, stats: dict) -> None:
+    """Swap staged term stats live; publish their row count as n_terms."""
+    import pyarrow.dataset as pads
+    _apply_dir_ops(index_dir, [
+        {"op": "swap", "src": _TS_STAGING, "dst": "term_stats"}])
+    stats["n_terms"] = pads.dataset(
+        os.path.join(index_dir, "term_stats")).count_rows()
+    _write_stats(index_dir, stats)
+
+
 # the physical commit goes through the io format seam
 # (io.commit_partition_ops): path layout = staged directory swaps;
 # a deployment that registered an Iceberg backend
@@ -155,36 +165,32 @@ def recover_pending(spark: SparkSession, index_dir: str) -> bool:
                                       present) if affected else [])
             if affected:
                 refresh_positions(spark, index_dir, affected, present)
-            if pending.get("ts_staged"):
-                # merged stats durably staged; finish (or skip) the swap
-                _apply_dir_ops(index_dir, [
-                    {"op": "swap", "src": _TS_STAGING, "dst": "term_stats"}])
-            else:
+            if not pending.get("ts_staged"):
                 _stage_delta_term_stats(spark, index_dir, rebuilt, affected)
-                _apply_dir_ops(index_dir, [
-                    {"op": "swap", "src": _TS_STAGING, "dst": "term_stats"}])
+            # merged stats durably staged; finish (or skip) the swap
+            _swap_term_stats(index_dir, stats)
         else:
             # legacy marker without progress flags: conservative full
             # recompute — always correct
             if affected:
                 _rebuild_waves(spark, index_dir, stats, affected, present)
                 refresh_positions(spark, index_dir, affected, present)
-            _full_term_stats_recompute(spark, index_dir)
+            _full_term_stats_recompute(spark, index_dir, stats)
     for rel in (_DOCS_STAGING, _TS_STAGING, _TS_OLD_DELTA):
         shutil.rmtree(os.path.join(index_dir, rel), ignore_errors=True)
     os.remove(marker)
     return True
 
 
-def _full_term_stats_recompute(spark: SparkSession, index_dir: str) -> None:
+def _full_term_stats_recompute(spark: SparkSession, index_dir: str,
+                               stats: dict) -> None:
     """Whole-postings term-stats rebuild — the conservative recovery
     fallback for legacy markers only; the normal and recovery paths both
     use the partition-pruned delta (:func:`_stage_delta_term_stats`)."""
     (spark.read.parquet(os.path.join(index_dir, "postings"))
      .groupBy("term").agg(F.sum("df").alias("df_global"))
      .write.mode("overwrite").parquet(os.path.join(index_dir, _TS_STAGING)))
-    _apply_dir_ops(index_dir, [
-        {"op": "swap", "src": _TS_STAGING, "dst": "term_stats"}])
+    _swap_term_stats(index_dir, stats)
 
 
 def _stage_docs(docs_kept: DataFrame, affected: set[int],
@@ -375,8 +381,7 @@ def _commit(spark: SparkSession, index_dir: str, stats: dict,
     if _stage_delta_term_stats(spark, index_dir, rebuilt, affected):
         pending["ts_staged"] = True           # merged stats are durable
         atomic_write_json(marker, pending)
-        _apply_dir_ops(index_dir, [
-            {"op": "swap", "src": _TS_STAGING, "dst": "term_stats"}])
+        _swap_term_stats(index_dir, stats)
     shutil.rmtree(os.path.join(index_dir, _TS_OLD_DELTA), ignore_errors=True)
     os.remove(marker)
     return {"rebuilt_waves": rebuilt, "n_docs": stats["n_docs"]}

@@ -59,6 +59,7 @@ from quicker_spark.engine import (
     _row_to_encoded,
     _score_segment_rows,
     full_match_terms,
+    read_df_global,
     resolve_search_spec,
 )
 from quicker_spark.functions.buckets import term_bucket
@@ -161,16 +162,10 @@ class LocalSearcher:
         return self._resident(self._rows, terms, self._load_terms)
 
     def _load_terms(self, missing: list[str]) -> dict[str, tuple]:
-        import pyarrow.compute as pc
-
         rows = self._post_ds.to_table(
             filter=self._pruned_filter(missing))
-        ts = self._ts_ds.to_table(
-            filter=pc.field("term").isin(missing),
-            columns=["term", "df_global"]).to_pydict()
-        # engine: left join + fillna(0) — absent terms score df 0
-        dfg = dict(zip(ts["term"], ts["df_global"]))
-        fresh = {t: (int(dfg.get(t, 0)), {}, {}) for t in missing}
+        dfg = read_df_global(self._ts_ds, missing)
+        fresh = {t: (dfg[t], {}, {}) for t in missing}
         for r in rows.to_pylist():
             fresh[r["term"]][1][int(r["segment_id"])] = _row_to_encoded(
                 r, self._block_size)
@@ -180,7 +175,7 @@ class LocalSearcher:
         """Assemble the kernel inputs per segment: ({term: (df_global,
         EncodedPostings)}, {term: resident decoded run}) over the
         scan_terms present there — the same rows the Spark path's pruned
-        scan + term-stats join produces, without building a frame."""
+        scan hands its kernels, without building a frame."""
         entries = self._ensure_terms(scan_terms)
         segs: dict[int, tuple] = {}
         for t in sorted(scan_terms):
@@ -498,14 +493,8 @@ class LocalSearcher:
         terms = [f"{field}\x01{w}" for w in words]
         need = set(terms)
         decoded = self._gather_positions(need)
-        # engine parity: term stats left-join + fillna(0)
-        import pyarrow.compute as pc
-        ts = self._ts_ds.to_table(
-            filter=pc.field("term").isin(sorted(need)),
-            columns=["term", "df_global"]).to_pandas()
-        dfg = dict(zip(ts["term"], ts["df_global"].astype(np.int64)))
-        idf = {t: bm25_idf(int(self.stats["n_docs"]), int(dfg.get(t, 0)))
-               for t in need}
+        dfg = read_df_global(self._ts_ds, need)
+        idf = {t: bm25_idf(int(self.stats["n_docs"]), dfg[t]) for t in need}
         parts = []
         for seg in sorted(decoded):
             dec = decoded[seg]

@@ -315,6 +315,9 @@ def _assert_post_delete_state(spark, index_dir, victims):
         lambda r: f"{r.repo}:{r.path}@{r.commit}" in victim_keys, axis=1)]
     _assert_matches_oracle(spark, index_dir, Oracle(remaining))
     _ts_equals_full_recompute(spark, index_dir)
+    # every recovery path publishes the swapped table's vocabulary size
+    assert (SearchEngine(spark, index_dir).stats["n_terms"]
+            == spark.read.parquet(index_dir + "/term_stats").count())
 
 
 def test_recovery_pre_freeze_crash_uses_delta(spark, index_dir, monkeypatch):
@@ -445,3 +448,37 @@ def test_rebuild_leaves_sibling_segments_untouched(spark, index_dir):
     remaining = pdf[~pdf.apply(
         lambda r: f"{r.repo}:{r.path}@{r.commit}" in victim_keys, axis=1)]
     _assert_matches_oracle(spark, index_dir, Oracle(remaining))
+
+
+def test_n_terms_follows_maintenance(spark, index_dir):
+    """stats.json ``n_terms`` (significant_terms' broadcast-vs-shuffle
+    gate) tracks the live vocabulary through maintenance: an upsert with
+    fresh tokens raises it, and deleting a term's last doc lowers it."""
+    import json
+    import os
+
+    def n_terms():
+        with open(os.path.join(index_dir, "stats.json")) as fh:
+            return json.load(fh)["n_terms"]
+
+    def vocabulary():
+        return spark.read.parquet(index_dir + "/term_stats").count()
+
+    n0 = n_terms()
+    assert n0 == vocabulary()
+    fresh = corpus_pdf(2, start=20_000)
+    fresh["content"] = ["qsfresh_alpha qsfresh_beta", "qsfresh_gamma"]
+    upsert_docs(spark, index_dir, spark.createDataFrame(fresh))
+    n1 = n_terms()
+    assert n1 == vocabulary() and n1 >= n0 + 3
+
+    gamma = "content\x01qsfresh_gamma"
+    eng = SearchEngine(spark, index_dir)
+    (victim,) = [r["doc_id"] for r in
+                 eng.search(NewTermQuery("content", "qsfresh_gamma"),
+                            k=5).collect()]
+    delete_docs(spark, index_dir, [victim])
+    n2 = n_terms()
+    assert n2 == vocabulary() and n2 < n1
+    assert spark.read.parquet(index_dir + "/term_stats").filter(
+        F.col("term") == gamma).count() == 0

@@ -235,3 +235,25 @@ def test_collapse_hydration_is_column_pruned(eng):
     reads = [ln for ln in plan.splitlines()
              if "ReadSchema" in ln and "lang" in ln]
     assert reads and all("content" not in ln for ln in reads)
+
+
+def test_topk_plans_read_no_term_stats(eng):
+    """df_global comes from one driver read of the query terms, carried
+    in the kernel closure: no top-k verb scans ``term_stats`` or
+    broadcasts it (the join cost one extra Spark job per call)."""
+    from quicker_spark.operators.positions import build_positions
+
+    build_positions(eng.spark, eng.index_dir)
+    q = Or(NewTermQuery("content", "def"), NewTermQuery("content", "return"))
+    plans = {
+        "search": eng.search(q, k=5),
+        "search_many": eng.search_many({"a": q, "b": NewTermQuery(
+            "content", "import")}, k=5),
+        "search_phrase": eng.search_phrase(["return", "self"], k=5),
+        "_scored_matches": eng._scored_matches(q),
+    }
+    for verb, df in plans.items():
+        plan = _formatted(df)
+        assert "term_stats" not in plan, (verb, plan)
+        assert "BroadcastExchange" not in plan, (verb, plan)
+        assert "FlatMapGroupsInPandas" in plan, (verb, plan)  # the kernel
