@@ -272,13 +272,32 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
                       demote_json, float(demote_factor))
 
 
-def read_df_global(ts_ds, terms) -> dict[str, int]:
-    """{term: df_global, 0 when absent} from the ``term_stats`` dataset.
-    The IN filter prunes row groups of the term-sorted files, so the
-    read is bounded by the query terms, never the vocabulary."""
+def term_filter(ts_ds, terms: list[str]):
+    """pyarrow filter for the sorted ``terms`` in ``term_stats``: ``isin``
+    AND the [min, max] spans of the row groups that may hold them. pyarrow
+    prunes row groups on such spans (never on ``isin``), and the table is
+    range-partitioned by term, so a read takes at most one row group per
+    term, never the vocabulary."""
+    from bisect import bisect_left, bisect_right
+
     import pyarrow.compute as pc
+    f = pc.field("term")
+    held = pc.scalar(False)
+    for frag in ts_ds.get_fragments():
+        for rg in frag.row_groups:
+            st = rg.statistics.get("term")
+            if not st:  # no min/max recorded: nothing to prune on
+                return f.isin(terms)
+            if bisect_left(terms, st["min"]) < bisect_right(terms, st["max"]):
+                held = held | ((f >= st["min"]) & (f <= st["max"]))
+    return held & f.isin(terms)
+
+
+def read_df_global(ts_ds, terms) -> dict[str, int]:
+    """{term: df_global, 0 when absent} from the ``term_stats`` dataset,
+    read through :func:`term_filter`."""
     terms = sorted(set(terms))
-    ts = ts_ds.to_table(filter=pc.field("term").isin(terms),
+    ts = ts_ds.to_table(filter=term_filter(ts_ds, terms),
                         columns=["term", "df_global"]).to_pydict()
     dfg = dict(zip(ts["term"], ts["df_global"]))
     return {t: int(dfg.get(t, 0)) for t in terms}

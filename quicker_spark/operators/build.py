@@ -427,6 +427,16 @@ def bucket_cluster(rows: DataFrame, n_buckets: int) -> DataFrame:
             .sortWithinPartitions("segment_id", "bucket", "term"))
 
 
+def write_term_stats(ts: DataFrame, path: str) -> None:
+    """Write (term, df_global) range-partitioned and sorted by term, in
+    ~1 MB row groups: their term ranges are disjoint, so a term lookup
+    (the engine's ``read_df_global``, dictionary slices) reads only the
+    row groups whose min/max hold its terms, never the whole vocabulary."""
+    (ts.repartitionByRange("term").sortWithinPartitions("term")
+       .write.mode("overwrite").option("parquet.block.size", 1 << 20)
+       .parquet(path))
+
+
 def _success(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
@@ -695,13 +705,8 @@ def _build_index_body(spark: SparkSession, corpus: DataFrame, out_dir: str,
                     if s not in done.union(s for w in waves for s in w)]
     if all_done and (waves or not _success(os.path.join(out_dir, "term_stats"))):
         posts = spark.read.parquet(os.path.join(out_dir, "postings"))
-        # term-sorted files: any term IN-filter read (query-path broadcast
-        # prune, LocalSearcher's cold stats fetch) skips row groups by
-        # min/max stats instead of scanning the whole vocabulary
-        (posts.groupBy("term").agg(F.sum("df").alias("df_global"))
-              .sortWithinPartitions("term")
-              .write.mode("overwrite")
-              .parquet(os.path.join(out_dir, "term_stats")))
+        write_term_stats(posts.groupBy("term").agg(
+            F.sum("df").alias("df_global")), os.path.join(out_dir, "term_stats"))
         # vocabulary size (count-star = parquet footer metadata only):
         # the query tier gates its broadcast-vs-shuffle choice for
         # whole-vocabulary joins (significant_terms) on this

@@ -62,7 +62,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quicker_spark.io import atomic_write_json, commit_partition_ops
-from quicker_spark.operators.build import IndexConfig, _success, write_wave
+from quicker_spark.operators.build import (
+    IndexConfig, _success, write_term_stats, write_wave)
 from quicker_spark.operators.positions import refresh_positions
 from quicker_spark.operators.docs import DOC_KEY_COLS, prepare_docs
 
@@ -81,13 +82,13 @@ def _write_stats(index_dir: str, stats: dict) -> None:
     atomic_write_json(os.path.join(index_dir, "stats.json"), stats)
 
 
-def _swap_term_stats(index_dir: str, stats: dict) -> None:
+def _swap_term_stats(spark: SparkSession, index_dir: str,
+                     stats: dict) -> None:
     """Swap staged term stats live; publish their row count as n_terms."""
-    import pyarrow.dataset as pads
     _apply_dir_ops(index_dir, [
         {"op": "swap", "src": _TS_STAGING, "dst": "term_stats"}])
-    stats["n_terms"] = pads.dataset(
-        os.path.join(index_dir, "term_stats")).count_rows()
+    stats["n_terms"] = int(
+        spark.read.parquet(os.path.join(index_dir, "term_stats")).count())
     _write_stats(index_dir, stats)
 
 
@@ -168,7 +169,7 @@ def recover_pending(spark: SparkSession, index_dir: str) -> bool:
             if not pending.get("ts_staged"):
                 _stage_delta_term_stats(spark, index_dir, rebuilt, affected)
             # merged stats durably staged; finish (or skip) the swap
-            _swap_term_stats(index_dir, stats)
+            _swap_term_stats(spark, index_dir, stats)
         else:
             # legacy marker without progress flags: conservative full
             # recompute — always correct
@@ -187,10 +188,10 @@ def _full_term_stats_recompute(spark: SparkSession, index_dir: str,
     """Whole-postings term-stats rebuild — the conservative recovery
     fallback for legacy markers only; the normal and recovery paths both
     use the partition-pruned delta (:func:`_stage_delta_term_stats`)."""
-    (spark.read.parquet(os.path.join(index_dir, "postings"))
-     .groupBy("term").agg(F.sum("df").alias("df_global"))
-     .write.mode("overwrite").parquet(os.path.join(index_dir, _TS_STAGING)))
-    _swap_term_stats(index_dir, stats)
+    write_term_stats(spark.read.parquet(os.path.join(index_dir, "postings"))
+                     .groupBy("term").agg(F.sum("df").alias("df_global")),
+                     os.path.join(index_dir, _TS_STAGING))
+    _swap_term_stats(spark, index_dir, stats)
 
 
 def _stage_docs(docs_kept: DataFrame, affected: set[int],
@@ -340,9 +341,8 @@ def _stage_delta_term_stats(spark: SparkSession, index_dir: str,
                  + F.coalesce(F.col("df_new"), F.lit(0))).alias("df_global"))
         .filter(F.col("df_global") > 0)
     )
-    staging = os.path.join(index_dir, _TS_STAGING)
-    # keep the build's term-sorted-files property across maintenance
-    merged.sortWithinPartitions("term").write.mode("overwrite").parquet(staging)
+    # keep the build's range-partitioned layout across maintenance
+    write_term_stats(merged, os.path.join(index_dir, _TS_STAGING))
     return True
 
 
@@ -381,7 +381,7 @@ def _commit(spark: SparkSession, index_dir: str, stats: dict,
     if _stage_delta_term_stats(spark, index_dir, rebuilt, affected):
         pending["ts_staged"] = True           # merged stats are durable
         atomic_write_json(marker, pending)
-        _swap_term_stats(index_dir, stats)
+        _swap_term_stats(spark, index_dir, stats)
     shutil.rmtree(os.path.join(index_dir, _TS_OLD_DELTA), ignore_errors=True)
     os.remove(marker)
     return {"rebuilt_waves": rebuilt, "n_docs": stats["n_docs"]}

@@ -19,22 +19,17 @@ def _stamp(archive):
 
 
 def _install():
-    read_directory = zipimport._read_directory
     invalidate = zipimport.zipimporter.invalidate_caches
 
-    def stamped_read(archive):
-        _reads[archive] = (_stamp(archive), read_directory(archive))
-        return _reads[archive][1]
-
     def invalidate_caches(self):
-        stamp, files = _reads.get(self.archive, (None, None))
-        if stamp is None or stamp != _stamp(self.archive):
-            invalidate(self)
+        stamp, seen = _stamp(self.archive), _reads.get(self.archive)
+        if stamp is not None and seen is not None and seen[0] == stamp:
+            self._files = zipimport._zip_directory_cache[self.archive] = seen[1]
         else:
-            self._files = zipimport._zip_directory_cache[self.archive] = files
+            invalidate(self)
+            _reads[self.archive] = (stamp, self._files)
 
     zipimport._stamped = True
-    zipimport._read_directory = stamped_read
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     # importers that predate this module hold reads of unknown age
     for imp in list(sys.path_importer_cache.values()):

@@ -268,6 +268,61 @@ def test_commit_backend_seam(spark, index_dir):
     _assert_matches_oracle(spark, index_dir, Oracle(remaining))
 
 
+def _term_row_group_ranges(index_dir):
+    """Sorted (min, max) term statistics of every term_stats row group,
+    asserted disjoint: the range-partitioned layout term lookups rely on."""
+    import pyarrow.dataset as pads
+
+    ranges = sorted(
+        (st["min"], st["max"]) for f in pads.dataset(
+            index_dir + "/term_stats").get_fragments()
+        for st in (rg.statistics["term"] for rg in f.row_groups))
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+    return ranges
+
+
+def test_df_global_reads_only_query_term_row_groups(spark, index_dir):
+    """Build, maintenance delta and full recompute all write term_stats
+    in disjoint term ranges, so the df_global lookup's filter lets
+    pyarrow keep at most one row group per query term, and it reads the
+    same values as a full scan."""
+    import pyarrow.dataset as pads
+
+    from quicker_spark.engine import read_df_global, term_filter
+    from quicker_spark.operators import maintain as M
+
+    def check():
+        ranges = _term_row_group_ranges(index_dir)
+        assert len(ranges) >= 4, ranges
+        ts = pads.dataset(index_dir + "/term_stats")
+        terms = sorted({ranges[0][0], ranges[-1][1], ranges[1][0],
+                        "content\x01qs_absent_term"})
+        read = sum(len(frag.split_by_row_group(term_filter(ts, terms)))
+                   for frag in ts.get_fragments())
+        assert 1 <= read <= 3 < len(ranges)
+        full = ts.to_table().to_pydict()
+        want = dict(zip(full["term"], full["df_global"]))
+        assert read_df_global(ts, terms) == {
+            t: want.get(t, 0) for t in terms}
+
+    check()
+    # the build runs without AQE; keep maintenance's range partitions
+    # apart too, so its small table still spans several files
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        upsert_docs(spark, index_dir,
+                    spark.createDataFrame(corpus_pdf(5, start=20_000)))
+        check()
+        M._full_term_stats_recompute(spark, index_dir,
+                                     M._load_stats(index_dir))
+        check()
+    finally:
+        spark.conf.set(coalesce, prev)
+    _ts_equals_full_recompute(spark, index_dir)
+
+
 def _ts_equals_full_recompute(spark, index_dir):
     ts = spark.read.parquet(index_dir + "/term_stats").alias("ts")
     full = (spark.read.parquet(index_dir + "/postings")
@@ -276,6 +331,7 @@ def _ts_equals_full_recompute(spark, index_dir):
             .filter(F.coalesce(F.col("ts.df_global"), F.lit(0))
                     != F.coalesce(F.col("fl.df_full"), F.lit(0))))
     assert diff.count() == 0, diff.limit(5).collect()
+    _term_row_group_ranges(index_dir)
 
 
 def _recover_with_spies(spark, index_dir, monkeypatch):

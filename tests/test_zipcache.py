@@ -49,6 +49,11 @@ def test_unchanged_zip_is_not_reread(tmp_path):
     sys.path.insert(0, archive)
     try:
         assert importlib.import_module("qs_zip_a").X == 1
+        # an archive first opened after the install is read once more,
+        # to record its stamp; unchanged, it is never read again
+        with _counted_reads() as calls:
+            importlib.invalidate_caches()
+        assert calls == [archive]
         with _counted_reads() as calls:
             importlib.invalidate_caches()
             importlib.invalidate_caches()
