@@ -349,9 +349,9 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
     :func:`_frame_postings`) and the resident tier — batch serving and
     ``LocalSearcher`` are rank-identical to one-at-a-time Spark searches
     because all of them run exactly this code per query. ``dec_cache``
-    ({term: decoded run}) is read and filled here, so callers can share
-    decoded runs between queries that reuse a term (decode once per
-    segment, not once per query).
+    ({term: decoded run + its BM25 u at ``avgdl``}) is read and filled
+    here, so callers can share decoded runs between queries that reuse
+    a term (decode and compute u once per segment, not once per query).
 
     strategy: 'wand' (flat OR, block-max pruned), 'conj' (flat AND,
     skip-pointer intersection + block-max pruned), 'taat' (any tree,
@@ -365,9 +365,10 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
         # only when the block-max bound can skip most intervals. With
         # >= 2 DENSE low-idf terms the candidate stream is nearly the
         # whole segment and scores are flat, so pruning collapses and
-        # the single-pass exhaustive decode still wins (measured
-        # ~30ms TAAT vs ~150ms interval walk on a dense 150k-doc
-        # segment — down from 4.9s with round 2's per-doc pivot walk).
+        # the dense-window TAAT wins. Measured on one core, top-10 of a
+        # 100k-doc segment with two terms of df 60k and 30k: interval
+        # walk 22.5 ms; TAAT 6.7 ms decoding the runs, 1.5 ms over
+        # resident runs with their cached u.
         dense = sum(1 for dfg, _ in postings.values() if dfg * 20 > n_docs)
         strat = "taat" if dense >= 2 else strat[:4]
     _e = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
@@ -405,7 +406,11 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
     for t, (_, e) in postings.items():
         d = dec_cache.get(t)
         if d is None:
-            d = dec_cache[t] = e.decode_all()
+            # the run's u rides along: computed once per decode, not
+            # once per query (avgdl is fixed for a cache's lifetime)
+            ids, tfs, dls, bits = e.decode_all()
+            d = dec_cache[t] = (ids, tfs, dls, bits,
+                                bm25_u(tfs, dls, avgdl, k1, b))
         decoded[t] = d
     return score_segment_exhaustive(
         query, decoded, idf, avgdl, k, on, off, or_flags, k1, b,
@@ -606,40 +611,17 @@ def _make_phrase_kernel(phrase_terms: tuple, n_docs: int, avgdl: float,
 
 def _make_bool_kernel(query_json: str, on: int, off: int, or_flags: tuple,
                       block_size: int):
+    """All boolean matches of a tree per segment (``must_not`` at any
+    node subtracts in-kernel, over the segment's window masks)."""
     query = json.loads(query_json)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         leaf_ids: dict[str, np.ndarray] = {}
         for _, r in pdf.iterrows():
             ids, _tfs, _dls, bits = _row_to_encoded(r, block_size).decode_all()
-            m = filter_by_bits_vec(bits, on, off, or_flags)
-            leaf_ids[r["term"]] = ids[m]
-        out = eval_bool_tree(query, leaf_ids)
-        return pd.DataFrame({"doc_id": out})
-
-    return kernel
-
-
-def _make_bool_not_kernel(pos_json: str, neg_json: str, on: int, off: int,
-                          or_flags: tuple, block_size: int):
-    """must_not kernel: both trees evaluate over the SAME decoded leaf
-    arrays within one per-segment call; the exclusion is a row-local
-    sorted setdiff. The complement is never materialized — a bare NOT
-    would be corpus-sized; exclusion only ever subtracts from the
-    positive tree's match set (the Lucene/ES bool-query contract)."""
-    pos = json.loads(pos_json)
-    neg = json.loads(neg_json)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        leaf_ids: dict[str, np.ndarray] = {}
-        for _, r in pdf.iterrows():
-            ids, _tfs, _dls, bits = _row_to_encoded(r, block_size).decode_all()
-            m = filter_by_bits_vec(bits, on, off, or_flags)
-            leaf_ids[r["term"]] = ids[m]
-        out = np.setdiff1d(eval_bool_tree(pos, leaf_ids),
-                           eval_bool_tree(neg, leaf_ids),
-                           assume_unique=True)
-        return pd.DataFrame({"doc_id": out})
+            leaf_ids[r["term"]] = ids[filter_by_bits_vec(
+                bits, on, off, or_flags)]
+        return pd.DataFrame({"doc_id": eval_bool_tree(query, leaf_ids)})
 
     return kernel
 
@@ -1174,7 +1156,7 @@ class SearchEngine:
         (doc_id, field, word, tf, dl, idf_w, contrib) where
         ``idf_w`` is the boost-folded idf weight and ``contrib = idf_w *
         u`` is the exact float64 product every scorer accumulates
-        (kernels.score_segment_exhaustive:431) — summing a doc's
+        (kernels.score_segment_exhaustive) — summing a doc's
         contribs in ascending word order reproduces its score
         bitwise. Exclude-only and nested-must_not terms never appear
         (they never contribute to a score); phrase constituents do
@@ -1902,9 +1884,10 @@ class SearchEngine:
         """All boolean matches, ascending doc_id — the reference's Search
         contract (returns every match, no ranking;
         skiplist_reverse_index.go:214-227). Nested ``must_not`` in the
-        tree evaluates in-kernel (setdiff against the node's own
-        candidates); phrase pseudo-leaves are refused — this path scans
-        postings, not the positional sidecar."""
+        tree evaluates in-kernel (``&~`` of the segment's window masks,
+        against the node's own candidates); phrase pseudo-leaves are
+        refused — this path scans postings, not the positional
+        sidecar."""
         terms = q.terms()
         if any(t.startswith(PSEUDO_PREFIX) for t in terms):
             raise ValueError(
@@ -1929,8 +1912,8 @@ class SearchEngine:
         And/Or IR): all matches of ``q`` MINUS all matches of
         ``exclude``, ascending doc_id. Both trees evaluate inside ONE
         per-segment kernel over one shared term-pruned postings scan —
-        the exclusion is a row-local setdiff, so there is no second
-        job and no anti-join shuffle; the scan reads exactly the union
+        the exclusion is a row-local mask subtraction, so there is no
+        second job and no anti-join shuffle; the scan reads exactly the union
         of both trees' terms. Bit filters apply to both sides (the
         flag context frames the whole request). A bare NOT is
         deliberately unsupported: its match set is corpus-sized."""
@@ -1941,9 +1924,12 @@ class SearchEngine:
         if not neg_terms:
             return self.search_bool(q, on=on, off=off, or_flags=or_flags,
                                     hydrate=hydrate)
-        kern = _make_bool_not_kernel(q.to_json(), exclude.to_json(), on,
-                                     off, tuple(or_flags),
-                                     self.stats["block_size"])
+        # q MINUS exclude is the tree {must: [q], must_not: [exclude]}:
+        # both sides evaluate over the same leaf masks in one kernel
+        tree = json.dumps({"must": [json.loads(q.to_json())],
+                           "must_not": [json.loads(exclude.to_json())]})
+        kern = _make_bool_kernel(tree, on, off, tuple(or_flags),
+                                 self.stats["block_size"])
         out = (
             self._postings_for(terms | neg_terms)
             .groupBy("segment_id")

@@ -307,7 +307,7 @@ def encode_postings_batch(ids_col, tfs_col, dls_col, bits_col,
     return out
 
 
-# -- vectorized predicates / set ops -----------------------------------------
+# -- vectorized predicates ---------------------------------------------------
 
 def filter_by_bits_vec(bits: np.ndarray, on: int = 0, off: int = 0,
                        or_flags=()) -> np.ndarray:
@@ -322,65 +322,95 @@ def filter_by_bits_vec(bits: np.ndarray, on: int = 0, off: int = 0,
     return m
 
 
-def intersect_many(arrays: list[np.ndarray]) -> np.ndarray:
-    """k-way intersection of ascending int64 arrays — same contract as the
-    reference's IntersectionOfSkipList (0 lists -> empty, 1 -> itself,
-    early-exit on empty; skiplist_reverse_index.go:77-130)."""
-    if not arrays:
-        return np.empty(0, dtype=np.int64)
-    out = arrays[0]
-    for a in arrays[1:]:
-        if out.size == 0:
-            return out
-        out = out[np.isin(out, a, assume_unique=True)]
+# -- TAAT over the segment's doc-id window ------------------------------------
+#
+# segment_id = doc_id // seg_docs, so a per-segment kernel's runs all lie in
+# a window [lo, hi] of at most seg_docs ids. Leaves become bool masks over
+# it, trees are &, | and &~ of masks, and scores accumulate in a dense
+# float64 array at ``doc_id - lo`` (Lucene's BooleanScorer bucket window):
+# no sorted unions and no searchsorted alignment. On few-thousand-doc
+# segments numpy dispatch costs more than the arithmetic, so fewer, denser
+# calls win.
+
+def _filtered_runs(term_postings: dict, avgdl: float, on: int, off: int,
+                   or_flags, k1: float, b: float) -> dict:
+    """term -> (bit-filtered ids, their u). A run is a decoded (ids, tfs,
+    dls, bits) tuple, optionally followed by its cached u at this same
+    avgdl/k1/b (u is elementwise, so slicing it equals recomputing it).
+    A predicate that passes every posting is skipped, not evaluated."""
+    noop = on == 0 and off == 0 and not any(f > 0 for f in or_flags)
+    out = {}
+    for t, run in term_postings.items():
+        ids, tfs, dls, bits = run[:4]
+        u = run[4] if len(run) > 4 else bm25_u(tfs, dls, avgdl, k1, b)
+        if not noop:
+            m = filter_by_bits_vec(bits, on, off, or_flags)
+            ids, u = ids[m], u[m]
+        out[t] = (ids, u)
     return out
 
 
-def union_many(arrays: list[np.ndarray]) -> np.ndarray:
-    """Dedup union in ascending order (UnionOfSkipList, :133-156)."""
-    if not arrays:
-        return np.empty(0, dtype=np.int64)
-    return np.unique(np.concatenate(arrays))
+def _window_offsets(leaf_ids: dict) -> tuple[dict, int, int]:
+    """-> ({key: ids - lo}, lo, window length; 0 if every array is empty)."""
+    nz = [a for a in leaf_ids.values() if a.size]
+    lo = int(min(a[0] for a in nz)) if nz else 0
+    n = int(max(a[-1] for a in nz)) - lo + 1 if nz else 0
+    return {key: a - lo for key, a in leaf_ids.items()}, lo, n
 
 
-# -- exhaustive (term-at-a-time) scorer ---------------------------------------
-
-def eval_bool_tree(node: dict, leaf_ids: dict[str, np.ndarray]) -> np.ndarray:
-    """Evaluate a TermQuery dict over per-term candidate id arrays.
-
-    A node may carry ``must_not`` alongside its positive part (nested
-    ES bool exclusion): the node's matches are its positive matches
-    MINUS the union of the ``must_not`` subtrees — evaluated against
-    the node's own candidate set, never a corpus-sized complement.
-    Leaf keys of the form ``field\\x01word``; pseudo-leaves (phrase
-    match sets, key prefix ``\\x02``) resolve through the same
-    ``leaf_ids`` map — the caller injects their per-segment id arrays."""
+def _tree_mask(node: dict, offs: dict, n: int, memo: dict) -> np.ndarray:
+    """A TermQuery dict as a bool window mask (``memo``: leaf masks, shared
+    — never mutate a returned mask). A node's ``must_not`` subtrees are
+    subtracted from its own matches (nested ES bool exclusion)."""
     if "keyword" in node:
         kw = node["keyword"]
         f = kw.get("field", "")
         # pseudo-leaf keys ("\x02..." — phrase match sets) contain no
         # field separator, so the whole key lands in the field slot
         key = f if f.startswith("\x02") else f"{f}\x01{kw.get('word','')}"
-        return leaf_ids.get(key, np.empty(0, dtype=np.int64))
-    if "must" in node:
-        out = intersect_many([eval_bool_tree(c, leaf_ids)
-                              for c in node["must"]])
-    elif "should" in node:
-        out = union_many([eval_bool_tree(c, leaf_ids)
-                          for c in node["should"]])
-    else:
-        return np.empty(0, dtype=np.int64)
-    negs = node.get("must_not")
-    if negs and out.size:
-        out = np.setdiff1d(
-            out, union_many([eval_bool_tree(c, leaf_ids) for c in negs]),
-            assume_unique=True)
+        m = memo.get(key)
+        if m is None:
+            m = memo[key] = np.zeros(n, dtype=bool)
+            if key in offs:
+                m[offs[key]] = True
+        return m
+    op = np.logical_and if "must" in node else np.logical_or
+    kids = node["must"] if "must" in node else node.get("should", ())
+    if not kids:  # 0 clauses match nothing (IntersectionOfSkipList)
+        return np.zeros(n, dtype=bool)
+    out = _tree_mask(kids[0], offs, n, memo)
+    for c in kids[1:]:
+        out = op(out, _tree_mask(c, offs, n, memo))
+    if node.get("must_not"):
+        out = out & ~_tree_mask({"should": node["must_not"]}, offs, n, memo)
     return out
+
+
+def eval_bool_tree(node: dict, leaf_ids: dict[str, np.ndarray]) -> np.ndarray:
+    """Evaluate a TermQuery dict over per-term ascending unique id arrays
+    -> ascending matching ids. The reference's set-op contract
+    (skiplist_reverse_index.go:77-156): a must of 0 lists is empty, of 1
+    list is that list, and an empty list empties it; ``must_not`` only
+    subtracts, never builds a corpus-sized complement."""
+    offs, lo, n = _window_offsets(leaf_ids)
+    return np.flatnonzero(_tree_mask(node, offs, n, {})) + lo
+
+
+def _top_k(cands: np.ndarray, scores: np.ndarray, k: int):
+    """Segment-local top-k ordered (score desc, doc_id asc)."""
+    if cands.size > k:
+        # threshold-select (keeps ALL boundary ties), then sort survivors
+        kth = np.partition(-scores, k - 1)[k - 1]
+        keep = np.nonzero(-scores <= kth)[0]
+    else:
+        keep = np.arange(cands.size)
+    order = keep[np.lexsort((cands[keep], -scores[keep]))][:k]
+    return cands[order], scores[order]
 
 
 def score_segment_exhaustive(
     query: dict,
-    term_postings: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]],
+    term_postings: dict[str, tuple],
     idf: dict[str, float],
     avgdl: float,
     k: int,
@@ -397,9 +427,14 @@ def score_segment_exhaustive(
     demote: dict | None = None,
     demote_factor: float = 1.0,
 ):
-    """Boolean-filter + BM25-score one segment, vectorized TAAT.
+    """Boolean-filter + BM25-score one segment, vectorized TAAT over the
+    segment's doc-id window.
 
-    ``term_postings``: term -> decoded (ids, tfs, dls, bits), ids ascending.
+    ``term_postings``: term -> decoded (ids, tfs, dls, bits), ids
+    ascending, optionally with the run's cached u (see _filtered_runs).
+    Each scored term adds ``idf * u`` into a dense accumulator in sorted
+    term order from 0.0: the same products in the same order as a
+    per-doc sum, so scores are bitwise the per-doc reference's.
     ``after``: optional (score, doc_id) paging cursor — the top-k is taken
     over docs strictly after it in (score desc, doc_id asc) rank order.
     ``exclude``: optional must_not tree (ES bool-query semantics): its
@@ -425,65 +460,39 @@ def score_segment_exhaustive(
     Returns (doc_ids, scores) of the segment-local top-k, ordered by
     (score desc, doc_id asc).
     """
-    filtered: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    leaf_ids: dict[str, np.ndarray] = dict(extra_leaf_ids or {})
-    for t, (ids, tfs, dls, bits) in term_postings.items():
-        m = filter_by_bits_vec(bits, on, off, or_flags)
-        fids = ids[m]
-        leaf_ids[t] = fids
-        if t not in exclude_only:
-            filtered[t] = (fids, bm25_u(tfs[m], dls[m], avgdl, k1, b))
-
-    cands = eval_bool_tree(query, leaf_ids)
-    if exclude is not None and cands.size:
-        cands = np.setdiff1d(cands, eval_bool_tree(exclude, leaf_ids),
-                             assume_unique=True)
-    if min_match > 1 and cands.size:
-        # distinct-term match count per candidate over the POSITIVE
-        # terms (exclude-only leaves never count toward the quorum)
-        counts = np.zeros(cands.size, dtype=np.int64)
-        for t in filtered:
-            fids = filtered[t][0]
-            if fids.size == 0:
-                continue
-            pos = np.searchsorted(fids, cands)
-            pos_c = np.clip(pos, 0, fids.size - 1)
-            counts += fids[pos_c] == cands
-        cands = cands[counts >= min_match]
-    if cands.size == 0:
+    runs = _filtered_runs(term_postings, avgdl, on, off, or_flags, k1, b)
+    leaf_ids = dict(extra_leaf_ids or {})
+    leaf_ids.update((t, ids) for t, (ids, _u) in runs.items())
+    offs, lo, n = _window_offsets(leaf_ids)
+    memo: dict = {}
+    cand = _tree_mask(query, offs, n, memo)
+    if exclude is not None:
+        cand = cand & ~_tree_mask(exclude, offs, n, memo)
+    scored = sorted(t for t in runs if t not in exclude_only)
+    if min_match > 1:
+        # distinct-term match count over the POSITIVE terms (exclude-only
+        # leaves never count toward the quorum)
+        counts = np.zeros(n, dtype=np.int64)
+        for t in scored:
+            counts[offs[t]] += 1
+        cand = cand & (counts >= min_match)
+    idx = np.flatnonzero(cand)
+    if idx.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
 
-    scores = np.zeros(cands.size, dtype=np.float64)
-    for t in sorted(filtered):  # fixed summation order
-        fids, u = filtered[t]
-        if fids.size == 0:
-            continue
-        pos = np.searchsorted(fids, cands)
-        pos_c = np.clip(pos, 0, fids.size - 1)
-        hit = fids[pos_c] == cands
-        scores[hit] += idf.get(t, 0.0) * u[pos_c[hit]]
+    acc = np.zeros(n, dtype=np.float64)
+    for t in scored:  # fixed summation order
+        acc[offs[t]] += idf.get(t, 0.0) * runs[t][1]
+    scores = acc[idx]
+    cands = idx + lo
 
     if demote is not None:
-        dem = eval_bool_tree(demote, leaf_ids)
-        if dem.size:
-            pos = np.searchsorted(dem, cands)
-            pos_c = np.clip(pos, 0, dem.size - 1)
-            hit = dem[pos_c] == cands
-            scores[hit] = scores[hit] * np.float64(demote_factor)
+        hit = _tree_mask(demote, offs, n, memo)[idx]
+        scores[hit] = scores[hit] * np.float64(demote_factor)
 
     if after is not None:
         cands, scores = _rank_after(cands, scores, after)
-        if cands.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-
-    if cands.size > k:
-        # threshold-select (keeps ALL boundary ties), then sort survivors
-        kth = np.partition(-scores, k - 1)[k - 1]
-        keep = np.nonzero(-scores <= kth)[0]
-    else:
-        keep = np.arange(cands.size)
-    order = keep[np.lexsort((cands[keep], -scores[keep]))][:k]
-    return cands[order], scores[order]
+    return _top_k(cands, scores, k)
 
 
 def merge_decoded_runs(runs: list[tuple]) -> tuple:
@@ -507,7 +516,7 @@ def merge_decoded_runs(runs: list[tuple]) -> tuple:
 
 
 def score_segment_dismax(
-    term_postings: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]],
+    term_postings: dict[str, tuple],
     idf: dict[str, float],
     avgdl: float,
     k: int,
@@ -518,7 +527,9 @@ def score_segment_dismax(
     k1: float = K1,
     b: float = B,
 ):
-    """Lucene ``DisjunctionMaxQuery`` over term leaves, vectorized TAAT.
+    """Lucene ``DisjunctionMaxQuery`` over term leaves, vectorized TAAT
+    over the segment's doc-id window (runs as in
+    :func:`score_segment_exhaustive`).
 
     score(d) = (1 - tie) * max_t c_t(d) + tie * sum_t c_t(d) with
     c_t = idf_t * u(tf, dl) — algebraically Lucene's
@@ -531,34 +542,19 @@ def score_segment_dismax(
     clause" semantics BM25's plain sum inverts). Returns the
     segment-local top-k ordered (score desc, doc_id asc), same contract
     as :func:`score_segment_exhaustive`."""
-    filtered: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for t, (ids, tfs, dls, bits) in term_postings.items():
-        m = filter_by_bits_vec(bits, on, off, or_flags)
-        filtered[t] = (ids[m], bm25_u(tfs[m], dls[m], avgdl, k1, b))
-    cands = union_many([f[0] for f in filtered.values()])
-    if cands.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    mx = np.zeros(cands.size, dtype=np.float64)
-    sm = np.zeros(cands.size, dtype=np.float64)
-    for t in sorted(filtered):  # fixed accumulation order (rank identity)
-        fids, u = filtered[t]
-        if fids.size == 0:
-            continue
-        pos = np.searchsorted(fids, cands)
-        pos_c = np.clip(pos, 0, fids.size - 1)
-        hit = fids[pos_c] == cands
-        c = np.zeros(cands.size, dtype=np.float64)
-        c[hit] = idf.get(t, 0.0) * u[pos_c[hit]]
+    runs = _filtered_runs(term_postings, avgdl, on, off, or_flags, k1, b)
+    offs, lo, n = _window_offsets({t: ids for t, (ids, _u) in runs.items()})
+    mx = np.zeros(n, dtype=np.float64)
+    sm = np.zeros(n, dtype=np.float64)
+    hit = np.zeros(n, dtype=bool)
+    for t in sorted(runs):  # fixed accumulation order (rank identity)
+        c = np.zeros(n, dtype=np.float64)  # 0 where t does not match
+        c[offs[t]] = idf.get(t, 0.0) * runs[t][1]
+        hit[offs[t]] = True
         sm += c
         np.maximum(mx, c, out=mx)
-    scores = (1.0 - tie) * mx + tie * sm
-    if cands.size > k:
-        kth = np.partition(-scores, k - 1)[k - 1]
-        keep = np.nonzero(-scores <= kth)[0]
-    else:
-        keep = np.arange(cands.size)
-    order = keep[np.lexsort((cands[keep], -scores[keep]))][:k]
-    return cands[order], scores[order]
+    idx = np.flatnonzero(hit)
+    return _top_k(idx + lo, (1.0 - tie) * mx[idx] + tie * sm[idx], k)
 
 
 # -- block-max interval scorers (WAND / conjunctive) ---------------------------

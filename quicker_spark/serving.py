@@ -23,10 +23,11 @@ boosts, paging cursors, excludes, and quorums; the ``bm25_local_top10``
 driver query certifies it against the DuckDB oracle).
 
 Hot terms stay resident in the form the kernels consume (``df_global``
-+ per-segment ``EncodedPostings`` + decoded runs, LRU-bounded by
-``max_terms``), so a warm query builds no DataFrame and serves at
-kernel speed — the resident-index property the reference's workers have
-by construction. Segments score in the calling thread: the GIL
++ per-segment ``EncodedPostings`` + decoded runs carrying their BM25
+tf-part ``u`` at the searcher's fixed avgdl, LRU-bounded by
+``max_terms``), so a warm query builds no DataFrame, recomputes no
+``u`` and serves at kernel speed — the resident-index property the
+reference's workers have by construction. Segments score in the calling thread: the GIL
 serializes the Python between numpy calls, so a per-query thread pool
 only adds overhead. Many threads may share one searcher: residency is
 mutated under one lock, scoring runs outside it on per-call snapshots.
@@ -102,8 +103,8 @@ class LocalSearcher:
         self.max_terms = int(max_terms)
         self._block_size = int(self.stats["block_size"])
         # resident state, LRU over terms: term -> (df_global,
-        # {segment: EncodedPostings}, {segment: decoded run}); the
-        # decoded dict only grows, and dies with its term's entry
+        # {segment: EncodedPostings}, {segment: decoded run + its u});
+        # the decoded dict only grows, and dies with its term's entry
         self._rows: OrderedDict[str, tuple] = OrderedDict()
         # positional-sidecar residency (phrase serving): term ->
         # {segment: decoded sidecar run}, LRU-bounded by the same cap
@@ -265,9 +266,12 @@ class LocalSearcher:
         """(term, df_global) rows for the ``pref`` string range — a
         pushed-down range filter over the term-sorted stats files (the
         pyarrow analog of the engine's StartsWith dictionary slice;
-        '\\x80' upper-bounds every [a-z0-9_\\x01] vocabulary byte)."""
+        '\\x80' upper-bounds every [a-z0-9_\\x01] vocabulary byte).
+        Every dictionary verb reads through here, so this is where they
+        refuse a generation that maintenance has replaced."""
         import pyarrow.compute as pc
 
+        self._check_fresh()
         filt = (pc.field("term") >= pref) & (pc.field("term")
                                              < pref + "\x80")
         return self._ts_ds.to_table(

@@ -4,7 +4,7 @@ Contract: one row per (top-k hit, matching positive query term);
 ``contrib`` is the exact float64 ``idf_w * u`` product every scorer
 accumulates, so summing a doc's contribs in ascending word order
 reproduces its search score BITWISE (the scorers add terms in
-lexicographic order, kernels.score_segment_exhaustive:424).
+lexicographic order, kernels.score_segment_exhaustive).
 """
 
 from __future__ import annotations

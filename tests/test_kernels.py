@@ -11,10 +11,8 @@ from quicker_spark.functions.kernels import (
     encode_postings,
     eval_bool_tree,
     filter_by_bits_vec,
-    intersect_many,
     score_segment_exhaustive,
     score_segment_wand,
-    union_many,
 )
 from quicker_spark.model import bm25_idf
 
@@ -72,14 +70,32 @@ def test_encode_decode_roundtrip_blocks():
 
 
 def test_set_op_kernels_reference_fixtures():
+    """The reference's IntersectionOfSkipList / UnionOfSkipList fixtures
+    (skiplist_reverse_index.go:77-156), through the tree evaluator."""
     l1 = np.array([1, 4, 5, 7, 9, 11], dtype=np.int64)
     l2 = np.array([2, 4, 5, 8, 9], dtype=np.int64)
     l3 = np.array([3, 5, 7, 9], dtype=np.int64)
-    np.testing.assert_array_equal(intersect_many([l1, l2]), [4, 5, 9])
-    np.testing.assert_array_equal(intersect_many([l1, l2, l3]), [5, 9])
-    np.testing.assert_array_equal(union_many([l1, l2, l3]), [1, 2, 3, 4, 5, 7, 8, 9, 11])
-    assert intersect_many([]).size == 0
-    np.testing.assert_array_equal(intersect_many([l1]), l1)
+    leaf = {"\x01l1": l1, "\x01l2": l2, "\x01l3": l3,
+            "\x01empty": np.empty(0, dtype=np.int64)}
+
+    def kw(*names):
+        return [{"keyword": {"field": "", "word": w}} for w in names]
+
+    np.testing.assert_array_equal(
+        eval_bool_tree({"must": kw("l1", "l2")}, leaf), [4, 5, 9])
+    np.testing.assert_array_equal(
+        eval_bool_tree({"must": kw("l1", "l2", "l3")}, leaf), [5, 9])
+    np.testing.assert_array_equal(
+        eval_bool_tree({"should": kw("l1", "l2", "l3")}, leaf),
+        [1, 2, 3, 4, 5, 7, 8, 9, 11])
+    # 0 lists -> empty, 1 list -> itself, an empty list empties the AND
+    assert eval_bool_tree({"must": []}, leaf).size == 0
+    assert eval_bool_tree({"should": []}, leaf).size == 0
+    np.testing.assert_array_equal(eval_bool_tree({"must": kw("l1")}, leaf), l1)
+    assert eval_bool_tree({"must": kw("l1", "empty", "l2")}, leaf).size == 0
+    assert eval_bool_tree({"must": kw("l1", "absent")}, leaf).size == 0
+    out = eval_bool_tree({"must": kw("l1", "l2")}, leaf)
+    assert out.dtype == np.int64
 
 
 def test_eval_bool_tree_nested():

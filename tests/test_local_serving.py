@@ -277,6 +277,14 @@ def test_stale_after_maintenance(spark, tmp_path):
     delete_docs(spark, out, [0, 1])
     with pytest.raises(StaleIndexError):
         ls.search(Or(_t("def")), k=3)
+    # the term-dictionary verbs read term_stats/, which maintenance swaps:
+    # they must refuse the old generation too, not hit a missing file
+    for verb, args in (("expand_prefix", ("content", "de")),
+                       ("expand_regexp", ("content", "de.")),
+                       ("expand_fuzzy", ("content", "def")),
+                       ("suggest", ("content", "deff"))):
+        with pytest.raises(StaleIndexError):
+            getattr(ls, verb)(*args)
     # a fresh open serves the new generation
     fresh = LocalSearcher(out)
     assert 0 not in set(fresh.search(Or(_t("def")), k=50)["doc_id"])
