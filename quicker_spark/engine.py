@@ -38,9 +38,14 @@ from quicker_spark.functions.kernels import (
     score_segment_wand,
 )
 from quicker_spark.functions.buckets import term_bucket
+from quicker_spark.functions.phrase import (
+    decode_positions_row,
+    phrase_match_docs,
+)
 from quicker_spark.model import bm25_idf, term_key
 from quicker_spark.operators.build import IndexConfig
-from quicker_spark.plans.term_query import NewTermQuery, Or, TermQuery
+from quicker_spark.plans.term_query import (AndNot, NewTermQuery, Or,
+                                            TermQuery)
 
 
 def _row_to_encoded(row, block_size: int) -> EncodedPostings:
@@ -117,16 +122,19 @@ class SearchSpec(NamedTuple):
     """Validated + resolved search request — shared by the Spark engine
     (:meth:`SearchEngine.search`) and the resident single-node server
     (:class:`quicker_spark.serving.LocalSearcher`), so both paths make
-    byte-identical strategy choices for the same request."""
+    byte-identical strategy choices for the same request. The trees
+    ride along parsed (:meth:`TermQuery.to_dict` form), the shape the
+    kernels evaluate."""
+    query: dict
     terms: list[str]
     strategy: str
     msm: int
     neg_terms: frozenset[str]
-    exclude_json: str | None
+    exclude: dict | None    # must_not tree; None when it has no terms
     after: tuple[float, int] | None
     empty: bool   # request is valid but can match nothing
     phrases: tuple = ()   # validated PhraseSpec clauses
-    demote_json: str | None = None   # ES boosting-query negative tree
+    demote: dict | None = None       # ES boosting-query negative tree
     demote_factor: float = 1.0       # ES negative_boost
 
 
@@ -195,7 +203,8 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
     terms = sorted(pos | {k for p in phrases if p.score_words
                           for k in p.term_keys})
     if not terms and not phrases:
-        return SearchSpec([], "taat", 0, frozenset(), None, None, True)
+        return SearchSpec(q.to_dict(), [], "taat", 0, frozenset(), None,
+                          None, True)
     empty = False
     needs_taat = bool(phrases) or demote is not None or q.has_must_not() \
         or (exclude is not None and exclude.has_must_not())
@@ -222,23 +231,23 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
     # exclusion, excluded from scoring (exclude_only)
     neg_terms: set[str] = {t for t in all_terms
                            if not t.startswith(PSEUDO_PREFIX)} - set(terms)
-    exclude_json = None
+    exclude_tree = None
     if exclude is not None:
         neg_terms |= {t for t in exclude.terms()
                       if not t.startswith(PSEUDO_PREFIX)} - set(terms)
         if exclude.terms():
-            exclude_json = exclude.to_json()
+            exclude_tree = exclude.to_dict()
             if mode not in ("auto", "taat"):
                 raise ValueError(
                     "exclude requires mode='auto' or 'taat' (pruned "
                     "scorers cannot exclude losslessly)")
             mode = "taat"
-    demote_json = None
+    demote_tree = None
     if demote is not None:
         # demote-only terms: scanned so the kernel can evaluate the
         # demotion match, excluded from scoring — same split as exclude
         neg_terms |= set(demote.terms()) - set(terms)
-        demote_json = demote.to_json()
+        demote_tree = demote.to_dict()
     if boosts:
         bad = {t: w for t, w in boosts.items() if not w > 0}
         if bad:
@@ -267,9 +276,50 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
                 "mode='wand' requires a flat OR-of-terms query; "
                 "use mode='auto' or 'taat' for nested trees")
         strategy = mode
-    return SearchSpec(terms, strategy, msm, frozenset(neg_terms),
-                      exclude_json, after, empty, phrases,
-                      demote_json, float(demote_factor))
+    return SearchSpec(q.to_dict(), terms, strategy, msm,
+                      frozenset(neg_terms), exclude_tree, after, empty,
+                      phrases, demote_tree, float(demote_factor))
+
+
+def full_match_spec(q: TermQuery) -> SearchSpec:
+    """The request whose answer is EVERY boolean match of ``q``,
+    BM25-scored: TAAT over the tree, negated-only terms scanned for the
+    in-tree setdiff and never scored. Shared by both tiers'
+    ``_scored_matches`` so they reject the same requests."""
+    terms = q.terms()
+    if any(t.startswith(PSEUDO_PREFIX) for t in terms):
+        raise ValueError(
+            "phrase pseudo-leaves are not supported on the "
+            "full-match-set scoring path (collapse/sort/facet) — "
+            "it scans postings, not the positional sidecar")
+    pos = q.pos_terms()
+    return SearchSpec(q.to_dict(), sorted(pos), "taat", 0,
+                      frozenset(terms - pos), None, None, not terms)
+
+
+def phrase_query(words, field: str, gap: int):
+    """``search_phrase``'s request on both tiers -> (tree, phrases) for
+    ``search``: one pseudo-leaf whose candidates are the phrase's
+    matches, scored as its distinct words' BM25 sum. None when no word
+    is left."""
+    words = tuple(str(w).lower() for w in words if str(w))
+    if not words:
+        return None
+    key = PSEUDO_PREFIX + "phrase"
+    return TermQuery(keyword=key), (PhraseSpec(key, field, words, int(gap)),)
+
+
+def phrase_leaf_ids(phrases: tuple, runs: dict, on: int, off: int,
+                    or_flags: tuple) -> dict:
+    """{pseudo-leaf key: the phrase's bit-filtered match docs} in one
+    segment, from its decoded sidecar ``runs`` ({term: run}); a phrase
+    with a word absent from the segment matches nothing there (the conj
+    early-exit)."""
+    return {p.key: (phrase_match_docs(list(p.term_keys), runs, gap=p.gap,
+                                      on=on, off=off, or_flags=or_flags)
+                    if set(p.term_keys) <= runs.keys()
+                    else np.empty(0, dtype=np.int64))
+            for p in phrases}
 
 
 def term_filter(ts_ds, terms: list[str]):
@@ -313,19 +363,6 @@ def _frame_postings(pdf: pd.DataFrame, block_size: int, dfg: dict) -> dict:
             for vals in zip(*(pdf[c].to_numpy() for c in cols)))
     return {r["term"]: (dfg[r["term"]], _row_to_encoded(r, block_size))
             for r in rows}
-
-
-def full_match_terms(q: TermQuery) -> tuple[set[str], set[str]]:
-    """Validate a full-match-set request -> (scan terms, negated-only
-    terms: scanned for the in-tree setdiff, never scored). Shared by
-    both tiers' ``_scored_matches`` so they reject the same requests."""
-    terms = q.terms()
-    if any(t.startswith(PSEUDO_PREFIX) for t in terms):
-        raise ValueError(
-            "phrase pseudo-leaves are not supported on the "
-            "full-match-set scoring path (collapse/sort/facet) — "
-            "it scans postings, not the positional sidecar")
-    return terms, terms - q.pos_terms()
 
 
 def _score_segment_rows(postings: dict, query: dict, strategy: str,
@@ -419,64 +456,53 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
         demote=demote, demote_factor=demote_factor)
 
 
-def _make_topk_kernel(query_json: str, n_docs: int, avgdl: float,
-                      k: int, on: int, off: int, or_flags: tuple,
-                      k1: float, b: float, block_size: int, strategy: str,
-                      n_query_terms: int, dfg: dict, boosts: tuple = (),
-                      after: tuple | None = None,
-                      exclude_json: str | None = None,
-                      exclude_only: tuple = (),
-                      min_match: int = 0,
-                      phrases: tuple = (),
-                      demote_json: str | None = None,
-                      demote_factor: float = 1.0):
-    """``dfg``: :func:`read_df_global` of the scanned terms, read on
-    the driver — the scan needs no term-stats join, nor a job for one.
+def _make_spec_kernel(entries: list, n_docs: int, avgdl: float, k: int,
+                      k1: float, b: float, block_size: int, dfg: dict):
+    """Per-segment kernel for resolved requests ``entries`` = [(qid,
+    SearchSpec, on, off, or_flags, boosts)] -> (qid, doc_id, score).
+    Every entry runs :func:`_score_segment_rows`, the body the resident
+    tier runs, so a batch is rank- and score-identical to one-at-a-time
+    searches on either tier; runs shared by several entries decode once
+    per segment (``dec_cache``; flags, boosts and cursors all apply
+    after decode). ``dfg``: :func:`read_df_global` of the scanned terms,
+    read on the driver — the scan needs no term-stats join, nor a job
+    for one.
 
-    ``phrases``: PhraseSpec-shaped tuples. When present, the kernel
-    input frame is the postings scan UNIONED with the positional
-    sidecar rows for the phrase terms (the sidecar rows carry a
-    non-null ``pos`` stream; postings rows carry null). Per segment the
-    kernel folds each phrase's adjacency match set from the positions
-    rows and injects it as that pseudo-leaf's candidate array — the
-    scoring walk itself is the unmodified TAAT path."""
-    query = json.loads(query_json)
-    boost_map = dict(boosts) if boosts else None
-    exclude = json.loads(exclude_json) if exclude_json else None
-    demote = json.loads(demote_json) if demote_json else None
-    excl_only = frozenset(exclude_only)
-    phrase_specs = tuple(PhraseSpec(*p) for p in phrases)
+    When some spec has phrases, the input frame is the postings scan
+    UNIONED with the positional sidecar rows of the phrase words (they
+    carry a non-null ``pos`` stream); per segment each phrase's match
+    set becomes its pseudo-leaf's candidate array
+    (:func:`phrase_leaf_ids`) and the scoring walk is the unmodified
+    TAAT path."""
+    with_pos = any(spec.phrases for _, spec, *_ in entries)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        extra = None
-        if phrase_specs:
-            from quicker_spark.functions.phrase import (
-                decode_positions_row, phrase_match_docs)
+        runs: dict = {}
+        if with_pos:
             is_pos = pdf["pos"].notna()
             pos_rows, pdf = pdf[is_pos], pdf[~is_pos]
-            decoded = {
-                r["term"]: decode_positions_row(
-                    bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
-                    bytes(r["bits"]), bytes(r["pos"]))
-                for _, r in pos_rows.iterrows()}
-            extra = {}
-            for p in phrase_specs:
-                if set(p.term_keys) <= set(decoded):
-                    extra[p.key] = phrase_match_docs(
-                        list(p.term_keys), decoded, gap=p.gap,
-                        on=on, off=off, or_flags=or_flags)
-                else:
-                    # a phrase term absent from this segment: no match
-                    # here (the conj early-exit)
-                    extra[p.key] = np.empty(0, dtype=np.int64)
-        ids, scores = _score_segment_rows(
-            _frame_postings(pdf, block_size, dfg), query, strategy,
-            n_query_terms, n_docs, avgdl, k, on, off, or_flags, k1, b,
-            boosts=boost_map,
-            after=after, exclude=exclude, exclude_only=excl_only,
-            min_match=min_match, extra_leaf_ids=extra,
-            demote=demote, demote_factor=demote_factor)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
+            runs = {r["term"]: decode_positions_row(
+                        bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
+                        bytes(r["bits"]), bytes(r["pos"]))
+                    for _, r in pos_rows.iterrows()}
+        postings = _frame_postings(pdf, block_size, dfg)
+        dec_cache: dict = {}
+        outs = []
+        for qid, spec, on, off, or_flags, boosts in entries:
+            scan = set(spec.terms) | spec.neg_terms
+            ids, scores = _score_segment_rows(
+                {t: p for t, p in postings.items() if t in scan},
+                spec.query, spec.strategy, len(spec.terms), n_docs, avgdl,
+                k, on, off, or_flags, k1, b, dec_cache=dec_cache,
+                boosts=boosts, after=spec.after, exclude=spec.exclude,
+                exclude_only=spec.neg_terms, min_match=spec.msm,
+                extra_leaf_ids=(phrase_leaf_ids(spec.phrases, runs, on, off,
+                                                or_flags)
+                                if spec.phrases else None),
+                demote=spec.demote, demote_factor=spec.demote_factor)
+            outs.append(pd.DataFrame(
+                {"qid": qid, "doc_id": ids, "score": scores}))
+        return pd.concat(outs, ignore_index=True)
 
     return kernel
 
@@ -523,87 +549,6 @@ def _make_dismax_kernel(tie: float, n_docs: int, avgdl: float, k: int,
         idf = {t: bm25_idf(n_docs, dfg[t]) for t in dec}
         ids, scores = score_segment_dismax(
             dec, idf, avgdl, k, tie, on, off, or_flags, k1, b)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
-
-    return kernel
-
-
-def _make_batch_kernel(specs: list, n_docs: int, avgdl: float,
-                       k: int, k1: float, b: float, block_size: int,
-                       dfg: dict):
-    """Per-segment kernel scoring MANY queries in one pass over the
-    segment's (deduplicated) posting rows. ``specs`` is a list of
-    (qid, query_json, strategy, terms_tuple, n_query_terms, on, off,
-    or_flags, boosts_tuple, after, exclude_json, exclude_only) — the
-    bit-flag filter, per-term boosts, paging cursor, and must_not tree
-    are all per query, so a batch can multiplex heterogeneous requests
-    exactly like the reference's concurrent RPCs. Each query runs the
-    exact single-query code path (:func:`_score_segment_rows`), so
-    batch results are rank- and score-identical to one-at-a-time
-    searches. Posting runs shared by several queries decode once per
-    segment via the caches (safe across differing flags/boosts/cursors:
-    all of those apply inside the scorers, after decode)."""
-    parsed = [(qid, json.loads(qj), strat, set(terms), nqt, on, off, orf,
-               dict(bst) if bst else None, aft,
-               json.loads(xj) if xj else None, frozenset(xonly), msm)
-              for qid, qj, strat, terms, nqt, on, off, orf, bst, aft,
-              xj, xonly, msm in specs]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        postings = _frame_postings(pdf, block_size, dfg)
-        dec_cache: dict = {}
-        outs = []
-        for (qid, query, strat, terms, nqt, on, off, or_flags, bst,
-             aft, excl, xonly, msm) in parsed:
-            sub = {t: p for t, p in postings.items() if t in terms}
-            ids, scores = _score_segment_rows(
-                sub, query, strat, nqt, n_docs, avgdl,
-                k, on, off, or_flags, k1, b,
-                dec_cache=dec_cache, boosts=bst,
-                after=aft, exclude=excl, exclude_only=xonly,
-                min_match=msm)
-            if len(ids):
-                outs.append(pd.DataFrame(
-                    {"qid": qid, "doc_id": ids, "score": scores}))
-        if not outs:
-            return pd.DataFrame({"qid": pd.Series(dtype="object"),
-                                 "doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        return pd.concat(outs, ignore_index=True)
-
-    return kernel
-
-
-def _make_phrase_kernel(phrase_terms: tuple, n_docs: int, avgdl: float,
-                        k: int, on: int, off: int, or_flags: tuple,
-                        k1: float, b: float, dfg: dict, gap: int = 0):
-    """Per-segment exact-phrase scorer over the positional sidecar rows
-    (one row per phrase term present in the segment); ``dfg`` as in
-    :func:`_make_topk_kernel`."""
-    from quicker_spark.functions.phrase import (
-        decode_positions_row,
-        score_segment_phrase,
-    )
-    from quicker_spark.model import bm25_idf
-
-    need = set(phrase_terms)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if set(pdf["term"]) < need:
-            # a phrase term absent from this segment: no match here
-            # (the conj early-exit, skiplist_reverse_index.go:88-90)
-            return empty
-        decoded, idf = {}, {}
-        for _, r in pdf.iterrows():
-            decoded[r["term"]] = decode_positions_row(
-                bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
-                bytes(r["bits"]), bytes(r["pos"]))
-            idf[r["term"]] = bm25_idf(n_docs, dfg[r["term"]])
-        ids, scores = score_segment_phrase(
-            list(phrase_terms), decoded, idf, avgdl, k, on, off,
-            or_flags, k1, b, gap=gap)
         return pd.DataFrame({"doc_id": ids, "score": scores})
 
     return kernel
@@ -826,29 +771,34 @@ class SearchEngine:
                                    demote_factor=demote_factor)
         if spec.empty:
             return self._empty_hits(hydrate)
-        terms, strategy, msm = spec.terms, spec.strategy, spec.msm
-        neg_terms, exclude_json = spec.neg_terms, spec.exclude_json
-        after = spec.after
-        scan_terms = set(terms) | neg_terms
-        kern = _make_topk_kernel(
-            q.to_json(), int(self.stats["n_docs"]), float(self.stats["avgdl"]),
-            k, on, off, tuple(or_flags), self.stats["k1"], self.stats["b"],
-            self.stats["block_size"], strategy, len(terms),
-            read_df_global(self._ts_ds, scan_terms),
-            boosts=tuple(sorted((boosts or {}).items())), after=after,
-            exclude_json=exclude_json, exclude_only=tuple(sorted(neg_terms)),
-            min_match=msm, phrases=spec.phrases,
-            demote_json=spec.demote_json, demote_factor=spec.demote_factor,
-        )
-        scan = self._postings_for(scan_terms)
-        if spec.phrases:
-            scan = scan.unionByName(
-                self._positions_for(spec.phrases),
-                allowMissingColumns=True)
-        seg_hits = (scan.groupBy("segment_id")
-                    .applyInPandas(kern, "doc_id long, score double"))
-        hits = seg_hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        hits = (self._spec_hits(
+                    [("", spec, on, off, tuple(or_flags), boosts or None)], k)
+                .drop("qid")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         return self.hydrate(hits) if hydrate else hits
+
+    def _spec_hits(self, entries: list, k: int) -> DataFrame:
+        """Per-segment (qid, doc_id, score) top-``k`` hits of resolved
+        requests ``entries`` = [(qid, SearchSpec, on, off, or_flags,
+        boosts)] — the one plan every BM25 top-k verb runs: a
+        term-pruned postings scan over every entry's terms (UNION the
+        sidecar rows of their phrase words), one driver read of their
+        df_global, one Arrow kernel per segment
+        (:func:`_make_spec_kernel`)."""
+        scan_terms: set[str] = set()
+        for _, spec, *_ in entries:
+            scan_terms |= set(spec.terms) | spec.neg_terms
+        phrases = tuple(p for _, spec, *_ in entries for p in spec.phrases)
+        kern = _make_spec_kernel(
+            entries, int(self.stats["n_docs"]), float(self.stats["avgdl"]),
+            k, self.stats["k1"], self.stats["b"], self.stats["block_size"],
+            read_df_global(self._ts_ds, scan_terms))
+        scan = self._postings_for(scan_terms)
+        if phrases:
+            scan = scan.unionByName(self._positions_for(phrases),
+                                    allowMissingColumns=True)
+        return (scan.groupBy("segment_id")
+                .applyInPandas(kern, "qid string, doc_id long, score double"))
 
     def _positions_for(self, phrases: tuple) -> DataFrame:
         """Positional-sidecar rows for every phrase term, pruned the
@@ -868,7 +818,7 @@ class SearchEngine:
                 raise ValueError(
                     f"field {p.field!r} has no positions (sidecar "
                     f"covers {meta['fields']})")
-        pterms = {k for p in phrases for k in PhraseSpec(*p).term_keys}
+        pterms = {k for p in phrases for k in p.term_keys}
         return (self._bucket_filter(
                     self.spark.read.parquet(
                         os.path.join(self.index_dir, "positions")),
@@ -899,9 +849,11 @@ class SearchEngine:
         resident index, index_service/sentinel.go:137-187 — here the
         index is storage, so the scan is the cost to amortize).
 
-        Each query runs the exact single-query code path per segment
-        (same cost-based strategy choice, same float op order), so
-        results are rank- and score-identical to :meth:`search` — the
+        Each query resolves through :func:`resolve_search_spec` and runs
+        the exact single-query code path per segment (same cost-based
+        strategy choice, same float op order), so results are rank- and
+        score-identical to :meth:`search` and invalid requests raise
+        :meth:`search`'s ValueError, prefixed with their query id — the
         batch is a latency/throughput optimization, never a semantics
         change.
 
@@ -928,67 +880,27 @@ class SearchEngine:
         after = after or {}
         excludes = excludes or {}
         min_should_match = min_should_match or {}
-        specs = []
-        all_terms: set[str] = set()
+        entries = []
         for qid, q in queries.items():
-            all_q = q.terms()
-            if any(t.startswith(PSEUDO_PREFIX) for t in all_q):
-                raise ValueError(
-                    f"queries[{qid!r}] has phrase pseudo-leaves — "
-                    "phrase clauses are solo-search only (the batch "
-                    "kernel scans postings, not the positional sidecar)")
-            terms = q.pos_terms()
-            if not terms:
-                continue
-            # nested-must_not terms: scanned for the in-tree setdiff,
-            # never scored (exclude_only) — same split as solo search
-            nested_neg = all_q - terms
-            q_msm = int(min_should_match.get(qid, 0))
-            if q_msm > 1:
-                if not _is_flat_or(q):
-                    raise ValueError(
-                        f"min_should_match[{qid!r}] requires a flat "
-                        "OR-of-terms query")
-                if q_msm > len(set(terms)):
-                    continue  # quorum unreachable: no rows for this qid
-            excl = excludes.get(qid)
-            neg_terms = nested_neg | (
-                (set(excl.terms()) - set(terms)) if excl else set())
-            excl_json = excl.to_json() if excl and excl.terms() else None
-            strategy = ("taat" if excl_json or q_msm > 1 or nested_neg
-                        else "wand_auto" if _is_flat_or(q)
-                        else "conj_auto" if _is_flat_and(q) else "taat")
+            try:
+                spec = resolve_search_spec(
+                    q, boosts=boosts.get(qid), after=after.get(qid),
+                    exclude=excludes.get(qid),
+                    min_should_match=min_should_match.get(qid, 0))
+            except ValueError as e:
+                raise ValueError(f"queries[{qid!r}]: {e}") from None
+            if spec.empty:
+                continue   # no terms, or an unreachable quorum: no rows
             q_on, q_off, q_orf = flags.get(qid, (on, off, or_flags))
-            q_boosts = boosts.get(qid) or {}
-            bad = {t: w for t, w in q_boosts.items() if not w > 0}
-            if bad:
-                raise ValueError(f"boosts[{qid!r}] must be > 0: {bad}")
-            q_after = after.get(qid)
-            if q_after is not None:
-                q_after = (float(q_after[0]), int(q_after[1]))
-            specs.append((str(qid), q.to_json(), strategy,
-                          tuple(sorted(set(terms) | neg_terms)), len(terms),
-                          int(q_on), int(q_off), tuple(q_orf),
-                          tuple(sorted(q_boosts.items())),
-                          q_after, excl_json, tuple(sorted(neg_terms)),
-                          q_msm))
-            all_terms |= set(terms) | neg_terms
-        if not specs:
+            entries.append((str(qid), spec, int(q_on), int(q_off),
+                            tuple(q_orf), boosts.get(qid) or None))
+        if not entries:
             df = self.spark.createDataFrame(
                 [], "qid string, doc_id long, score double")
             return self.hydrate(df) if hydrate else df
-        kern = _make_batch_kernel(
-            specs, int(self.stats["n_docs"]), float(self.stats["avgdl"]),
-            k, self.stats["k1"], self.stats["b"],
-            self.stats["block_size"], read_df_global(self._ts_ds, all_terms))
-        seg_hits = (
-            self._postings_for(all_terms)
-            .groupBy("segment_id")
-            .applyInPandas(kern, "qid string, doc_id long, score double")
-        )
         w = Window.partitionBy("qid").orderBy(F.desc("score"),
                                               F.asc("doc_id"))
-        hits = (seg_hits
+        hits = (self._spec_hits(entries, k)
                 .withColumn("_rnk", F.row_number().over(w))
                 .filter(F.col("_rnk") <= k)
                 .drop("_rnk")
@@ -1011,39 +923,15 @@ class SearchEngine:
         ordered proximity: each next word within ``gap`` intervening
         tokens of the previous (0 = exact phrase).
 
-        Plan shape = the BM25 serving path: term-pruned positions scan
-        (row-group stats on term-sorted files), df_global in the kernel
-        closure, one Arrow kernel per segment, TakeOrdered top-k merge."""
-        from quicker_spark.operators.positions import positions_meta
-
-        meta = positions_meta(self.index_dir)
-        if meta is None:
-            raise ValueError(
-                "no positional sidecar at this index; run "
-                "operators.positions.build_positions(spark, index_dir) "
-                "first")
-        if field not in meta["fields"]:
-            raise ValueError(
-                f"field {field!r} has no positions (sidecar covers "
-                f"{meta['fields']})")
-        words = [str(w).lower() for w in words if str(w)]
-        if not words:
+        Served as :meth:`search` of one phrase clause
+        (:func:`phrase_query`): same plan, same kernel, same top-k
+        merge."""
+        req = phrase_query(words, field, gap)
+        if req is None:
             return self._empty_hits(hydrate)
-        terms = tuple(f"{field}\x01{w}" for w in words)
-        kern = _make_phrase_kernel(
-            terms, int(self.stats["n_docs"]), float(self.stats["avgdl"]),
-            k, on, off, tuple(or_flags), self.stats["k1"],
-            self.stats["b"], read_df_global(self._ts_ds, terms),
-            gap=int(gap))
-        pos = (self._bucket_filter(
-                   self.spark.read.parquet(
-                       os.path.join(self.index_dir, "positions")),
-                   set(terms))
-               .filter(F.col("term").isin(list(set(terms)))))
-        seg_hits = (pos.groupBy("segment_id")
-                    .applyInPandas(kern, "doc_id long, score double"))
-        hits = seg_hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return self.hydrate(hits) if hydrate else hits
+        q, phrases = req
+        return self.search(q, k=k, on=on, off=off, or_flags=or_flags,
+                           phrases=phrases, hydrate=hydrate)
 
     def highlight(self, hits: DataFrame, words, field: str = "content",
                   window: int = 5) -> DataFrame:
@@ -1060,7 +948,6 @@ class SearchEngine:
         :meth:`hydrate`: post-limit hits only (> _HYDRATE_MAX raises).
         No reference analog (the reference index stores no positions,
         skiplist_reverse_index.go:23-36)."""
-        from quicker_spark.functions.phrase import decode_positions_row
         from quicker_spark.functions.tokenize import tokenize_py
         from quicker_spark.operators.positions import positions_meta
 
@@ -1475,20 +1362,13 @@ class SearchEngine:
         so nothing is dropped. The building block for operators that
         rank within the full match set (field collapsing); cost is
         proportional to the match set, exactly like the boolean path."""
-        terms, neg = full_match_terms(q)
-        if not terms:
+        spec = full_match_spec(q)
+        if spec.empty:
             return self.spark.createDataFrame(
                 [], "doc_id long, score double")
-        n_docs = int(self.stats["n_docs"])
-        kern = _make_topk_kernel(
-            q.to_json(), n_docs, float(self.stats["avgdl"]),
-            n_docs, on, off, tuple(or_flags), self.stats["k1"],
-            self.stats["b"], self.stats["block_size"], "taat",
-            len(terms - neg), read_df_global(self._ts_ds, terms),
-            exclude_only=tuple(sorted(neg)))
-        return (self._postings_for(set(terms))
-                .groupBy("segment_id")
-                .applyInPandas(kern, "doc_id long, score double"))
+        return self._spec_hits(
+            [("", spec, on, off, tuple(or_flags), None)],
+            int(self.stats["n_docs"])).drop("qid")
 
     def search_rescore(self, q: TermQuery, rescore_q: TermQuery,
                        k: int = 10, window_size: int = 50,
@@ -1910,33 +1790,15 @@ class SearchEngine:
                         hydrate: bool = False) -> DataFrame:
         """Boolean must_not (ES bool-query shape, beyond the reference's
         And/Or IR): all matches of ``q`` MINUS all matches of
-        ``exclude``, ascending doc_id. Both trees evaluate inside ONE
-        per-segment kernel over one shared term-pruned postings scan —
-        the exclusion is a row-local mask subtraction, so there is no
-        second job and no anti-join shuffle; the scan reads exactly the union
-        of both trees' terms. Bit filters apply to both sides (the
+        ``exclude``, ascending doc_id — :meth:`search_bool` of
+        ``AndNot(q, exclude)``, so both trees evaluate inside ONE
+        per-segment kernel over one shared term-pruned postings scan
+        (no second job, no anti-join shuffle) and phrase pseudo-leaves
+        are refused the same way. Bit filters apply to both sides (the
         flag context frames the whole request). A bare NOT is
         deliberately unsupported: its match set is corpus-sized."""
-        terms = set(q.terms())
-        neg_terms = set(exclude.terms())
-        if not terms:
-            return self._empty_bool(hydrate)
-        if not neg_terms:
-            return self.search_bool(q, on=on, off=off, or_flags=or_flags,
-                                    hydrate=hydrate)
-        # q MINUS exclude is the tree {must: [q], must_not: [exclude]}:
-        # both sides evaluate over the same leaf masks in one kernel
-        tree = json.dumps({"must": [json.loads(q.to_json())],
-                           "must_not": [json.loads(exclude.to_json())]})
-        kern = _make_bool_kernel(tree, on, off, tuple(or_flags),
-                                 self.stats["block_size"])
-        out = (
-            self._postings_for(terms | neg_terms)
-            .groupBy("segment_id")
-            .applyInPandas(kern, "doc_id long")
-            .orderBy("doc_id")
-        )
-        return self.hydrate_join(out) if hydrate else out
+        return self.search_bool(AndNot(q, exclude), on=on, off=off,
+                                or_flags=or_flags, hydrate=hydrate)
 
     _PAYLOAD_COLS = ("doc_id", "id", "repo", "path", "commit", "lang",
                      "doc_sha")

@@ -1,4 +1,4 @@
-"""Positional postings: codec + phrase-scoring kernel.
+"""Positional postings: codec + phrase match-set kernel.
 
 The reference engine has no positional index — its inverted index stores
 (DocId, bits) pairs only (reference: internal/reverseindex/
@@ -21,17 +21,15 @@ Row layout per (segment_id, term): five byte streams —
 A phrase is evaluated per segment entirely in numpy: decode each term's
 occurrence set as sorted ``doc_id * 2^32 + position`` keys, then fold the
 adjacency join ``S <- intersect(S + 1, keys(term_i))`` across the phrase —
-after the fold, S holds one key per phrase occurrence. Matching docs are
-scored with the SAME BM25 sum the AND query path uses (per-term idf x u
-over the full term tf), so a phrase behaves like the AND of its terms
-restricted to docs where the terms are ADJACENT IN ORDER — the contract
-the DuckDB oracle reproduces with a separator-run regex over the same
-tokenizer spec (see driver_queries.sql_bm25_topk's phrase candidates).
-
-Scale shape: the scan is pruned to the phrase's terms (parquet row-group
-stats on the term-sorted files), segments score independently (one Arrow
-kernel per segment directory), and the cross-segment merge is a top-k
-TakeOrdered — identical to the BM25 serving path.
+after the fold, S holds one key per phrase occurrence. The match set is
+all this module computes: it becomes a phrase clause's pseudo-leaf
+candidate array (``engine.phrase_leaf_ids``), and the TAAT scorer scores
+the candidates with the same per-term BM25 sum as any query, so a phrase
+behaves like the AND of its words restricted to docs where they are
+ADJACENT IN ORDER — the contract the DuckDB oracle reproduces with a
+separator-run regex over the same tokenizer spec (see
+driver_queries.sql_bm25_topk's phrase candidates) and ``oracle.Oracle``
+with a token-stream scan.
 """
 
 from __future__ import annotations
@@ -42,7 +40,7 @@ from quicker_spark.functions.codec import (
     varbyte_decode,
     varbyte_encode_with_counts,
 )
-from quicker_spark.functions.kernels import bm25_u, filter_by_bits_vec
+from quicker_spark.functions.kernels import filter_by_bits_vec
 
 POSITIONS_SCHEMA = (
     "segment_id long, term string, df long, ids binary, tfs binary, "
@@ -178,12 +176,16 @@ def phrase_match_docs(phrase_terms: list[str], decoded: dict,
                       gap: int = 0, on: int = 0, off: int = 0,
                       or_flags: tuple = ()) -> np.ndarray:
     """Sorted doc ids of one segment's phrase / ordered-proximity
-    matches, bit-feature-filtered — the match-set half of
-    :func:`score_segment_phrase`, reusable as a PSEUDO-LEAF candidate
-    array when a phrase is one clause of a larger boolean query
-    (engine.search ``phrases=``). ``decoded`` must contain every term
-    in ``phrase_terms`` (callers early-exit otherwise); the adjacency
-    fold and the clamped proximity window are documented on the module.
+    matches, bit-feature-filtered — a phrase clause's PSEUDO-LEAF
+    candidate array (engine.search ``phrases=``).
+
+    ``decoded``: term -> (ids, tfs, dls, bits, pos) from
+    :func:`decode_positions_row`; must contain every term in
+    ``phrase_terms`` (callers early-exit otherwise). ``gap`` is the
+    maximum number of tokens allowed BETWEEN each adjacent pair of
+    phrase words (0 = exact adjacency; G > 0 = ordered proximity, each
+    next word within G+1 tokens of the previous, the window clamped to
+    the same doc).
     """
     if not phrase_terms:
         return np.empty(0, dtype=np.int64)
@@ -212,43 +214,3 @@ def phrase_match_docs(phrase_terms: list[str], decoded: dict,
     keep = filter_by_bits_vec(bits0[np.searchsorted(ids0, match)],
                               on, off, or_flags)
     return match[keep]
-
-
-def score_segment_phrase(phrase_terms: list[str], decoded: dict,
-                         idf: dict, avgdl: float, k: int,
-                         on: int, off: int, or_flags: tuple,
-                         k1: float, b: float, gap: int = 0):
-    """Exact-phrase / ordered-proximity matches + BM25 scores for one
-    segment.
-
-    ``decoded``: term -> (ids, tfs, dls, bits, pos) from
-    :func:`decode_positions_row`; must contain every term in
-    ``phrase_terms`` (callers early-exit otherwise). ``gap`` is the
-    maximum number of tokens allowed BETWEEN each adjacent pair of
-    phrase words (0 = exact adjacency — the phrase contract; G > 0 =
-    ordered proximity, each next word within G+1 tokens of the
-    previous). Returns (doc_ids, scores) with scores = sum over the
-    phrase's DISTINCT terms of idf_t x u(tf_t, dl) — the same per-term
-    math as the AND query path, restricted to the proximity match set.
-    """
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-    if not phrase_terms:
-        return empty
-    match = phrase_match_docs(phrase_terms, decoded, gap=gap,
-                              on=on, off=off, or_flags=or_flags)
-    if not len(match):
-        return empty
-    ids0, _tfs0, dls0, _bits0, _ = decoded[phrase_terms[0]]
-    dl = dls0[np.searchsorted(ids0, match)]
-
-    scores = np.zeros(len(match), dtype=np.float64)
-    for t in dict.fromkeys(phrase_terms):  # distinct, stable order
-        ids_t, tfs_t, _, _, _ = decoded[t]
-        tf = tfs_t[np.searchsorted(ids_t, match)]
-        scores += idf.get(t, 0.0) * bm25_u(tf, dl, avgdl, k1, b)
-
-    if len(match) > k:
-        top = np.lexsort((match, -scores))[:k]
-        return match[top], scores[top]
-    order = np.lexsort((match, -scores))
-    return match[order], scores[order]

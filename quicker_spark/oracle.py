@@ -80,6 +80,8 @@ class Oracle:
             (doc_key_sha(r["repo"], r["path"], r["commit"]), r) for r in rows
         )
         self.docs: dict[int, dict] = {}
+        # per doc, each field's token stream (phrase matching)
+        self.tokens: dict[int, dict[str, list[str]]] = {}
         self.postings: dict[str, dict[int, int]] = {}
         self.doc_len: dict[int, int] = {}
         for doc_id, (_sha, r) in enumerate(keyed):
@@ -101,6 +103,7 @@ class Oracle:
                     text["content"].encode()).hexdigest(),
                 **{k: r[k] for k in ("repo", "path", "commit", "lang")},
             }
+            self.tokens[doc_id] = fields
             self.doc_len[doc_id] = len(toks)
             for f, words in fields.items():
                 for w in words:
@@ -171,6 +174,33 @@ class Oracle:
                if demote is not None else ())
         scored = [(-(self.score(d, terms) * demote_factor) if d in dem
                    else -self.score(d, terms), d) for d in cands]
+        scored.sort()
+        return [
+            OracleHit(d, self.docs[d]["id"], -neg) for neg, d in scored[:k]
+        ]
+
+    def search_phrase(self, words, field: str = "content", k: int = 10,
+                      gap: int = 0, on: int = 0, off: int = 0,
+                      or_flags=()) -> list[OracleHit]:
+        """Candidates = docs whose ``field`` token stream holds the words
+        in order, each next word at most ``gap`` tokens after the
+        previous (0 = adjacent, the exact phrase), bit-filtered; score =
+        :meth:`score` over the phrase's distinct words; ties -> doc_id
+        asc."""
+        words = [str(w).lower() for w in words if str(w)]
+        if not words:
+            return []
+        scored = []
+        for d in self._leaf(term_key(field, words[0]), on, off, or_flags):
+            toks = self.tokens[d][field]
+            # ends: positions where the phrase prefix read so far ends
+            ends = {i for i, w in enumerate(toks) if w == words[0]}
+            for w in words[1:]:
+                ends = {i for i, x in enumerate(toks) if x == w
+                        and any(e < i <= e + 1 + gap for e in ends)}
+            if ends:
+                terms = {term_key(field, w) for w in words}
+                scored.append((-self.score(d, terms), d))
         scored.sort()
         return [
             OracleHit(d, self.docs[d]["id"], -neg) for neg, d in scored[:k]

@@ -67,12 +67,16 @@ time against the term dictionary (engine.expand_*: anchored,
 partition-pruned scans), then the whole request runs as ONE scored
 search — same plan shape as any other query.
 
+Every string compiles to one ``search`` call — a lone phrase is a
+phrase clause like any other, so its boost, the paging cursor and the
+quorum check apply to it as to any query.
+
 The compiler is duck-typed over BOTH serving tiers: `SearchEngine`
 (Spark scatter-gather) and `serving.LocalSearcher` (resident
-point-query tier), which exposes the same expand_*/search/
-search_phrase surface — the same string returns bitwise-identical
-rankings from either (tests/test_local_serving.py), phrases included
-(both read the positional sidecar).
+point-query tier), which exposes the same expand_*/search surface — the
+same string returns bitwise-identical rankings from either
+(tests/test_local_serving.py), phrases included (both read the
+positional sidecar).
 """
 
 from __future__ import annotations
@@ -403,7 +407,6 @@ class Compiled:
     tree: TermQuery | None = None
     boosts: dict = dc_field(default_factory=dict)
     exclude: TermQuery | None = None
-    phrase: Leaf | None = None          # whole-query phrase fast path
     phrases: tuple = ()                 # PhraseSpec clauses (pseudo-leaves)
     match_none: bool = False            # Lucene: empty MUST expansion
 
@@ -552,14 +555,6 @@ def compile_string(eng, qs: str, default_field: str = "content",
                    max_expansions: int = 1024) -> Compiled:
     """Parse + compile a query string against an engine's dictionary."""
     node = parse(qs, default_op=default_op)
-    # whole-query phrase? (fast path onto the dedicated phrase scorer)
-    if isinstance(node, Leaf) and node.kind == "phrase":
-        return Compiled(phrase=node)
-    if isinstance(node, Bool) and len(node.clauses) == 1:
-        occur, only = node.clauses[0]
-        if isinstance(only, Leaf) and only.kind == "phrase" \
-                and occur != MUST_NOT:
-            return Compiled(phrase=only)
     boosts: dict = {}
     ctx = _Ctx()
     tree, exclude = _compile_node(eng, node, default_field, boosts,
@@ -589,16 +584,5 @@ def search_string(eng, qs: str, k: int = 10,
         # an empty tree resolves to the engine's valid-but-matches-
         # nothing path on both tiers (same result schema)
         return eng.search(Or(), k=k, **search_kw)
-    if c.phrase is not None:
-        if not hasattr(eng, "search_phrase"):
-            raise QueryParseError(
-                "phrase queries need the positional serving path "
-                "(build_positions sidecar); this engine "
-                f"({type(eng).__name__}) has none")
-        kw = {k_: v for k_, v in search_kw.items()
-              if k_ in ("on", "off", "or_flags", "hydrate")}
-        return eng.search_phrase(list(c.phrase.text),
-                                 field=c.phrase.field or default_field,
-                                 k=k, gap=c.phrase.param, **kw)
     return eng.search(c.tree, k=k, boosts=c.boosts or None,
                       exclude=c.exclude, phrases=c.phrases, **search_kw)

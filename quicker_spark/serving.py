@@ -59,7 +59,9 @@ from quicker_spark.engine import (
     SearchSpec,
     _row_to_encoded,
     _score_segment_rows,
-    full_match_terms,
+    full_match_spec,
+    phrase_leaf_ids,
+    phrase_query,
     read_df_global,
     resolve_search_spec,
 )
@@ -197,7 +199,7 @@ class LocalSearcher:
         meta = positions_meta(self.index_dir)
         if meta is None:
             raise ValueError(
-                "phrase queries need the positional sidecar; run "
+                "phrase clauses need the positional sidecar; run "
                 "operators.positions.build_positions(spark, index_dir) "
                 "first")
         for f in fields:
@@ -237,29 +239,15 @@ class LocalSearcher:
     def _phrase_extra_ids(self, phrases: tuple, segments,
                           on: int, off: int,
                           or_flags: tuple) -> dict[int, dict]:
-        """Per-segment pseudo-leaf candidate arrays: fold each phrase's
-        adjacency match set from the sidecar rows — the same
-        phrase_match_docs kernel the Spark path runs per segment."""
-        from quicker_spark.engine import PhraseSpec
-        from quicker_spark.functions.phrase import phrase_match_docs
-
-        specs = tuple(PhraseSpec(*p) for p in phrases)
-        self._positions_dataset({p.field for p in specs})
-        decoded = self._gather_positions(
-            {k for p in specs for k in p.term_keys})
-        by_seg: dict[int, dict] = {}
-        for seg in segments:
-            dec = decoded.get(seg, {})
-            extra = {}
-            for p in specs:
-                if set(p.term_keys) <= set(dec):
-                    extra[p.key] = phrase_match_docs(
-                        list(p.term_keys), dec, gap=p.gap,
-                        on=on, off=off, or_flags=or_flags)
-                else:
-                    extra[p.key] = np.empty(0, dtype=np.int64)
-            by_seg[seg] = extra
-        return by_seg
+        """Per-segment pseudo-leaf candidate arrays from the resident
+        sidecar runs — :func:`phrase_leaf_ids`, as the Spark kernel
+        runs it per segment."""
+        self._positions_dataset({p.field for p in phrases})
+        runs = self._gather_positions(
+            {k for p in phrases for k in p.term_keys})
+        return {seg: phrase_leaf_ids(phrases, runs.get(seg, {}), on, off,
+                                     or_flags)
+                for seg in segments}
 
     # -- term-dictionary expansion (the query-string compiler's needs) ------
     def _dict_slice(self, pref: str) -> pd.DataFrame:
@@ -396,7 +384,7 @@ class LocalSearcher:
                                    demote_factor=demote_factor)
         if spec.empty:
             return _empty_hits()
-        return self._score_segments(q, spec, k, on, off, tuple(or_flags),
+        return self._score_segments(spec, k, on, off, tuple(or_flags),
                                     boosts)
 
     def _scored_matches(self, q: TermQuery, on: int = 0, off: int = 0,
@@ -404,15 +392,13 @@ class LocalSearcher:
         """EVERY boolean match of ``q`` BM25-scored — same contract and
         errors as :meth:`SearchEngine._scored_matches`: the TAAT kernel
         keeping n_docs per segment, so nothing is dropped."""
-        terms, neg = full_match_terms(q)
-        if not terms:
+        spec = full_match_spec(q)
+        if spec.empty:
             return _empty_hits()
-        spec = SearchSpec(sorted(terms - neg), "taat", 0, frozenset(neg),
-                          None, None, False)
-        return self._score_segments(q, spec, int(self.stats["n_docs"]),
-                                    on, off, or_flags)
+        return self._score_segments(spec, int(self.stats["n_docs"]),
+                                    on, off, tuple(or_flags))
 
-    def _score_segments(self, q: TermQuery, spec: SearchSpec, k: int,
+    def _score_segments(self, spec: SearchSpec, k: int,
                         on: int, off: int, or_flags: tuple,
                         boosts: dict | None = None) -> pd.DataFrame:
         """Score every segment holding a scan term with the engine's
@@ -424,16 +410,14 @@ class LocalSearcher:
         extra_by_seg = (self._phrase_extra_ids(spec.phrases, list(segs),
                                                on, off, or_flags)
                         if spec.phrases else {})
-        query = json.loads(q.to_json())
-        exclude = json.loads(spec.exclude_json) if spec.exclude_json else None
-        demote = json.loads(spec.demote_json) if spec.demote_json else None
         st = self.stats
         parts = [_score_segment_rows(
-            post, query, spec.strategy, len(spec.terms), int(st["n_docs"]),
-            float(st["avgdl"]), k, on, off, or_flags, float(st["k1"]),
-            float(st["b"]), dec_cache=memo, boosts=boosts, after=spec.after,
-            exclude=exclude, exclude_only=spec.neg_terms, min_match=spec.msm,
-            extra_leaf_ids=extra_by_seg.get(seg), demote=demote,
+            post, spec.query, spec.strategy, len(spec.terms),
+            int(st["n_docs"]), float(st["avgdl"]), k, on, off, or_flags,
+            float(st["k1"]), float(st["b"]), dec_cache=memo, boosts=boosts,
+            after=spec.after, exclude=spec.exclude,
+            exclude_only=spec.neg_terms, min_match=spec.msm,
+            extra_leaf_ids=extra_by_seg.get(seg), demote=spec.demote,
             demote_factor=spec.demote_factor)
             for seg, (post, memo) in segs.items()]
         with self._lock:
@@ -481,37 +465,14 @@ class LocalSearcher:
                       gap: int = 0) -> pd.DataFrame:
         """Exact-phrase / ordered-proximity BM25 top-k from the local
         positional sidecar — same contract, errors, and bitwise scores
-        as :meth:`SearchEngine.search_phrase` (tested rank-identical).
-        Per segment: decode the phrase terms' sidecar rows, fold the
-        adjacency match set, score with the shared
-        ``score_segment_phrase`` kernel; global merge is the same
-        (score desc, doc_id asc) total order."""
-        from quicker_spark.functions.phrase import score_segment_phrase
-        from quicker_spark.model import bm25_idf
-
-        self._check_fresh()
-        self._positions_dataset({field})
-        words = [str(w).lower() for w in words if str(w)]
-        if not words:
+        as :meth:`SearchEngine.search_phrase`: :meth:`search` of one
+        phrase clause (:func:`phrase_query`)."""
+        req = phrase_query(words, field, gap)
+        if req is None:
             return _empty_hits()
-        terms = [f"{field}\x01{w}" for w in words]
-        need = set(terms)
-        decoded = self._gather_positions(need)
-        dfg = read_df_global(self._ts_ds, need)
-        idf = {t: bm25_idf(int(self.stats["n_docs"]), dfg[t]) for t in need}
-        parts = []
-        for seg in sorted(decoded):
-            dec = decoded[seg]
-            if need <= set(dec):
-                parts.append(score_segment_phrase(
-                    terms, dec, idf, float(self.stats["avgdl"]), k,
-                    on, off, tuple(or_flags),
-                    float(self.stats["k1"]), float(self.stats["b"]),
-                    gap=int(gap)))
-        if not parts:
-            return _empty_hits()
-        return _top_k(np.concatenate([p[0] for p in parts]),
-                      np.concatenate([p[1] for p in parts]), k)
+        q, phrases = req
+        return self.search(q, k=k, on=on, off=off, or_flags=or_flags,
+                           phrases=phrases)
 
     def search_many(self, queries: dict[str, TermQuery], k: int = 10,
                     **kwargs) -> pd.DataFrame:

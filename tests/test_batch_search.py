@@ -200,3 +200,17 @@ def test_batch_refuses_phrase_pseudo_leaves(eng):
 
     with pytest.raises(ValueError, match="pseudo"):
         eng.search_many({"p": TermQuery(keyword="\x02p0")}, k=5)
+
+
+def test_batch_validates_excludes_like_search(eng):
+    # a pseudo-leaf exclude has no PhraseSpec: solo search raises, and so
+    # must the batch (scanning the missing pseudo-term excludes nothing)
+    from quicker_spark.plans.term_query import TermQuery
+
+    q = NewTermQuery("content", "def")
+    x = TermQuery(keyword="\x02p0")
+    with pytest.raises(ValueError) as solo:
+        eng.search(q, k=5, exclude=x)
+    with pytest.raises(ValueError) as batch:
+        eng.search_many({"x": q}, k=5, excludes={"x": x})
+    assert str(batch.value) == f"queries['x']: {solo.value}"

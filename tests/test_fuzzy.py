@@ -187,6 +187,22 @@ def test_bool_not_self_exclusion_is_empty(engine):
     assert engine.search_bool_not(q, q).count() == 0
 
 
+def test_bool_not_refuses_phrase_pseudo_leaves(engine):
+    # a pseudo-leaf has no postings: in either tree it would silently
+    # subtract nothing or match nothing, so search_bool_not refuses it
+    # with search_bool's error
+    from quicker_spark.plans.term_query import TermQuery
+
+    p = TermQuery(keyword="\x02p0")
+    q = NewTermQuery("content", "def")
+    with pytest.raises(ValueError) as want:
+        engine.search_bool(p)
+    for pos, neg in ((q, p), (p, q)):
+        with pytest.raises(ValueError) as got:
+            engine.search_bool_not(pos, neg)
+        assert str(got.value) == str(want.value)
+
+
 def test_scored_must_not_matches_brute_force(engine, oracle):
     pos = Or(NewTermQuery("content", "def"), NewTermQuery("content", "tok50"))
     neg = NewTermQuery("content", "tok7")

@@ -8,9 +8,8 @@ return the Oracle's top-k: the same doc ids in the same order, scores
 within 1e-6.
 
 Covered: a flat OR (WAND), a flat AND (conj), ``And(Or(a, b), c)``
-(TAAT) and one nested-NOT query, on ``SearchEngine`` and
-``LocalSearcher``. Phrases are not covered: ``oracle.Oracle`` has no
-phrase scorer.
+(TAAT), one nested-NOT query, an exact three-word phrase and an
+ordered-proximity phrase, on ``SearchEngine`` and ``LocalSearcher``.
 
 Skipped unless ``QS_LARGE_ORACLE=1``: the build plus the pure-Python
 Oracle take minutes and a few GB of driver memory.
@@ -25,6 +24,7 @@ import pytest
 from quicker_spark.engine import SearchEngine
 from quicker_spark.fixtures import corpus_df, corpus_pdf
 from quicker_spark.operators.build import IndexConfig, build_index
+from quicker_spark.operators.positions import build_positions
 from quicker_spark.oracle import Oracle
 from quicker_spark.plans.term_query import And, AndNot, NewTermQuery, Or
 from quicker_spark.serving import LocalSearcher
@@ -53,12 +53,20 @@ QUERIES = {
                       And(_t("tok700"), _t("class"))), "auto"),
 }
 
+# (words, gap): three distinct words make the score a sum whose order
+# matters (both sides sum in sorted-term order)
+PHRASES = {
+    "exact": (("self", "import", "return"), 0),
+    "near": (("def", "tok50"), 3),
+}
+
 
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("large") / "idx")
     build_index(spark, corpus_df(spark, N_DOCS), out,
                 IndexConfig(seg_docs=25_000), resume=False)
+    build_positions(spark, out, fields=("content",))
     return out
 
 
@@ -84,5 +92,18 @@ def test_large_build_matches_oracle(spark, built, oracle, name):
            for r in eng.search(q, k=K, mode=mode).collect()]
     _assert_same(got, want, f"spark/{name}")
     local = LocalSearcher(built).search(q, k=K, mode=mode)
+    _assert_same(list(zip(local["doc_id"].tolist(),
+                          local["score"].tolist())), want, f"local/{name}")
+
+
+@pytest.mark.parametrize("name", sorted(PHRASES))
+def test_large_build_phrase_matches_oracle(spark, built, oracle, name):
+    words, gap = PHRASES[name]
+    want = oracle.search_phrase(words, k=K, gap=gap)
+    assert len(want) == K, name
+    got = [(r["doc_id"], r["score"]) for r in SearchEngine(spark, built)
+           .search_phrase(words, k=K, gap=gap).collect()]
+    _assert_same(got, want, f"spark/{name}")
+    local = LocalSearcher(built).search_phrase(words, k=K, gap=gap)
     _assert_same(list(zip(local["doc_id"].tolist(),
                           local["score"].tolist())), want, f"local/{name}")

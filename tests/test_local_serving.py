@@ -359,6 +359,58 @@ def test_search_string_phrase_local_identity(eng, ls):
         assert got == want and got
 
 
+def _rows(hits):
+    """(doc_id, score) list from either tier's hits frame."""
+    if hasattr(hits, "collect"):
+        return [(r["doc_id"], r["score"]) for r in hits.collect()]
+    return list(zip(hits["doc_id"].tolist(), hits["score"].tolist()))
+
+
+def _lone_phrase(searcher, **kw):
+    """The hand-built request a lone '"def tok50"~4' compiles to."""
+    from quicker_spark.engine import PhraseSpec
+    from quicker_spark.plans.term_query import TermQuery
+
+    P = TermQuery(keyword="\x02p0")
+    spec = (PhraseSpec("\x02p0", "content", ("def", "tok50"), 4, True),)
+    return _rows(searcher.search(P, phrases=spec, **kw))
+
+
+@pytest.mark.parametrize("tier", ["spark", "local"])
+def test_search_string_lone_phrase_keeps_boost(eng, ls, tier):
+    from quicker_spark.plans.qparse import search_string
+
+    s = eng if tier == "spark" else ls
+    got = _rows(search_string(s, '"def tok50"~4^3', k=8))
+    boosted = _lone_phrase(s, k=8, boosts={"content\x01def": 3.0,
+                                           "content\x01tok50": 3.0})
+    assert got == boosted and got != _lone_phrase(s, k=8)
+
+
+@pytest.mark.parametrize("tier", ["spark", "local"])
+def test_search_string_lone_phrase_keeps_kwargs(eng, ls, tier):
+    # after=, exclude= and min_should_match= reach a lone phrase the way
+    # they reach any other query string: applied, or refused loudly
+    from quicker_spark.plans.qparse import search_string
+
+    s = eng if tier == "spark" else ls
+    qs = '"def tok50"~4'
+    full = _rows(search_string(s, qs, k=50))
+    assert len(full) > 3 and full == _lone_phrase(s, k=50)
+    d, sc = full[2]
+    assert _rows(search_string(s, qs, k=50, after=(sc, d))) == full[3:]
+    # a string states its own exclusions ('-word'); a second exclude
+    # tree is refused for every string, the lone phrase included
+    for q in (qs, "def"):
+        with pytest.raises(TypeError, match="exclude"):
+            search_string(s, q, k=5, exclude=_t("tok5"))
+    got = _rows(search_string(s, qs + " -tok5", k=50))
+    assert got == _lone_phrase(s, k=50, exclude=_t("tok5"))
+    assert 0 < len(got) < len(full)
+    with pytest.raises(ValueError, match="flat OR"):
+        search_string(s, qs, k=5, min_should_match=2)
+
+
 def test_suggest_identity(eng, ls):
     for w, me in (("tok5", 2), ("def", 1), ("zzzz", 1)):
         want = [(r["word"], r["distance"], r["df"]) for r in

@@ -2,12 +2,10 @@
 
 The positional index is a beyond-the-reference capability (the reference
 stores no positions, skiplist_reverse_index.go:23-36); its contract here
-is pinned against a brute-force python oracle over the same tokenizer
-spec: a phrase matches docs whose token stream contains the words
-adjacently in order, scored by the SAME per-term BM25 sum the AND path
-uses."""
-
-import math
+is pinned against the brute-force ``oracle.Oracle.search_phrase`` over
+the same tokenizer spec: a phrase matches docs whose
+token stream contains the words adjacently in order, scored by the SAME
+per-term BM25 sum the AND path uses."""
 
 import numpy as np
 import pytest
@@ -18,6 +16,7 @@ from quicker_spark.fixtures import corpus_df, corpus_pdf
 from quicker_spark.functions.tokenize import tokenize_py
 from quicker_spark.operators.build import IndexConfig, build_index
 from quicker_spark.operators.positions import build_positions
+from quicker_spark.oracle import Oracle
 from quicker_spark.plans.term_query import And, NewTermQuery
 
 N_DOCS = 300
@@ -43,27 +42,14 @@ def toks_by_doc(engine):
     return {int(r["doc_id"]): tokenize_py(r["content"]) for r in rows}
 
 
-def _brute_phrase(toks_by_doc, phrase, k1=1.2, b=0.75, k=10):
-    n = len(toks_by_doc)
-    avgdl = sum(len(t) for t in toks_by_doc.values()) / n
-    dfm = {t: sum(1 for toks in toks_by_doc.values() if t in toks)
-           for t in set(phrase)}
-    idf = {t: math.log((n - dfm[t] + 0.5) / (dfm[t] + 0.5) + 1.0)
-           for t in set(phrase)}
-    out = []
-    m = len(phrase)
-    for d, toks in toks_by_doc.items():
-        if not any(toks[i:i + m] == list(phrase)
-                   for i in range(len(toks) - m + 1)):
-            continue
-        s = 0.0
-        for t in dict.fromkeys(phrase):
-            tf = toks.count(t)
-            s += idf[t] * tf * (k1 + 1.0) / (
-                tf + k1 * (1.0 - b + b * len(toks) / avgdl))
-        out.append((d, s))
-    out.sort(key=lambda x: (-x[1], x[0]))
-    return out[:k]
+@pytest.fixture(scope="module")
+def oracle():
+    return Oracle(corpus_pdf(N_DOCS))
+
+
+def _oracle_hits(oracle, phrase, gap=0, k=10):
+    return [(h.doc_id, h.score)
+            for h in oracle.search_phrase(phrase, k=k, gap=gap)]
 
 
 def _pick_phrase(toks_by_doc, min_docs=3):
@@ -78,11 +64,11 @@ def _pick_phrase(toks_by_doc, min_docs=3):
     return [a, b2]
 
 
-def test_phrase_matches_brute_force(engine, toks_by_doc):
+def test_phrase_matches_brute_force(engine, toks_by_doc, oracle):
     phrase = _pick_phrase(toks_by_doc)
     got = [(int(r["doc_id"]), float(r["score"]))
            for r in engine.search_phrase(phrase, k=10).collect()]
-    exp = _brute_phrase(toks_by_doc, phrase)
+    exp = _oracle_hits(oracle, phrase)
     assert [d for d, _ in got] == [d for d, _ in exp]
     np.testing.assert_allclose([s for _, s in got], [s for _, s in exp],
                                rtol=1e-9)
@@ -103,7 +89,7 @@ def test_phrase_is_stricter_than_and(engine, toks_by_doc):
                        for i in range(len(toks) - 1))
 
 
-def test_phrase_repeated_word(engine, toks_by_doc):
+def test_phrase_repeated_word(engine, toks_by_doc, oracle):
     # any token that appears twice in a row somewhere; if none, the
     # kernel path is still covered by the unit test in functions/phrase
     for toks in toks_by_doc.values():
@@ -114,7 +100,7 @@ def test_phrase_repeated_word(engine, toks_by_doc):
         pytest.skip("fixture corpus has no doubled token")
     got = [(int(r["doc_id"]), float(r["score"]))
            for r in engine.search_phrase([dup, dup], k=10).collect()]
-    exp = _brute_phrase(toks_by_doc, [dup, dup])
+    exp = _oracle_hits(oracle, [dup, dup])
     assert [d for d, _ in got] == [d for d, _ in exp]
 
 
@@ -127,40 +113,12 @@ def test_phrase_no_sidecar_raises(spark, tmp_path_factory):
         eng.search_phrase(["def", "return"])
 
 
-def _brute_near(toks_by_doc, phrase, gap, k1=1.2, b=0.75, k=10):
-    """Ordered proximity oracle: each next word within gap+1 tokens."""
-    n = len(toks_by_doc)
-    avgdl = sum(len(t) for t in toks_by_doc.values()) / n
-    dfm = {t: sum(1 for toks in toks_by_doc.values() if t in toks)
-           for t in set(phrase)}
-    idf = {t: math.log((n - dfm[t] + 0.5) / (dfm[t] + 0.5) + 1.0)
-           for t in set(phrase)}
-    out = []
-    for d, toks in toks_by_doc.items():
-        ends = {i for i, w in enumerate(toks) if w == phrase[0]}
-        for w in phrase[1:]:
-            ends = {i for i, x in enumerate(toks) if x == w
-                    and any(e < i <= e + 1 + gap for e in ends)}
-            if not ends:
-                break
-        if not ends:
-            continue
-        s = 0.0
-        for t in dict.fromkeys(phrase):
-            tf = toks.count(t)
-            s += idf[t] * tf * (k1 + 1.0) / (
-                tf + k1 * (1.0 - b + b * len(toks) / avgdl))
-        out.append((d, s))
-    out.sort(key=lambda x: (-x[1], x[0]))
-    return out[:k]
-
-
-def test_proximity_matches_brute_force(engine, toks_by_doc):
+def test_proximity_matches_brute_force(engine, toks_by_doc, oracle):
     phrase = _pick_phrase(toks_by_doc)
     for gap in (1, 3):
         got = [(int(r["doc_id"]), float(r["score"])) for r in
                engine.search_phrase(phrase, k=10, gap=gap).collect()]
-        exp = _brute_near(toks_by_doc, phrase, gap)
+        exp = _oracle_hits(oracle, phrase, gap=gap)
         assert [d for d, _ in got] == [d for d, _ in exp], gap
         np.testing.assert_allclose([s for _, s in got],
                                    [s for _, s in exp], rtol=1e-9)
@@ -174,7 +132,7 @@ def test_proximity_widens_with_gap(engine, toks_by_doc):
                      engine.search_phrase(phrase, k=10_000,
                                           gap=gap).collect()})
     assert sets[0] <= sets[1] <= sets[2]
-    # and gap=0 equals the dedicated exact-phrase path
+    # and gap=0 equals the default (exact-phrase) call
     exact = {int(r["doc_id"])
              for r in engine.search_phrase(phrase, k=10_000).collect()}
     assert sets[0] == exact
@@ -273,7 +231,7 @@ def test_highlight_unindexed_field_raises(engine):
 # LAST in the module: mutates the shared index, so the module-scoped
 # engine's cached DataFrames point at rewritten files afterwards
 def test_phrase_survives_maintenance(spark, engine, index_dir,
-                                     toks_by_doc):
+                                     toks_by_doc, oracle):
     from quicker_spark.operators.maintain import delete_docs
     phrase = _pick_phrase(toks_by_doc)
     before = [int(r["doc_id"])
@@ -284,7 +242,11 @@ def test_phrase_survives_maintenance(spark, engine, index_dir,
     after = [int(r["doc_id"])
              for r in eng2.search_phrase(phrase, k=10).collect()]
     assert victim not in after
-    # remaining ranking equals brute force over the post-delete corpus
-    toks2 = {d: t for d, t in toks_by_doc.items() if d != victim}
-    exp = [d for d, _ in _brute_phrase(toks2, phrase)]
+    # remaining ranking equals the Oracle over the post-delete corpus;
+    # its dense doc ids skip the victim's, the engine's keep their value
+    key = tuple(oracle.docs[victim][c] for c in ("repo", "path", "commit"))
+    pdf = corpus_pdf(N_DOCS)
+    pdf = pdf[[r != key for r in zip(pdf["repo"], pdf["path"],
+                                     pdf["commit"])]]
+    exp = [d + (d >= victim) for d, _ in _oracle_hits(Oracle(pdf), phrase)]
     assert after == exp[:len(after)]
