@@ -50,7 +50,9 @@ from quicker_spark.plans.term_query import (AndNot, NewTermQuery, Or,
 
 def _row_to_encoded(row, block_size: int) -> EncodedPostings:
     """Stored row (a mapping of the postings columns) -> EncodedPostings.
-    WAND callers must additionally call ``.with_bounds(avgdl)`` — the
+    Reads the four streams and the per-block bound inputs; columns it
+    does not name (an older index's per-block byte offsets) are ignored.
+    The pruned scorers additionally need ``.with_bounds(avgdl)`` — the
     block-max bound is derived from the CURRENT avgdl at query time,
     never stored (keeps segments immutable under maintenance)."""
     return EncodedPostings(
@@ -63,10 +65,6 @@ def _row_to_encoded(row, block_size: int) -> EncodedPostings:
         block_min_tf=np.asarray(row["block_min_tf"], dtype=np.int64),
         block_max_dl=np.asarray(row["block_max_dl"], dtype=np.int64),
         block_max_u_ref=np.asarray(row["block_max_u_ref"], dtype=np.float64),
-        off_ids=np.asarray(row["off_ids"], dtype=np.int64),
-        off_tfs=np.asarray(row["off_tfs"], dtype=np.int64),
-        off_dls=np.asarray(row["off_dls"], dtype=np.int64),
-        off_bits=np.asarray(row["off_bits"], dtype=np.int64),
         avgdl_ref=float(row["avgdl_ref"]),
         block_size=block_size,
     )
@@ -297,6 +295,36 @@ def full_match_spec(q: TermQuery) -> SearchSpec:
                       frozenset(terms - pos), None, None, not terms)
 
 
+def batch_entries(queries: dict, on: int, off: int, or_flags: tuple,
+                  flags: dict | None, boosts: dict | None,
+                  after: dict | None, excludes: dict | None,
+                  min_should_match: dict | None) -> list:
+    """``search_many``'s request on both tiers -> [(qid, SearchSpec, on,
+    off, or_flags, boosts)] for every query that can match. Every query
+    resolves through :func:`resolve_search_spec` before any is scored;
+    an invalid one raises its ValueError prefixed with its query id."""
+    flags = flags or {}
+    boosts = boosts or {}
+    after = after or {}
+    excludes = excludes or {}
+    min_should_match = min_should_match or {}
+    entries = []
+    for qid, q in queries.items():
+        try:
+            spec = resolve_search_spec(
+                q, boosts=boosts.get(qid), after=after.get(qid),
+                exclude=excludes.get(qid),
+                min_should_match=min_should_match.get(qid, 0))
+        except ValueError as e:
+            raise ValueError(f"queries[{qid!r}]: {e}") from None
+        if spec.empty:
+            continue   # no terms, or an unreachable quorum: no rows
+        q_on, q_off, q_orf = flags.get(qid, (on, off, or_flags))
+        entries.append((str(qid), spec, int(q_on), int(q_off),
+                        tuple(q_orf), boosts.get(qid) or None))
+    return entries
+
+
 def phrase_query(words, field: str, gap: int):
     """``search_phrase``'s request on both tiers -> (tree, phrases) for
     ``search``: one pseudo-leaf whose candidates are the phrase's
@@ -353,16 +381,28 @@ def read_df_global(ts_ds, terms) -> dict[str, int]:
     return {t: int(dfg.get(t, 0)) for t in terms}
 
 
+def _frame_rows(pdf: pd.DataFrame):
+    """A kernel input frame's rows as {column: value} dicts, built
+    column-wise: ``iterrows`` and ``to_dict("records")`` box per row and
+    cost several times more."""
+    cols = list(pdf.columns)
+    return (dict(zip(cols, vals))
+            for vals in zip(*(pdf[c].to_numpy() for c in cols)))
+
+
 def _frame_postings(pdf: pd.DataFrame, block_size: int, dfg: dict) -> dict:
     """One segment's kernel input frame -> {term: (df_global,
     EncodedPostings)} in row order — the adapter from a Spark group to
-    :func:`_score_segment_rows`. Rows are built column-wise: ``iterrows``
-    and ``to_dict("records")`` box per row and cost several times more."""
-    cols = list(pdf.columns)
-    rows = (dict(zip(cols, vals))
-            for vals in zip(*(pdf[c].to_numpy() for c in cols)))
+    :func:`_score_segment_rows`."""
     return {r["term"]: (dfg[r["term"]], _row_to_encoded(r, block_size))
-            for r in rows}
+            for r in _frame_rows(pdf)}
+
+
+def _frame_runs(pdf: pd.DataFrame, block_size: int) -> dict:
+    """One segment's postings frame -> {term: decoded (ids, tfs, dls,
+    bits)} in row order."""
+    return {r["term"]: _row_to_encoded(r, block_size).decode_all()
+            for r in _frame_rows(pdf)}
 
 
 def _score_segment_rows(postings: dict, query: dict, strategy: str,
@@ -385,15 +425,17 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
     This is the shared per-segment body of the Spark kernels (via
     :func:`_frame_postings`) and the resident tier — batch serving and
     ``LocalSearcher`` are rank-identical to one-at-a-time Spark searches
-    because all of them run exactly this code per query. ``dec_cache``
-    ({term: decoded run + its BM25 u at ``avgdl``}) is read and filled
-    here, so callers can share decoded runs between queries that reuse
-    a term (decode and compute u once per segment, not once per query).
+    because all of them run exactly this code per query. Every run is
+    decoded once, before the strategy dispatch, through ``dec_cache``
+    ({term: decoded run + its BM25 u at ``avgdl``}), which is read and
+    filled here: all three scorers read the same decoded runs, so
+    callers share them between queries that reuse a term (decode and
+    compute u once per segment, not once per query).
 
     strategy: 'wand' (flat OR, block-max pruned), 'conj' (flat AND,
-    skip-pointer intersection + block-max pruned), 'taat' (any tree,
-    exhaustive decode), 'wand_auto'/'conj_auto' (cost-based: fall back
-    to TAAT when >= 2 query terms are dense)."""
+    block-max pruned intersection), 'taat' (any tree, exhaustive),
+    'wand_auto'/'conj_auto' (cost-based: fall back to TAAT when >= 2
+    query terms are dense)."""
     strat = strategy
     if strat in ("wand_auto", "conj_auto"):
         # Cost-based choice, the same call an optimizer makes from
@@ -405,7 +447,10 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
         # the dense-window TAAT wins. Measured on one core, top-10 of a
         # 100k-doc segment with two terms of df 60k and 30k: interval
         # walk 22.5 ms; TAAT 6.7 ms decoding the runs, 1.5 ms over
-        # resident runs with their cached u.
+        # resident runs with their cached u. Now that both read the same
+        # cached runs, traced serve (seed 7, 10k docs, 4-core host)
+        # reads 0.63 ms per WAND call and 0.34 ms per TAAT call: the
+        # walk still costs more even where this rule picks it.
         dense = sum(1 for dfg, _ in postings.values() if dfg * 20 > n_docs)
         strat = "taat" if dense >= 2 else strat[:4]
     _e = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
@@ -427,16 +472,6 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
         # make w * block_max an UNDER-estimate and break admissibility.
         idf = {t: boosts.get(t, 1.0) * v for t, v in idf.items()}
 
-    if strat in ("wand", "conj"):
-        # with_bounds is idempotent at fixed avgdl (and a no-op re-store
-        # when avgdl == avgdl_ref), so sharing encodings across queries
-        # and threads is safe
-        bounded = {t: e.with_bounds(avgdl, k1, b)
-                   for t, (_, e) in postings.items()}
-        scorer = (score_segment_wand if strat == "wand"
-                  else score_segment_conjunctive)
-        return scorer(bounded, idf, avgdl, k, on, off, or_flags, k1, b,
-                      after=after)
     if dec_cache is None:
         dec_cache = {}
     decoded = {}
@@ -449,6 +484,16 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
             d = dec_cache[t] = (ids, tfs, dls, bits,
                                 bm25_u(tfs, dls, avgdl, k1, b))
         decoded[t] = d
+    if strat in ("wand", "conj"):
+        # with_bounds is idempotent at fixed avgdl (and a no-op re-store
+        # when avgdl == avgdl_ref), so sharing encodings across queries
+        # and threads is safe
+        bounded = {t: e.with_bounds(avgdl, k1, b)
+                   for t, (_, e) in postings.items()}
+        scorer = (score_segment_wand if strat == "wand"
+                  else score_segment_conjunctive)
+        return scorer(decoded, bounded, idf, avgdl, k, on, off, or_flags,
+                      k1, b, after=after)
     return score_segment_exhaustive(
         query, decoded, idf, avgdl, k, on, off, or_flags, k1, b,
         after=after, exclude=exclude, exclude_only=exclude_only,
@@ -484,7 +529,7 @@ def _make_spec_kernel(entries: list, n_docs: int, avgdl: float, k: int,
             runs = {r["term"]: decode_positions_row(
                         bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
                         bytes(r["bits"]), bytes(r["pos"]))
-                    for _, r in pos_rows.iterrows()}
+                    for r in _frame_rows(pos_rows)}
         postings = _frame_postings(pdf, block_size, dfg)
         dec_cache: dict = {}
         outs = []
@@ -522,12 +567,10 @@ def _make_synonym_kernel(groups: tuple, idf_groups: tuple, avgdl: float,
         for g, _ in groups]}
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        block = block_size
+        by_term = _frame_runs(pdf, block_size)
         dec: dict[str, tuple] = {}
         for gkey, members in groups:
-            sub = pdf[pdf["term"].isin(members)]
-            runs = [_row_to_encoded(r, block).decode_all()
-                    for _, r in sub.iterrows()]
+            runs = [run for t, run in by_term.items() if t in members]
             if runs:
                 dec[gkey] = merge_decoded_runs(runs)
         if not dec:
@@ -544,8 +587,7 @@ def _make_dismax_kernel(tie: float, n_docs: int, avgdl: float, k: int,
                         on: int, off: int, or_flags: tuple,
                         k1: float, b: float, block_size: int, dfg: dict):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        dec = {r["term"]: _row_to_encoded(r, block_size).decode_all()
-               for _, r in pdf.iterrows()}
+        dec = _frame_runs(pdf, block_size)
         idf = {t: bm25_idf(n_docs, dfg[t]) for t in dec}
         ids, scores = score_segment_dismax(
             dec, idf, avgdl, k, tie, on, off, or_flags, k1, b)
@@ -561,11 +603,9 @@ def _make_bool_kernel(query_json: str, on: int, off: int, or_flags: tuple,
     query = json.loads(query_json)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        leaf_ids: dict[str, np.ndarray] = {}
-        for _, r in pdf.iterrows():
-            ids, _tfs, _dls, bits = _row_to_encoded(r, block_size).decode_all()
-            leaf_ids[r["term"]] = ids[filter_by_bits_vec(
-                bits, on, off, or_flags)]
+        leaf_ids = {t: ids[filter_by_bits_vec(bits, on, off, or_flags)]
+                    for t, (ids, _tfs, _dls, bits)
+                    in _frame_runs(pdf, block_size).items()}
         return pd.DataFrame({"doc_id": eval_bool_tree(query, leaf_ids)})
 
     return kernel
@@ -875,25 +915,8 @@ class SearchEngine:
         """
         from pyspark.sql.window import Window
 
-        flags = flags or {}
-        boosts = boosts or {}
-        after = after or {}
-        excludes = excludes or {}
-        min_should_match = min_should_match or {}
-        entries = []
-        for qid, q in queries.items():
-            try:
-                spec = resolve_search_spec(
-                    q, boosts=boosts.get(qid), after=after.get(qid),
-                    exclude=excludes.get(qid),
-                    min_should_match=min_should_match.get(qid, 0))
-            except ValueError as e:
-                raise ValueError(f"queries[{qid!r}]: {e}") from None
-            if spec.empty:
-                continue   # no terms, or an unreachable quorum: no rows
-            q_on, q_off, q_orf = flags.get(qid, (on, off, or_flags))
-            entries.append((str(qid), spec, int(q_on), int(q_off),
-                            tuple(q_orf), boosts.get(qid) or None))
+        entries = batch_entries(queries, on, off, or_flags, flags, boosts,
+                                after, excludes, min_should_match)
         if not entries:
             df = self.spark.createDataFrame(
                 [], "qid string, doc_id long, score double")
@@ -976,7 +999,7 @@ class SearchEngine:
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
             best: dict[int, int] = {}
-            for _, r in pdf.iterrows():
+            for r in _frame_rows(pdf):
                 ids_, tfs, _dls, _bits, pos = decode_positions_row(
                     bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]),
                     bytes(r["bits"]), bytes(r["pos"]))
@@ -1075,8 +1098,7 @@ class SearchEngine:
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
             outs = []
-            for _, r in pdf.iterrows():
-                dids, tfs, dls, _bits = _row_to_encoded(r, bs).decode_all()
+            for term, (dids, tfs, dls, _bits) in _frame_runs(pdf, bs).items():
                 if not dids.size:
                     continue
                 pos = np.searchsorted(dids, hit_ids)
@@ -1085,10 +1107,9 @@ class SearchEngine:
                 if not m.any():
                     continue
                 sel = pos_c[m]
-                w = boosts.get(r["term"], 1.0) * bm25_idf(
-                    n_docs, dfg[r["term"]])
+                w = boosts.get(term, 1.0) * bm25_idf(n_docs, dfg[term])
                 u = bm25_u(tfs[sel], dls[sel], avgdl, k1, b)
-                field, _, word = r["term"].partition("\x01")
+                field, _, word = term.partition("\x01")
                 outs.append(pd.DataFrame({
                     "doc_id": dids[sel], "field": field, "word": word,
                     "tf": tfs[sel], "dl": dls[sel],

@@ -23,8 +23,8 @@ _CONT = np.uint8(0x80)
 
 def varbyte_encode_with_counts(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     """Encode a uint64 array to varbyte bytes, also returning the byte
-    count per value (so callers can compute block offsets into the stream
-    without re-encoding per block)."""
+    count per value (so callers can split one stream encoded for many
+    runs into per-run byte ranges without re-encoding per run)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = v.size
     if n == 0:

@@ -11,12 +11,13 @@ shuffle far more than the postings themselves).
 
 Layout per (segment, term): postings are split into blocks of
 ``block_size`` entries. Each of the four aligned streams (doc_ids, tfs,
-doc_lens, bits) is varbyte-encoded per block; doc_ids are delta-encoded
+doc_lens, bits) is varbyte-encoded in one pass; doc_ids are delta-encoded
 with the delta chain RESTARTING at each block (first id of a block is
-absolute) so any block decodes independently — that's what lets block-max
-WAND skip blocks without touching their bytes. Per-block metadata: last
-doc_id (skip pointer) + max tf + min doc_len + byte offsets into each
-stream.
+absolute). A run is always decoded whole (:meth:`EncodedPostings.
+decode_all`) and every scorer reads the decoded arrays; the blocks exist
+for their metadata: last doc_id (skip pointer) + max/min tf + min/max
+doc_len + the tight reference bound, which block-max WAND sums to skip
+doc-id intervals without scoring them.
 
 The WAND bound is derived at QUERY time from immutable per-block stats —
 segments are avgdl-independent, so a delete/upsert that shifts avgdl
@@ -45,6 +46,7 @@ import numpy as np
 from quicker_spark.functions.codec import (
     delta_encode,
     varbyte_decode,
+    varbyte_encode,
     varbyte_encode_with_counts,
 )
 from quicker_spark.model import B, K1
@@ -76,10 +78,6 @@ class EncodedPostings:
     block_min_tf: np.ndarray
     block_max_dl: np.ndarray
     block_max_u_ref: np.ndarray  # float64[n_blocks], tight max u AT avgdl_ref
-    off_ids: np.ndarray       # int32[n_blocks+1] byte offsets (end sentinel)
-    off_tfs: np.ndarray
-    off_dls: np.ndarray
-    off_bits: np.ndarray
     avgdl_ref: float = 0.0    # corpus avgdl when this run was encoded
     block_size: int = DEFAULT_BLOCK
     # derived at query time by with_bounds() — never persisted
@@ -90,7 +88,7 @@ class EncodedPostings:
         CURRENT avgdl (see module docstring for the two-source min and
         the corner-monotonicity argument). Exactly ``u_ref`` when avgdl
         hasn't drifted; under drift, the (1 + 1e-12) bump absorbs the
-        few-ulp float gap between this evaluation and score_at's."""
+        few-ulp float gap between this evaluation and the scorers' u."""
         if not self.df:
             self.block_max_u = np.zeros(0, dtype=np.float64)
             return self
@@ -119,27 +117,6 @@ class EncodedPostings:
     def n_blocks(self) -> int:
         return len(self.block_last)
 
-    def block_n(self, blk: int) -> int:
-        if blk < self.n_blocks - 1:
-            return self.block_size
-        return self.df - blk * self.block_size
-
-    def decode_block_ids(self, blk: int) -> np.ndarray:
-        """Ascending doc_ids of one block (decodes only the id stream)."""
-        d = varbyte_decode(self.ids[self.off_ids[blk]:self.off_ids[blk + 1]])
-        return np.cumsum(d, dtype=np.uint64).astype(np.int64)
-
-    def decode_block_vals(self, blk: int):
-        """-> (tfs, dls, bits) of one block."""
-        tfs = varbyte_decode(self.tfs[self.off_tfs[blk]:self.off_tfs[blk + 1]]).astype(np.int64)
-        dls = varbyte_decode(self.dls[self.off_dls[blk]:self.off_dls[blk + 1]]).astype(np.int64)
-        bts = varbyte_decode(self.bits[self.off_bits[blk]:self.off_bits[blk + 1]]).astype(np.int64)
-        return tfs, dls, bts
-
-    def decode_block(self, blk: int):
-        """-> (ids, tfs, dls, bits) numpy arrays for one block."""
-        return (self.decode_block_ids(blk), *self.decode_block_vals(blk))
-
     def decode_all(self):
         """Vectorized full decode -> (ids, tfs, dls, bits)."""
         deltas = varbyte_decode(self.ids)
@@ -163,44 +140,33 @@ def encode_postings(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
 
     Fully vectorized: each of the four streams is ONE varbyte pass over
     the whole run (per-block python calls made a hot 20k-posting term cost
-    ~640 tiny encode calls and dominated the build). Block offsets come
-    from the per-value byte counts; the id delta chain restarts at block
-    starts by patching those positions back to absolute values.
+    ~640 tiny encode calls and dominated the build). The id delta chain
+    restarts at block starts by patching those positions back to
+    absolute values.
 
     ``avgdl_ref`` seeds the tight reference bound; the encoded bytes stay
     valid (just gradually less tightly bounded) as corpus stats drift.
     """
     n = len(ids)
     if n == 0:
-        z = np.zeros(1, dtype=np.int32)
         zi = np.zeros(0, dtype=np.int64)
         return EncodedPostings(
             df=0, ids=b"", tfs=b"", dls=b"", bits=b"",
             block_last=zi, block_max_tf=zi, block_min_dl=zi,
             block_min_tf=zi, block_max_dl=zi,
             block_max_u_ref=np.zeros(0, dtype=np.float64),
-            off_ids=z, off_tfs=z, off_dls=z, off_bits=z,
             avgdl_ref=avgdl_ref, block_size=block_size,
         )
     ids = np.ascontiguousarray(ids, dtype=np.int64)
     starts = np.arange(0, n, block_size)
-    n_blocks = len(starts)
     ends = np.append(starts[1:], n)
 
     ids_u = ids.astype(np.uint64)
     deltas = delta_encode(ids_u)
-    deltas[starts] = ids_u[starts]  # block-independent decode
-
-    def stream(vals: np.ndarray) -> tuple[bytes, np.ndarray]:
-        buf, nb = varbyte_encode_with_counts(np.asarray(vals, dtype=np.uint64))
-        cum = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(nb, out=cum[1:])
-        return buf, cum[np.append(starts, n)].astype(np.int32)
-
-    id_buf, off_ids = stream(deltas)
-    tf_buf, off_tfs = stream(tfs)
-    dl_buf, off_dls = stream(dls)
-    bit_buf, off_bits = stream(bits)
+    deltas[starts] = ids_u[starts]  # the chain restarts at every block
+    id_buf, tf_buf, dl_buf, bit_buf = (
+        varbyte_encode(np.asarray(v, dtype=np.uint64))
+        for v in (deltas, tfs, dls, bits))
 
     block_last = ids[ends - 1]
     tfs_i = np.asarray(tfs, dtype=np.int64)
@@ -215,7 +181,6 @@ def encode_postings(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
         block_max_dl=np.maximum.reduceat(dls_i, starts),
         # nextafter-up: tight AND admissible at avgdl_ref
         block_max_u_ref=np.nextafter(np.maximum.reduceat(u, starts), np.inf),
-        off_ids=off_ids, off_tfs=off_tfs, off_dls=off_dls, off_bits=off_bits,
         avgdl_ref=avgdl_ref, block_size=block_size,
     )
 
@@ -291,7 +256,6 @@ def encode_postings_batch(ids_col, tfs_col, dls_col, bits_col,
     for r in range(nrows):
         s, e = row_starts[r], row_starts[r + 1]
         bs, be = brow_starts[r], brow_starts[r + 1]
-        blk_bounds = np.append(bstart_idx[bs:be], e)
         row = [int(lens[r])]
         for buf, cum in streams:
             row.append(buf[cum[s]:cum[e]])
@@ -301,8 +265,6 @@ def encode_postings_batch(ids_col, tfs_col, dls_col, bits_col,
         row.append(block_min_tf_all[bs:be].tolist())
         row.append(block_max_dl_all[bs:be].tolist())
         row.append(block_u_ref_all[bs:be].tolist())
-        for _, cum in streams:
-            row.append((cum[blk_bounds] - cum[s]).astype(np.int32).tolist())
         out.append(tuple(row))
     return out
 
@@ -566,12 +528,14 @@ def score_segment_dismax(
 # block maxima — precomputed for ALL intervals in a handful of vectorized
 # passes before the walk starts. The walk is then interval-at-a-time, not
 # doc-at-a-time: an interval whose bound cannot beat the heap threshold
-# is skipped with ONE float compare (no decode, no cursor bookkeeping),
-# and a passing interval is scored as a mini-TAAT — decode the covering
-# blocks once each (cached), bit-filter, union (WAND) or intersect
-# (conjunction) the candidate ids, and accumulate idf*u per term in
-# lexicographic term order: the exact float op order of the exhaustive
-# scorer, so every path hashes identically.
+# is skipped with ONE float compare (no scoring, no cursor bookkeeping),
+# and a passing interval is scored as a mini-TAAT: slice each term's
+# decoded, bit-filtered run (the runs and cached u the exhaustive scorer
+# reads) at offsets found up front by one searchsorted of all interval
+# bounds per term, union (WAND) or intersect (conjunction) the candidate
+# ids, and accumulate idf*u per term in lexicographic term order: the
+# exact float op order of the exhaustive scorer, so every path hashes
+# identically.
 #
 # Lossless for (score desc, doc_id asc) top-k: intervals ascend, so docs
 # are emitted in globally ascending id order; with the heap keyed
@@ -584,66 +548,32 @@ def score_segment_dismax(
 # serving bottleneck: ~40 us of Python per pivot).
 
 
-class _FilteredBlocks:
-    """Lazy per-block decode + bit-filter + idf*u cache for one term.
+def _interval_bounds(encs: list[EncodedPostings], weights: list[float],
+                     bounds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """-> (admissible score bound of each interval (bounds[i-1],
+    bounds[i]]: the sum of its covering blocks' ``w * block_max_u``,
+    mask of the intervals every term has a block for)."""
+    ub = np.zeros(len(bounds), dtype=np.float64)
+    covered = np.ones(len(bounds), dtype=bool)
+    for e, w in zip(encs, weights):
+        bi = np.searchsorted(e.block_last, bounds, side="left")
+        v = bi < e.n_blocks
+        covered &= v
+        ub[v] += w * e.block_max_u[bi[v]]
+    return ub, covered
 
-    Adaptive decode granularity: selective queries touch few blocks, so
-    blocks decode individually on demand; but once ~3% of the term's
-    blocks have missed the cache (min 4 misses — a dense, barely-prunable
-    term), the whole stream is decoded in ONE vectorized varbyte pass per
-    stream and later gets serve pre-sliced views — per-block decode is
-    ~10 numpy dispatches per 128 entries, which dominated the dense case.
-    """
 
-    __slots__ = ("enc", "idf", "avgdl", "k1", "b", "on", "off", "or_flags",
-                 "cache", "misses", "full")
-
-    def __init__(self, enc: EncodedPostings, idf: float, avgdl: float,
-                 k1: float, b: float, on: int, off: int, or_flags):
-        self.enc = enc
-        self.idf = idf
-        self.avgdl = avgdl
-        self.k1 = k1
-        self.b = b
-        self.on = on
-        self.off = off
-        self.or_flags = or_flags
-        self.cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        self.misses = 0
-        self.full: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
-
-    def _filter(self, ids, tfs, dls, bts):
-        m = filter_by_bits_vec(bts, self.on, self.off, self.or_flags)
-        return (ids[m], m,
-                self.idf * bm25_u(tfs[m], dls[m], self.avgdl, self.k1, self.b))
-
-    def _densify(self) -> None:
-        ids, tfs, dls, bts = self.enc.decode_all()
-        fids, m, fc = self._filter(ids, tfs, dls, bts)
-        blk_of = np.arange(self.enc.df, dtype=np.int64) // self.enc.block_size
-        offs = np.searchsorted(blk_of[m], np.arange(self.enc.n_blocks + 1))
-        self.full = (fids, fc, offs)
-        self.cache.clear()
-
-    def get(self, blk: int) -> tuple[np.ndarray, np.ndarray]:
-        """-> (filtered ascending doc_ids, matching idf*u contributions)."""
-        if self.full is not None:
-            fids, fc, offs = self.full
-            return fids[offs[blk]:offs[blk + 1]], fc[offs[blk]:offs[blk + 1]]
-        hit = self.cache.get(blk)
-        if hit is None:
-            self.misses += 1
-            # trip to full decode after ~3% of blocks miss (min 4): the
-            # wasted per-block decodes stay bounded while truly selective
-            # queries never pay the full-stream pass
-            if self.misses > 4 and self.misses * self.enc.block_size * 32 > self.enc.df:
-                self._densify()
-                return self.get(blk)
-            fids, _m, fc = self._filter(self.enc.decode_block_ids(blk),
-                                        *self.enc.decode_block_vals(blk))
-            hit = (fids, fc)
-            self.cache[blk] = hit
-        return hit
+def _interval_runs(term_postings: dict, terms: list[str], bounds: np.ndarray,
+                   avgdl: float, on: int, off: int, or_flags, k1: float,
+                   b: float) -> tuple[list, list]:
+    """-> ([(bit-filtered ids, u)] per term (see _filtered_runs), [cuts]
+    per term): interval i's slice of a run is ``cuts[i]:cuts[i + 1]``."""
+    runs = _filtered_runs({t: term_postings[t] for t in terms}, avgdl,
+                          on, off, or_flags, k1, b)
+    runs = [runs[t] for t in terms]
+    cuts = [[0] + np.searchsorted(ids, bounds, side="right").tolist()
+            for ids, _u in runs]
+    return runs, cuts
 
 
 def _check_bounds(encs: list[EncodedPostings]) -> None:
@@ -690,6 +620,7 @@ def _push_candidates(heap, k, theta, cand, scores, after=None) -> float:
 
 
 def score_segment_wand(
+    term_postings: dict[str, tuple],
     postings: dict[str, EncodedPostings],
     idf: dict[str, float],
     avgdl: float,
@@ -705,6 +636,10 @@ def score_segment_wand(
     (interval-at-a-time; see the section comment above for the pruning
     and losslessness argument).
 
+    ``term_postings``: term -> decoded run, as in
+    :func:`score_segment_exhaustive`. ``postings``: the same terms'
+    EncodedPostings after ``with_bounds(avgdl)``; only their block
+    metadata (``block_last``, ``block_max_u``) is read.
     ``after``: optional (score, doc_id) paging cursor — only docs
     strictly after it in (score desc, doc_id asc) rank order are
     admitted to the heap (deep paging without per-segment offset+k
@@ -721,34 +656,19 @@ def score_segment_wand(
     weights = [idf.get(t, 0.0) for t in terms]
 
     bounds = np.unique(np.concatenate([e.block_last for e in encs]))
-    blk_idx: list[np.ndarray] = []
-    ub = np.zeros(len(bounds), dtype=np.float64)
-    for e, w in zip(encs, weights):
-        bi = np.searchsorted(e.block_last, bounds, side="left")
-        blk_idx.append(bi)
-        valid = bi < e.n_blocks
-        ub[valid] += w * e.block_max_u[bi[valid]]
-
-    filt = [_FilteredBlocks(e, w, avgdl, k1, b, on, off, or_flags)
-            for e, w in zip(encs, weights)]
+    ub, _ = _interval_bounds(encs, weights, bounds)
+    runs, cuts = _interval_runs(term_postings, terms, bounds, avgdl,
+                                on, off, or_flags, k1, b)
     heap: list[tuple[float, int]] = []
     theta = -np.inf
-    prev = np.iinfo(np.int64).min  # interval i covers doc ids (prev, hi]
     for i in range(len(bounds)):
-        lo, prev = prev, int(bounds[i])
-        hi = prev
         if ub[i] <= theta:
             continue
         slices: list[tuple[np.ndarray, np.ndarray]] = []
-        for ti in range(len(terms)):
-            bi = int(blk_idx[ti][i])
-            if bi >= encs[ti].n_blocks:
-                continue
-            fids, fc = filt[ti].get(bi)
-            s = int(np.searchsorted(fids, lo, side="right"))
-            e_ = int(np.searchsorted(fids, hi, side="right"))
-            if e_ > s:
-                slices.append((fids[s:e_], fc[s:e_]))
+        for (ids, u), w, c in zip(runs, weights, cuts):
+            s, e = c[i], c[i + 1]
+            if e > s:
+                slices.append((ids[s:e], w * u[s:e]))
         if not slices:
             continue
         if len(slices) == 1:
@@ -767,6 +687,7 @@ def score_segment_wand(
 
 
 def score_segment_conjunctive(
+    term_postings: dict[str, tuple],
     postings: dict[str, EncodedPostings],
     idf: dict[str, float],
     avgdl: float,
@@ -780,14 +701,14 @@ def score_segment_conjunctive(
 ):
     """Top-k over a flat AND-of-terms query: interval-at-a-time block-max
     intersection (the BMW bound applied to the conjunction; see the
-    section comment above). ``after``: paging cursor, same contract as
+    section comment above). Inputs and ``after`` as in
     :func:`score_segment_wand`.
 
     Per passing interval the RAREST term is sliced first — if its slice
-    is empty the interval is abandoned before any other term decodes a
-    block, which preserves the rare-term-drives behavior of a galloping
-    skip-pointer intersection (reference: skiplist_reverse_index.go:
-    77-130) in vectorized form.
+    is empty the interval is abandoned before any other term is
+    touched, which preserves the rare-term-drives behavior of a
+    galloping skip-pointer intersection (reference:
+    skiplist_reverse_index.go:77-130) in vectorized form.
 
     ``postings`` must contain EVERY query term with df > 0 in this
     segment; callers pass the segment's rows — a missing term means the
@@ -808,33 +729,18 @@ def score_segment_conjunctive(
     max_doc = min(int(e.block_last[-1]) for e in encs)
     bounds = np.unique(np.concatenate([e.block_last for e in encs]))
     bounds = bounds[bounds <= max_doc]
-    blk_idx: list[np.ndarray] = []
-    ub = np.zeros(len(bounds), dtype=np.float64)
-    valid_all = np.ones(len(bounds), dtype=bool)
-    for e, w in zip(encs, weights):
-        bi = np.searchsorted(e.block_last, bounds, side="left")
-        blk_idx.append(bi)
-        v = bi < e.n_blocks
-        valid_all &= v
-        ub[v] += w * e.block_max_u[bi[v]]
-    ub[~valid_all] = -np.inf
-
-    filt = [_FilteredBlocks(e, w, avgdl, k1, b, on, off, or_flags)
-            for e, w in zip(encs, weights)]
+    ub, covered = _interval_bounds(encs, weights, bounds)
+    ub[~covered] = -np.inf
+    runs, cuts = _interval_runs(term_postings, terms, bounds, avgdl,
+                                on, off, or_flags, k1, b)
     heap: list[tuple[float, int]] = []
     theta = -np.inf
-    prev = np.iinfo(np.int64).min
     for i in range(len(bounds)):
-        lo, prev = prev, int(bounds[i])
-        hi = prev
         if ub[i] <= theta:  # also skips intervals some term can't cover
             continue
         cand: np.ndarray | None = None
         for ti in probe_order:  # rarest first: usually exits on slice 1
-            fids, _fc = filt[ti].get(int(blk_idx[ti][i]))
-            s = int(np.searchsorted(fids, lo, side="right"))
-            e_ = int(np.searchsorted(fids, hi, side="right"))
-            sl = fids[s:e_]
+            sl = runs[ti][0][cuts[ti][i]:cuts[ti][i + 1]]
             cand = sl if cand is None else cand[
                 np.isin(cand, sl, assume_unique=True)]
             if cand.size == 0:
@@ -842,9 +748,8 @@ def score_segment_conjunctive(
         if cand is None or cand.size == 0:
             continue
         scores = np.zeros(len(cand), dtype=np.float64)
-        for ti in range(len(terms)):  # lex term order = TAAT float order
-            fids, fc = filt[ti].get(int(blk_idx[ti][i]))
-            scores += fc[np.searchsorted(fids, cand)]
+        for (ids, u), w in zip(runs, weights):  # lex term order = TAAT's
+            scores += w * u[np.searchsorted(ids, cand)]
         theta = _push_candidates(heap, k, theta, cand, scores, after)
     return _finalize_heap(heap)
 

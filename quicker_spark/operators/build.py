@@ -131,10 +131,6 @@ POSTINGS_SCHEMA = T.StructType([
     T.StructField("block_min_tf", T.ArrayType(T.LongType())),
     T.StructField("block_max_dl", T.ArrayType(T.LongType())),
     T.StructField("block_max_u_ref", T.ArrayType(T.DoubleType())),
-    T.StructField("off_ids", T.ArrayType(T.IntegerType())),
-    T.StructField("off_tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("off_dls", T.ArrayType(T.IntegerType())),
-    T.StructField("off_bits", T.ArrayType(T.IntegerType())),
 ])
 
 

@@ -59,6 +59,7 @@ from quicker_spark.engine import (
     SearchSpec,
     _row_to_encoded,
     _score_segment_rows,
+    batch_entries,
     full_match_spec,
     phrase_leaf_ids,
     phrase_query,
@@ -475,31 +476,31 @@ class LocalSearcher:
                            phrases=phrases)
 
     def search_many(self, queries: dict[str, TermQuery], k: int = 10,
-                    **kwargs) -> pd.DataFrame:
+                    on: int = 0, off: int = 0, or_flags: tuple = (),
+                    flags: dict[str, tuple] | None = None,
+                    boosts: dict[str, dict[str, float]] | None = None,
+                    after: dict[str, tuple] | None = None,
+                    excludes: dict[str, TermQuery] | None = None,
+                    min_should_match: dict[str, int] | None = None
+                    ) -> pd.DataFrame:
         """Batch point serving -> (qid, doc_id, score) ordered (qid asc,
-        score desc, doc_id asc). Unlike the Spark ``search_many`` (whose
-        win is amortizing ONE scan+job over the batch), the local batch
-        is just a loop — the resident cache already amortizes the reads;
-        per-query kwargs follow :meth:`SearchEngine.search_many`'s
-        ``flags``/``boosts``/``after``/``excludes``/``min_should_match``
-        maps."""
-        flags = kwargs.get("flags") or {}
-        boosts = kwargs.get("boosts") or {}
-        after = kwargs.get("after") or {}
-        excludes = kwargs.get("excludes") or {}
-        msm = kwargs.get("min_should_match") or {}
-        on, off = int(kwargs.get("on", 0)), int(kwargs.get("off", 0))
-        orf = tuple(kwargs.get("or_flags", ()))
+        score desc, doc_id asc) — same arguments (minus ``hydrate``) and
+        the same request resolution (:func:`batch_entries`) as
+        :meth:`SearchEngine.search_many`, so an invalid batch raises the
+        same error on both tiers. Unlike the Spark batch (whose win is
+        amortizing ONE scan+job over the batch), the local batch scores
+        query by query — the resident cache already amortizes the
+        reads."""
+        self._check_fresh()
+        entries = batch_entries(queries, on, off, or_flags, flags, boosts,
+                                after, excludes, min_should_match)
         frames = []
-        for qid in sorted(queries, key=str):
-            q_on, q_off, q_orf = flags.get(qid, (on, off, orf))
-            hits = self.search(
-                queries[qid], k=k, on=q_on, off=q_off, or_flags=q_orf,
-                boosts=boosts.get(qid), after=after.get(qid),
-                exclude=excludes.get(qid),
-                min_should_match=int(msm.get(qid, 0)))
+        for qid, spec, q_on, q_off, q_orf, q_boosts in sorted(
+                entries, key=lambda e: e[0]):
+            hits = self._score_segments(spec, k, q_on, q_off, q_orf,
+                                        q_boosts)
             if len(hits):
-                hits.insert(0, "qid", str(qid))
+                hits.insert(0, "qid", qid)
                 frames.append(hits)
         if not frames:
             return pd.DataFrame({"qid": pd.Series([], dtype=object),

@@ -41,12 +41,10 @@ def test_encode_decode_roundtrip_blocks():
     np.testing.assert_array_equal(rtfs, tfs)
     np.testing.assert_array_equal(rdls, dls)
     np.testing.assert_array_equal(rbits, bits)
-    # per-block decode agrees with full decode
+    # each block's skip pointer is the last id of its decode_all slice
     for blk in range(enc.n_blocks):
-        bi, bt, bd, bb = enc.decode_block(blk)
-        s, e = blk * 128, min((blk + 1) * 128, n)
-        np.testing.assert_array_equal(bi, ids[s:e])
-        np.testing.assert_array_equal(bt, tfs[s:e])
+        e = min((blk + 1) * 128, n)
+        assert enc.block_last[blk] == rids[e - 1]
     # query-time-derived block maxima are admissible upper bounds, and
     # stay admissible when avgdl drifts (delete/upsert shifting stats)
     for avgdl in (150.0, 80.0, 411.5, 149.999, 150.001):
@@ -148,9 +146,10 @@ def test_wand_matches_exhaustive(seed, tie_heavy):
     query = {"should": [{"keyword": {"field": "content", "word": t.split("\x01")[1]}}
                         for t in decoded]}
     e_ids, e_scores = score_segment_exhaustive(query, decoded, idf, avgdl, int(k))
-    w_ids, w_scores = score_segment_wand(postings, idf, avgdl, int(k))
+    w_ids, w_scores = score_segment_wand(decoded, postings, idf, avgdl,
+                                         int(k))
     np.testing.assert_array_equal(w_ids, e_ids)
-    np.testing.assert_allclose(w_scores, e_scores, rtol=0, atol=1e-9)
+    np.testing.assert_array_equal(w_scores, e_scores)
 
 
 @pytest.mark.parametrize("seed", range(4))
@@ -163,9 +162,9 @@ def test_wand_matches_exhaustive_with_flags(seed):
         e_ids, e_scores = score_segment_exhaustive(
             query, decoded, idf, 100.0, 10, on=on, off=off, or_flags=orf)
         w_ids, w_scores = score_segment_wand(
-            postings, idf, 100.0, 10, on=on, off=off, or_flags=orf)
+            decoded, postings, idf, 100.0, 10, on=on, off=off, or_flags=orf)
         np.testing.assert_array_equal(w_ids, e_ids)
-        np.testing.assert_allclose(w_scores, e_scores, atol=1e-9)
+        np.testing.assert_array_equal(w_scores, e_scores)
 
 
 def test_wand_interval_edges():
@@ -195,12 +194,12 @@ def test_wand_interval_edges():
                       for t in postings]}
     for k in (1, 3, 10, 1000):  # 1000 >> candidate count
         e = score_segment_exhaustive(q_or, decoded, idf, avgdl, k)
-        w = score_segment_wand(postings, idf, avgdl, k)
+        w = score_segment_wand(decoded, postings, idf, avgdl, k)
         np.testing.assert_array_equal(w[0], e[0])
         np.testing.assert_array_equal(w[1], e[1])
         from quicker_spark.functions.kernels import score_segment_conjunctive
         ea = score_segment_exhaustive(q_and, decoded, idf, avgdl, k)
-        ca = score_segment_conjunctive(postings, idf, avgdl, k)
+        ca = score_segment_conjunctive(decoded, postings, idf, avgdl, k)
         np.testing.assert_array_equal(ca[0], ea[0])
         np.testing.assert_array_equal(ca[1], ea[1])
 
@@ -216,9 +215,10 @@ def test_wand_many_terms_many_intervals(seed):
                         for t in decoded]}
     e = score_segment_exhaustive(query, decoded, idf, 100.0, 20,
                                  on=1, or_flags=(2,))
-    w = score_segment_wand(postings, idf, 100.0, 20, on=1, or_flags=(2,))
+    w = score_segment_wand(decoded, postings, idf, 100.0, 20,
+                           on=1, or_flags=(2,))
     np.testing.assert_array_equal(w[0], e[0])
-    np.testing.assert_allclose(w[1], e[1], atol=1e-9)
+    np.testing.assert_array_equal(w[1], e[1])
 
 
 def test_exhaustive_must_semantics():
@@ -267,11 +267,12 @@ def test_zero_or_flag_is_noop():
     # WAND path: or_flags=(0,) must score identically to or_flags=()
     rng = np.random.RandomState(42)
     postings, decoded, idf = _random_segment(rng)
-    base_ids, base_scores = score_segment_wand(postings, idf, 100.0, 10)
+    base_ids, base_scores = score_segment_wand(decoded, postings, idf,
+                                               100.0, 10)
     z_ids, z_scores = score_segment_wand(
-        postings, idf, 100.0, 10, or_flags=(0,))
+        decoded, postings, idf, 100.0, 10, or_flags=(0,))
     np.testing.assert_array_equal(z_ids, base_ids)
-    np.testing.assert_allclose(z_scores, base_scores, atol=0)
+    np.testing.assert_array_equal(z_scores, base_scores)
 
 
 @pytest.mark.parametrize("seed", range(8))
@@ -289,9 +290,10 @@ def test_conjunctive_matches_exhaustive(seed, tie_heavy):
                       for t in decoded]}
     for k in (1, 5, 10, 50):
         e_ids, e_scores = score_segment_exhaustive(query, decoded, idf, 100.0, k)
-        c_ids, c_scores = score_segment_conjunctive(postings, idf, 100.0, k)
+        c_ids, c_scores = score_segment_conjunctive(decoded, postings, idf,
+                                                    100.0, k)
         np.testing.assert_array_equal(c_ids, e_ids)
-        np.testing.assert_allclose(c_scores, e_scores, rtol=0, atol=1e-9)
+        np.testing.assert_array_equal(c_scores, e_scores)
 
 
 @pytest.mark.parametrize("seed", range(4))
@@ -306,20 +308,21 @@ def test_conjunctive_matches_exhaustive_with_flags(seed):
         e_ids, e_scores = score_segment_exhaustive(
             query, decoded, idf, 100.0, 10, on=on, off=off, or_flags=orf)
         c_ids, c_scores = score_segment_conjunctive(
-            postings, idf, 100.0, 10, on=on, off=off, or_flags=orf)
+            decoded, postings, idf, 100.0, 10, on=on, off=off, or_flags=orf)
         np.testing.assert_array_equal(c_ids, e_ids)
-        np.testing.assert_allclose(c_scores, e_scores, atol=1e-9)
+        np.testing.assert_array_equal(c_scores, e_scores)
 
 
 def test_conjunctive_empty_on_missing_term():
     from quicker_spark.functions.kernels import score_segment_conjunctive
 
     rng = np.random.RandomState(9)
-    postings, _decoded, idf = _random_segment(rng, n_terms=2)
+    postings, decoded, idf = _random_segment(rng, n_terms=2)
     t0 = next(iter(postings))
     postings["content\x01absent"] = _mk([])  # df == 0
+    decoded["content\x01absent"] = _mk([]).decode_all()
     idf["content\x01absent"] = 1.0
-    ids, scores = score_segment_conjunctive(postings, idf, 100.0, 10)
+    ids, scores = score_segment_conjunctive(decoded, postings, idf, 100.0, 10)
     assert ids.size == 0 and scores.size == 0
     assert postings[t0].df > 0  # sanity: other lists were non-empty
 
@@ -358,5 +361,4 @@ def test_encode_batch_matches_row_encoder():
         assert got[8] == list(e.block_min_tf)
         assert got[9] == list(e.block_max_dl)
         assert got[10] == list(e.block_max_u_ref)
-        assert got[11] == list(e.off_ids) and got[12] == list(e.off_tfs)
-        assert got[13] == list(e.off_dls) and got[14] == list(e.off_bits)
+        assert len(got) == 11

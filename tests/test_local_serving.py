@@ -19,6 +19,7 @@ import pytest
 
 from quicker_spark.engine import SearchEngine
 from quicker_spark.fixtures import corpus_pdf
+from quicker_spark.functions.kernels import EncodedPostings
 from quicker_spark.operators.build import IndexConfig, build_index
 from quicker_spark.plans.term_query import And, NewTermQuery, Or
 from quicker_spark.serving import LocalSearcher, StaleIndexError
@@ -225,6 +226,55 @@ def test_search_many_identity(eng, ls):
         part = got[got["qid"] == qid]
         _assert_same(eng.search(q, k=6),
                      part.drop(columns="qid").reset_index(drop=True))
+
+
+def test_search_many_errors_match(eng, ls):
+    """An invalid batch raises the same prefixed message on both tiers,
+    and a misspelled keyword is a TypeError, not a silent no-op."""
+    ok = Or(_t("def"), _t("return"))
+    bad_batches = [
+        ({"a": ok, "b": And(_t("def"), _t("return"))},
+         {"min_should_match": {"b": 2}}),
+        ({"a": ok, "b": ok}, {"boosts": {"b": {"content\x01def": -1.0}}}),
+    ]
+    for qs, kw in bad_batches:
+        with pytest.raises(ValueError) as spark_err:
+            eng.search_many(qs, k=5, **kw)
+        with pytest.raises(ValueError) as local_err:
+            ls.search_many(qs, k=5, **kw)
+        assert str(local_err.value) == str(spark_err.value)
+        assert str(local_err.value).startswith("queries['b']: ")
+    with pytest.raises(TypeError):
+        ls.search_many({"a": ok}, k=5, exclude={"a": Or(_t("import"))})
+
+
+@pytest.fixture(scope="module")
+def idx_small_blocks(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("local_b4") / "idx")
+    build_index(spark, spark.createDataFrame(corpus_pdf(300)), out,
+                IndexConfig(seg_docs=100, block_size=4), resume=False)
+    return out
+
+
+@pytest.mark.parametrize("mode", ["wand", "conj"])
+def test_warm_pruned_query_decodes_nothing(spark, idx_small_blocks,
+                                           monkeypatch, mode):
+    """WAND and conj score the resident decoded runs: a warm repeat
+    decodes no run. Blocks of 4 postings give every run many blocks, so
+    a scorer decoding its own blocks per call would show here."""
+    q = (Or if mode == "wand" else And)(_t("def"), _t("return"))
+    ls = LocalSearcher(idx_small_blocks)
+    cold = ls.search(q, k=1000, mode=mode)
+    calls = []
+    decode_all = EncodedPostings.decode_all
+    monkeypatch.setattr(EncodedPostings, "decode_all",
+                        lambda self: calls.append(1) or decode_all(self))
+    warm = ls.search(q, k=1000, mode=mode)
+    assert calls == []
+    assert len(warm) and cold.equals(warm)
+    monkeypatch.undo()
+    _assert_same(SearchEngine(spark, idx_small_blocks).search(
+        q, k=1000, mode=mode), warm)
 
 
 def test_lookup_and_hydrate(eng, ls):

@@ -51,7 +51,6 @@ def _postings_key(spark, out):
         F.md5(F.col("dls")).alias("h_dls"), F.md5(F.col("bits")).alias("h_bits"),
         F.col("block_last").cast("string").alias("bl"),
         F.col("block_max_u_ref").cast("string").alias("bu"),
-        F.col("off_ids").cast("string").alias("oi"),
     ).collect()
     return sorted(tuple(r) for r in rows)
 
