@@ -475,9 +475,8 @@ def q_bm25_local_top10(spark, sf_dir):
 
 def q_bm25_and_top10(spark, sf_dir):
     """Conjunctive top-k through the pruned skip-pointer + block-max AND
-    scorer (explicit mode='conj': auto's cost-based fallback may pick
-    TAAT for dense terms, and this entry exists to certify the pruned
-    path against the oracle)."""
+    scorer (explicit mode='conj': auto resolves to TAAT, and this entry
+    exists to certify the pruned path against the oracle)."""
     eng = get_engine(spark, sf_dir)
     q = And(*[NewTermQuery("content", t) for t in AND_TERMS])
     hits = eng.search(q, k=10, mode="conj")

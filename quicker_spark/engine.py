@@ -2,12 +2,11 @@
 
 The reference serves queries by gRPC scatter-gather over workers
 (reference: index_service/sentinel.go:137-187 — broadcast the query to all
-shards, gather, concatenate). Here Spark's own stage execution IS the
-scatter-gather: the postings scan is pruned to the query's terms (parquet
-row-group stats — postings files are sorted by term), each segment scores
-its shard in an Arrow kernel (``applyInPandas`` over ``groupBy(segment)``),
-and the driver-side merge is ``orderBy(score desc, doc_id asc).limit(k)``
-(Spark's TakeOrdered = partial per-partition top-k + final merge).
+shards, gather, concatenate). Here one Spark job IS the scatter-gather:
+one map-only Arrow task per segment (no exchange) reads its files in the
+query terms' ``bucket=`` directories through :func:`term_filter` and
+scores them, and the merge is ``orderBy(score desc, doc_id asc)
+.limit(k)`` in the same job (TakeOrdered: per-partition top-k + merge).
 
 Hydration (business payload lookup) is deferred until AFTER the top-k
 limit — the reference hydrates every match because it has no limit
@@ -44,6 +43,7 @@ from quicker_spark.functions.phrase import (
 )
 from quicker_spark.model import bm25_idf, term_key
 from quicker_spark.operators.build import IndexConfig
+from quicker_spark.operators.positions import require_positions
 from quicker_spark.plans.term_query import (AndNot, NewTermQuery, Or,
                                             TermQuery)
 
@@ -252,28 +252,19 @@ def resolve_search_spec(q: TermQuery, mode: str = "auto",
             raise ValueError(f"boosts must be > 0: {bad}")
     if after is not None:
         after = (float(after[0]), int(after[1]))
-    if mode == "auto":
-        strategy = ("wand_auto" if _is_flat_or(q)
-                    else "conj_auto" if _is_flat_and(q) else "taat")
-    else:
-        # explicit pruned modes are only defined for flat queries —
-        # silently flattening And(Or(a,b), c) into an intersection of
-        # all leaves would return wrong results with no error. The
-        # check covers the internal '*_auto' spellings too so no mode
-        # string can smuggle a nested tree past the guard.
-        if mode not in ("wand", "conj", "taat", "wand_auto", "conj_auto"):
-            raise ValueError(
-                f"unknown mode {mode!r}: expected 'auto', 'wand', "
-                "'conj', or 'taat'")
-        if mode in ("conj", "conj_auto") and not _is_flat_and(q):
-            raise ValueError(
-                "mode='conj' requires a flat AND-of-terms query; "
-                "use mode='auto' or 'taat' for nested trees")
-        if mode in ("wand", "wand_auto") and not _is_flat_or(q):
-            raise ValueError(
-                "mode='wand' requires a flat OR-of-terms query; "
-                "use mode='auto' or 'taat' for nested trees")
-        strategy = mode
+    if mode not in ("auto", "wand", "conj", "taat"):
+        raise ValueError(f"unknown mode {mode!r}: expected 'auto', "
+                         "'wand', 'conj', or 'taat'")
+    # pruned modes are only defined for flat queries: flattening
+    # And(Or(a,b), c) into an intersection would silently be wrong
+    if (mode == "conj" and not _is_flat_and(q)) or (
+            mode == "wand" and not _is_flat_or(q)):
+        flat = "AND" if mode == "conj" else "OR"
+        raise ValueError(f"mode={mode!r} requires a flat {flat}-of-terms "
+                         "query; use mode='auto' or 'taat' for nested trees")
+    # 'auto' is TAAT: over the same cached runs it beat the interval walk
+    # at every measured window (5k-1M docs), k (10, 100) and term mix
+    strategy = "taat" if mode == "auto" else mode
     return SearchSpec(q.to_dict(), terms, strategy, msm,
                       frozenset(neg_terms), exclude_tree, after, empty,
                       phrases, demote_tree, float(demote_factor))
@@ -381,6 +372,51 @@ def read_df_global(ts_ds, terms) -> dict[str, int]:
     return {t: int(dfg.get(t, 0)) for t in terms}
 
 
+class StaleIndexError(RuntimeError):
+    """Maintenance replaced the index generation a reader opened."""
+
+
+def check_fresh(index_dir: str, opened_mtime: float, reader: str) -> None:
+    """Raise :class:`StaleIndexError` when maintenance has replaced
+    (rewritten ``stats.json``) the generation a ``reader`` opened."""
+    try:
+        m = os.path.getmtime(os.path.join(index_dir, "stats.json"))
+    except FileNotFoundError:
+        raise StaleIndexError(f"index gone: {index_dir}") from None
+    if m != opened_mtime:
+        raise StaleIndexError(
+            "index mutated since open (stats.json changed); "
+            f"re-open a {reader} on the new generation")
+
+
+def _bucket_files(root: str) -> dict:
+    """{bucket: {segment: [file paths]}} of a ``segment_id=S/bucket=B``
+    partitioned tree, from one pyarrow dataset listing (no file read)."""
+    import pyarrow.dataset as pads
+    out: dict = {}
+    for path in pads.dataset(os.path.abspath(root), format="parquet").files:
+        seg, bk = (int(d.split("=")[1]) for d in path.split("/")[-3:-1])
+        out.setdefault(bk, {}).setdefault(seg, []).append(path)
+    return out
+
+
+def _read_segment(files, terms: list, pos_files, pos_terms: list):
+    """One segment's kernel frame, read in its task: the sorted ``terms``'
+    rows of its postings ``files`` UNION the ``pos_terms``' rows of its
+    sidecar ``pos_files``, both row-group-pruned by :func:`term_filter`."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    tables = []
+    for paths, want in ((files, terms), (pos_files, pos_terms)):
+        if len(paths) and want:
+            ds = pads.dataset(list(paths), format="parquet")
+            tables.append(ds.to_table(filter=term_filter(ds, want)))
+    pdf = pa.concat_tables(tables, promote_options="default").to_pandas()
+    if pos_terms and "pos" not in pdf:
+        pdf["pos"] = None
+    return pdf
+
+
 def _frame_rows(pdf: pd.DataFrame):
     """A kernel input frame's rows as {column: value} dicts, built
     column-wise: ``iterrows`` and ``to_dict("records")`` box per row and
@@ -433,30 +469,11 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
     compute u once per segment, not once per query).
 
     strategy: 'wand' (flat OR, block-max pruned), 'conj' (flat AND,
-    block-max pruned intersection), 'taat' (any tree, exhaustive),
-    'wand_auto'/'conj_auto' (cost-based: fall back to TAAT when >= 2
-    query terms are dense)."""
-    strat = strategy
-    if strat in ("wand_auto", "conj_auto"):
-        # Cost-based choice, the same call an optimizer makes from
-        # stats: the pruned scorers walk block INTERVALS (vectorized
-        # mini-TAAT per passing interval, kernels.py), which pays off
-        # only when the block-max bound can skip most intervals. With
-        # >= 2 DENSE low-idf terms the candidate stream is nearly the
-        # whole segment and scores are flat, so pruning collapses and
-        # the dense-window TAAT wins. Measured on one core, top-10 of a
-        # 100k-doc segment with two terms of df 60k and 30k: interval
-        # walk 22.5 ms; TAAT 6.7 ms decoding the runs, 1.5 ms over
-        # resident runs with their cached u. Now that both read the same
-        # cached runs, traced serve (seed 7, 10k docs, 4-core host)
-        # reads 0.63 ms per WAND call and 0.34 ms per TAAT call: the
-        # walk still costs more even where this rule picks it.
-        dense = sum(1 for dfg, _ in postings.values() if dfg * 20 > n_docs)
-        strat = "taat" if dense >= 2 else strat[:4]
+    block-max pruned intersection), 'taat' (any tree, exhaustive)."""
     _e = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     if not postings:
         return _e
-    if strategy.startswith("conj") and len(postings) < n_query_terms:
+    if strategy == "conj" and len(postings) < n_query_terms:
         # a query term has no postings in this segment: the
         # intersection is empty here (reference early-exit,
         # skiplist_reverse_index.go:88-90)
@@ -484,13 +501,13 @@ def _score_segment_rows(postings: dict, query: dict, strategy: str,
             d = dec_cache[t] = (ids, tfs, dls, bits,
                                 bm25_u(tfs, dls, avgdl, k1, b))
         decoded[t] = d
-    if strat in ("wand", "conj"):
+    if strategy in ("wand", "conj"):
         # with_bounds is idempotent at fixed avgdl (and a no-op re-store
         # when avgdl == avgdl_ref), so sharing encodings across queries
         # and threads is safe
         bounded = {t: e.with_bounds(avgdl, k1, b)
                    for t, (_, e) in postings.items()}
-        scorer = (score_segment_wand if strat == "wand"
+        scorer = (score_segment_wand if strategy == "wand"
                   else score_segment_conjunctive)
         return scorer(decoded, bounded, idf, avgdl, k, on, off, or_flags,
                       k1, b, after=after)
@@ -510,10 +527,10 @@ def _make_spec_kernel(entries: list, n_docs: int, avgdl: float, k: int,
     searches on either tier; runs shared by several entries decode once
     per segment (``dec_cache``; flags, boosts and cursors all apply
     after decode). ``dfg``: :func:`read_df_global` of the scanned terms,
-    read on the driver — the scan needs no term-stats join, nor a job
-    for one.
+    read on the driver — the segment read needs no term-stats join, nor
+    a job for one.
 
-    When some spec has phrases, the input frame is the postings scan
+    When some spec has phrases, the input frame is the postings rows
     UNIONED with the positional sidecar rows of the phrase words (they
     carry a non-null ``pos`` stream); per segment each phrase's match
     set becomes its pseudo-leaf's candidate array
@@ -630,14 +647,31 @@ class SearchEngine:
         import pyarrow.dataset as pads
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "stats.json")) as fh:
+        stats_path = os.path.join(index_dir, "stats.json")
+        with open(stats_path) as fh:
             self.stats = json.load(fh)
+        self._stats_mtime = os.path.getmtime(stats_path)
         # refuses an index without the term-bucketed layout
         self._n_buckets = IndexConfig.from_stats(self.stats).term_buckets
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        self.term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        self._term_stats = spark.read.parquet(
+            os.path.join(index_dir, "term_stats"))
         self._ts_ds = pads.dataset(os.path.join(index_dir, "term_stats"))
+        self._post_files = _bucket_files(os.path.join(index_dir, "postings"))
         self._docs: DataFrame | None = None
+
+    def _check_fresh(self) -> None:
+        check_fresh(self.index_dir, self._stats_mtime, "SearchEngine")
+
+    @property
+    def term_stats(self) -> DataFrame:
+        """The term dictionary; refuses a replaced generation."""
+        self._check_fresh()
+        return self._term_stats
+
+    def _df_global(self, terms) -> dict[str, int]:
+        self._check_fresh()
+        return read_df_global(self._ts_ds, terms)
 
     # -- forward index -----------------------------------------------------
     @property
@@ -713,23 +747,51 @@ class SearchEngine:
         return bool(self.lookup([doc_id]).limit(1).take(1))
 
     # -- helpers ------------------------------------------------------------
-    def _bucket_filter(self, df: DataFrame, terms) -> DataFrame:
-        """Partition-prune a bucket-partitioned tree
-        (``segment_id=S/bucket=B``, bucket = md5(term) % term_buckets) to
-        the query terms' bucket directories — the scan reads
-        ``len(buckets)/term_buckets`` of each segment instead of trusting
-        row-group stats, which cannot discriminate between term-sorted
-        files holding hash-random term subsets."""
-        nb = self._n_buckets
-        return df.filter(F.col("bucket").isin(
-            sorted({term_bucket(t, nb) for t in terms})))
+    def _segment_files(self, tree: dict, terms, segments=None) -> dict:
+        """{segment: files} of ``tree`` (:func:`_bucket_files`) in the
+        ``terms``' bucket directories, optionally only of ``segments``."""
+        out: dict = {}
+        for bk in sorted({term_bucket(t, self._n_buckets) for t in terms}):
+            for seg, paths in tree.get(bk, {}).items():
+                if segments is None or seg in segments:
+                    out.setdefault(seg, []).extend(paths)
+        return out
 
-    def _postings_for(self, terms: set[str]) -> DataFrame:
-        # bucket partition pruning first (directory-level), then the term
-        # IN-filter prunes row groups within the bucket files (each file
-        # is term-sorted)
-        return (self._bucket_filter(self.postings, terms)
-                .filter(F.col("term").isin(list(terms))))
+    def _per_segment(self, terms, kernel, schema: str, segments=None,
+                     positions_terms=()) -> DataFrame:
+        """``kernel`` over every segment with files in the ``terms``' (or
+        ``positions_terms``') buckets -> rows under ``schema``: one
+        map-only stage over (segment_id, files, pos_files) rows, one
+        segment per task up to ``defaultParallelism``, each task reading
+        its frame (:func:`_read_segment`) with pyarrow — so executors must
+        see the index path. No exchange: a top-k merge runs in the same
+        job."""
+        import pyarrow as pa
+        self._check_fresh()
+        files = self._segment_files(self._post_files, terms, segments)
+        pos_files = (self._segment_files(_bucket_files(
+                         os.path.join(self.index_dir, "positions")),
+                         positions_terms, segments)
+                     if positions_terms else {})
+        segs = sorted(files.keys() | pos_files.keys())
+        # a local table scans as min(rows, defaultParallelism) partitions
+        paths = pa.list_(pa.string())
+        src = self.spark.createDataFrame(pa.table({
+            "segment_id": pa.array(segs, pa.int64()),
+            "files": pa.array([files.get(s, []) for s in segs], paths),
+            "pos_files": pa.array([pos_files.get(s, []) for s in segs],
+                                  paths)}))
+        terms, pos_terms = sorted(set(terms)), sorted(set(positions_terms))
+
+        def run(parts):
+            for part in parts:
+                for fs, pfs in zip(part["files"], part["pos_files"]):
+                    pdf = _read_segment(fs, terms, pfs, pos_terms)
+                    out = kernel(pdf) if len(pdf) else pdf
+                    if len(out):
+                        yield out
+
+        return src.mapInPandas(run, schema)
 
     # -- search -------------------------------------------------------------
     def search(self, q: TermQuery, k: int = 10, on: int = 0, off: int = 0,
@@ -747,10 +809,10 @@ class SearchEngine:
 
         mode: 'wand' (block-max WAND; flat OR queries), 'conj'
         (skip-pointer + block-max intersection; flat AND queries), 'taat'
-        (exhaustive vectorized, any tree shape), 'auto' (cost-based:
-        pruned path when the query shape allows AND the per-segment term
-        stats say pruning can pay; all paths are lossless, so the choice
-        affects latency only, never results).
+        (exhaustive vectorized, any tree shape), 'auto' (TAAT: over
+        cached runs it is the fastest at every measured segment size, k
+        and term mix; all paths are lossless, so the choice affects
+        latency only, never results).
 
         ``boosts``: optional term-key -> positive weight map (Lucene
         boost semantics): a boosted term contributes
@@ -792,10 +854,10 @@ class SearchEngine:
         ``phrases``: PhraseSpec clauses — the tree (or ``exclude``)
         holds a pseudo-leaf per spec; per segment its candidate array
         is the phrase's adjacency match set folded from the positional
-        sidecar (requires build_positions for the phrase field). The
-        scan becomes postings-for-scored-terms UNION sidecar-rows-for-
-        phrase-terms, one Arrow kernel per segment either way — same
-        plan shape, same top-k merge. Forces TAAT.
+        sidecar (requires build_positions for the phrase field). Each
+        segment task then reads postings-for-scored-terms UNION
+        sidecar-rows-for-phrase-terms, one Arrow kernel per segment
+        either way — same plan shape, same top-k merge. Forces TAAT.
 
         ``demote``/``demote_factor`` (ES boosting query): candidates
         matching the ``demote`` tree stay in the result but their score
@@ -820,52 +882,23 @@ class SearchEngine:
     def _spec_hits(self, entries: list, k: int) -> DataFrame:
         """Per-segment (qid, doc_id, score) top-``k`` hits of resolved
         requests ``entries`` = [(qid, SearchSpec, on, off, or_flags,
-        boosts)] — the one plan every BM25 top-k verb runs: a
-        term-pruned postings scan over every entry's terms (UNION the
-        sidecar rows of their phrase words), one driver read of their
-        df_global, one Arrow kernel per segment
-        (:func:`_make_spec_kernel`)."""
+        boosts)] — the one plan every BM25 top-k verb runs: one driver
+        read of the scanned terms' df_global, then :func:`_make_spec_kernel`
+        in :meth:`_per_segment`'s segment tasks, each reading every entry's
+        terms (and the sidecar rows of their phrase words)."""
         scan_terms: set[str] = set()
         for _, spec, *_ in entries:
             scan_terms |= set(spec.terms) | spec.neg_terms
         phrases = tuple(p for _, spec, *_ in entries for p in spec.phrases)
+        if phrases:
+            require_positions(self.index_dir, {p.field for p in phrases})
         kern = _make_spec_kernel(
             entries, int(self.stats["n_docs"]), float(self.stats["avgdl"]),
             k, self.stats["k1"], self.stats["b"], self.stats["block_size"],
-            read_df_global(self._ts_ds, scan_terms))
-        scan = self._postings_for(scan_terms)
-        if phrases:
-            scan = scan.unionByName(self._positions_for(phrases),
-                                    allowMissingColumns=True)
-        return (scan.groupBy("segment_id")
-                .applyInPandas(kern, "qid string, doc_id long, score double"))
-
-    def _positions_for(self, phrases: tuple) -> DataFrame:
-        """Positional-sidecar rows for every phrase term, pruned the
-        same way the postings scan is (bucket directories, then the
-        term IN-filter's row-group stats on term-sorted files). Raises
-        when the sidecar is missing or doesn't cover a phrase field."""
-        from quicker_spark.operators.positions import positions_meta
-
-        meta = positions_meta(self.index_dir)
-        if meta is None:
-            raise ValueError(
-                "phrase clauses need the positional sidecar; run "
-                "operators.positions.build_positions(spark, index_dir) "
-                "first")
-        for p in phrases:
-            if p.field not in meta["fields"]:
-                raise ValueError(
-                    f"field {p.field!r} has no positions (sidecar "
-                    f"covers {meta['fields']})")
-        pterms = {k for p in phrases for k in p.term_keys}
-        return (self._bucket_filter(
-                    self.spark.read.parquet(
-                        os.path.join(self.index_dir, "positions")),
-                    pterms)
-                .filter(F.col("term").isin(list(pterms)))
-                .select("segment_id", "term", "ids", "tfs", "dls",
-                        "bits", "pos"))
+            self._df_global(scan_terms))
+        return self._per_segment(
+            scan_terms, kern, "qid string, doc_id long, score double",
+            positions_terms={k for p in phrases for k in p.term_keys})
 
     def search_many(self, queries: dict[str, TermQuery], k: int = 10,
                     on: int = 0, off: int = 0, or_flags: tuple = (),
@@ -876,22 +909,21 @@ class SearchEngine:
                     excludes: dict[str, TermQuery] | None = None,
                     min_should_match: dict[str, int] | None = None
                     ) -> DataFrame:
-        """BM25 top-k for MANY queries in ONE Spark job — the cluster
-        serving shape. A query batch shares a single term-pruned postings
-        scan (the union of every query's terms), one driver read of their
-        df_global, and one per-segment Arrow kernel that scores
-        every query against the segment (posting runs reused across
-        queries that share a term); the per-query global top-k is a
-        single window shuffle over <= n_queries * n_segments * k rows.
-        Issuing Q queries individually costs Q scans + Q jobs of
+        """BM25 top-k for MANY queries in one plan — the cluster serving
+        shape. A batch shares one driver read of df_global and ONE
+        map-only segment stage (:meth:`_per_segment`) that reads every
+        query's terms once per segment and scores every query there
+        (runs reused across queries sharing a term); the per-query top-k
+        is a window shuffle over <= n_queries * n_segments * k rows above
+        it. Issuing Q queries individually costs Q reads + Q jobs of
         scheduler latency; batched, both are paid once (the reference
         amortizes the same way by multiplexing concurrent RPCs over one
         resident index, index_service/sentinel.go:137-187 — here the
-        index is storage, so the scan is the cost to amortize).
+        index is storage, so the read is the cost to amortize).
 
         Each query resolves through :func:`resolve_search_spec` and runs
-        the exact single-query code path per segment (same cost-based
-        strategy choice, same float op order), so results are rank- and
+        the exact single-query code path per segment (same strategy
+        choice, same float op order), so results are rank- and
         score-identical to :meth:`search` and invalid requests raise
         :meth:`search`'s ValueError, prefixed with their query id — the
         batch is a latency/throughput optimization, never a semantics
@@ -972,17 +1004,7 @@ class SearchEngine:
         No reference analog (the reference index stores no positions,
         skiplist_reverse_index.go:23-36)."""
         from quicker_spark.functions.tokenize import tokenize_py
-        from quicker_spark.operators.positions import positions_meta
-
-        meta = positions_meta(self.index_dir)
-        if meta is None:
-            raise ValueError(
-                "highlight() needs the positional sidecar: run "
-                "operators.positions.build_positions(spark, index_dir)")
-        if field not in meta["fields"]:
-            raise ValueError(
-                f"field {field!r} has no positions (sidecar covers "
-                f"{meta['fields']})")
+        require_positions(self.index_dir, {field})
         terms = sorted({f"{field}\x01{str(w).lower()}"
                         for w in words if str(w)})
         rows = hits.limit(_HYDRATE_MAX + 1).collect()
@@ -1017,15 +1039,10 @@ class SearchEngine:
                                  "first_tok": list(best.values())})
 
         seg_docs = int(self.stats["seg_docs"])
-        segs = sorted({int(i) // seg_docs for i in hit_ids})
-        pos_df = (self._bucket_filter(
-                      self.spark.read.parquet(
-                          os.path.join(self.index_dir, "positions")),
-                      terms)
-                  .filter(F.col("segment_id").isin(segs))
-                  .filter(F.col("term").isin(terms)))
-        firsts = (pos_df.groupBy("segment_id")
-                  .applyInPandas(kern, "doc_id long, first_tok long"))
+        firsts = self._per_segment(
+            (), kern, "doc_id long, first_tok long",
+            segments={int(i) // seg_docs for i in hit_ids},
+            positions_terms=terms)
 
         w = int(window)
 
@@ -1059,9 +1076,9 @@ class SearchEngine:
         boosts / exclude / min_should_match kwargs pass through — the
         winners are whatever that call returns, k rows collected
         control-plane), then re-reads ONLY the winners' postings: the
-        scan is pruned by term (parquet row-group stats) AND by the
-        winners' segment directories (PartitionFilters — at 10^12 docs
-        this touches a handful of directories, never the postings tree).
+        read selects the terms' bucket files of the winners' segments
+        only (at 10^12 docs a handful of directories, never the postings
+        tree) and prunes row groups by term (:func:`term_filter`).
         Returns one row per (hit doc, matching positive query term):
         (doc_id, field, word, tf, dl, idf_w, contrib) where
         ``idf_w`` is the boost-folded idf weight and ``contrib = idf_w *
@@ -1094,7 +1111,7 @@ class SearchEngine:
         k1, b = self.stats["k1"], self.stats["b"]
         bs = self.stats["block_size"]
         boosts = dict(search_kwargs.get("boosts") or {})
-        dfg = read_df_global(self._ts_ds, terms)
+        dfg = self._df_global(terms)
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
             outs = []
@@ -1126,11 +1143,9 @@ class SearchEngine:
             return pd.concat(outs, ignore_index=True)
 
         seg_docs = int(self.stats["seg_docs"])
-        segs = sorted({int(i) // seg_docs for i in hit_ids})
-        return (self._postings_for(set(terms))
-                .filter(F.col("segment_id").isin(segs))
-                .groupBy("segment_id")
-                .applyInPandas(kern, empty_schema)
+        return (self._per_segment(
+                    terms, kern, empty_schema,
+                    segments={int(i) // seg_docs for i in hit_ids})
                 .orderBy("doc_id", "field", "word"))
 
     def mlt_terms(self, doc_id: int, field: str = "content",
@@ -1155,7 +1170,7 @@ class SearchEngine:
             return []
         keys = {f"{field}\x01{t}": t for t in tf}
         n_docs = int(self.stats["n_docs"])
-        df = read_df_global(self._ts_ds, keys)
+        df = self._df_global(keys)
         ranked = sorted(
             tf, key=lambda t: (-(float(tf[t]) * bm25_idf(
                 n_docs, df[f"{field}\x01{t}"])), t))
@@ -1695,8 +1710,9 @@ class SearchEngine:
         Lucene blend: an OR of synonyms must not reward a doc for
         repeating the concept under different spellings, and the rarest
         member must not get a rarity bonus for what is one concept).
-        Multiple groups combine as a flat OR of pseudo-terms through the
-        exhaustive scorer. The blended idf is computed driver-side from
+        Groups combine as a flat OR of pseudo-terms, scored exhaustively
+        in :meth:`_per_segment`'s map-only segment tasks (TakeOrdered
+        merge in the same job). The blended idf is computed driver-side from
         one control-plane-sized term-stats read (len(members) rows), so
         every segment scores with the same global weight regardless of
         which members it locally contains. No reference analog (the
@@ -1712,7 +1728,7 @@ class SearchEngine:
         members = sorted({m for ks in norm.values() for m in ks})
         if not members:
             return self._empty_hits(hydrate)
-        dfs = read_df_global(self._ts_ds, members)
+        dfs = self._df_global(members)
         n_docs = int(self.stats["n_docs"])
         idf_groups = tuple(
             (g, bm25_idf(n_docs, max(dfs[m] for m in ms)))
@@ -1726,10 +1742,8 @@ class SearchEngine:
             tuple(or_flags), self.stats["k1"], self.stats["b"],
             self.stats["block_size"])
         scan = {m for g, ms in norm.items() if g in live for m in ms}
-        seg_hits = (self._postings_for(scan)
-                    .groupBy("segment_id")
-                    .applyInPandas(kern, "doc_id long, score double"))
-        hits = seg_hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        hits = (self._per_segment(scan, kern, "doc_id long, score double")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         return self.hydrate(hits) if hydrate else hits
 
     def search_dismax(self, words, field: str = "content",
@@ -1743,9 +1757,10 @@ class SearchEngine:
         through ``tie`` in [0, 1], so a doc matching one term strongly
         outranks a doc matching every term weakly (the "pick the best
         clause" semantics a plain BM25 sum inverts). tie=1 is bitwise
-        the flat OR query's sum; tie=0 the pure max. Same
-        scatter-gather plan as :meth:`search` (term-pruned scan,
-        per-segment Arrow kernel, TakeOrdered merge)."""
+        the flat OR query's sum; tie=0 the pure max. Served like
+        :meth:`search`: one driver read of df_global, the dismax kernel
+        in :meth:`_per_segment`'s map-only segment tasks, TakeOrdered
+        merge in the same job."""
         if isinstance(words, str):
             words = [words]
         if not 0.0 <= tie <= 1.0:
@@ -1757,11 +1772,9 @@ class SearchEngine:
             float(tie), int(self.stats["n_docs"]),
             float(self.stats["avgdl"]), k, on, off, tuple(or_flags),
             self.stats["k1"], self.stats["b"], self.stats["block_size"],
-            read_df_global(self._ts_ds, terms))
-        seg_hits = (self._postings_for(terms)
-                    .groupBy("segment_id")
-                    .applyInPandas(kern, "doc_id long, score double"))
-        hits = seg_hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            self._df_global(terms))
+        hits = (self._per_segment(terms, kern, "doc_id long, score double")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         return self.hydrate(hits) if hydrate else hits
 
     def facet_counts(self, q: TermQuery, by=("lang",), on: int = 0,
@@ -1798,12 +1811,7 @@ class SearchEngine:
             return self._empty_bool(hydrate)
         kern = _make_bool_kernel(q.to_json(), on, off, tuple(or_flags),
                                  self.stats["block_size"])
-        out = (
-            self._postings_for(terms)
-            .groupBy("segment_id")
-            .applyInPandas(kern, "doc_id long")
-            .orderBy("doc_id")
-        )
+        out = self._per_segment(terms, kern, "doc_id long").orderBy("doc_id")
         return self.hydrate_join(out) if hydrate else out
 
     def search_bool_not(self, q: TermQuery, exclude: TermQuery,
@@ -1813,7 +1821,7 @@ class SearchEngine:
         And/Or IR): all matches of ``q`` MINUS all matches of
         ``exclude``, ascending doc_id — :meth:`search_bool` of
         ``AndNot(q, exclude)``, so both trees evaluate inside ONE
-        per-segment kernel over one shared term-pruned postings scan
+        per-segment kernel over one shared term-pruned postings read
         (no second job, no anti-join shuffle) and phrase pseudo-leaves
         are refused the same way. Bit filters apply to both sides (the
         flag context frames the whole request). A bare NOT is

@@ -362,6 +362,20 @@ def positions_meta(index_dir: str) -> dict | None:
         return json.load(fh)
 
 
+def require_positions(index_dir: str, fields) -> None:
+    """Raise ValueError unless a complete sidecar covers every one of
+    ``fields`` — the same errors on both serving tiers."""
+    meta = positions_meta(index_dir)
+    if meta is None:
+        raise ValueError(
+            "this query needs the positional sidecar; run "
+            "operators.positions.build_positions(spark, index_dir) first")
+    for f in sorted(fields):
+        if f not in meta["fields"]:
+            raise ValueError(f"field {f!r} has no positions (sidecar "
+                             f"covers {meta['fields']})")
+
+
 def build_positions(spark: SparkSession, index_dir: str,
                     fields=DEFAULT_POSITION_FIELDS) -> dict:
     """Build the positional sidecar for an existing index directory,

@@ -13,7 +13,7 @@ point-query serving tier.
 :class:`LocalSearcher` is that serving tier. It reads the SAME on-disk
 index through pyarrow's dataset API — partition-pruned to the query
 terms' ``bucket=`` directories (v5 layout), row-group-pruned by the
-term-sorted file statistics, i.e. exactly the reads the Spark plan
+term-sorted file statistics, i.e. the reads each Spark segment task
 performs, minus the scheduler — and scores with the SAME
 ``_score_segment_rows`` numpy kernels the executor kernels run, via the
 SAME ``resolve_search_spec`` strategy resolution. Every result is
@@ -60,20 +60,18 @@ from quicker_spark.engine import (
     _row_to_encoded,
     _score_segment_rows,
     batch_entries,
+    check_fresh,
     full_match_spec,
     phrase_leaf_ids,
     phrase_query,
     read_df_global,
     resolve_search_spec,
 )
+from quicker_spark.engine import StaleIndexError  # noqa: F401 (re-export)
 from quicker_spark.functions.buckets import term_bucket
 from quicker_spark.operators.build import IndexConfig
+from quicker_spark.operators.positions import require_positions
 from quicker_spark.plans.term_query import TermQuery
-
-
-class StaleIndexError(RuntimeError):
-    """The index was mutated (stats.json changed) after this searcher
-    opened it; re-open a fresh LocalSearcher on the new generation."""
 
 
 class LocalSearcher:
@@ -118,14 +116,7 @@ class LocalSearcher:
 
     # -- residency ----------------------------------------------------------
     def _check_fresh(self) -> None:
-        try:
-            m = os.path.getmtime(self._stats_path)
-        except FileNotFoundError:
-            raise StaleIndexError(f"index gone: {self.index_dir}")
-        if m != self._stats_mtime:
-            raise StaleIndexError(
-                "index mutated since open (stats.json changed); "
-                "re-open a LocalSearcher on the new generation")
+        check_fresh(self.index_dir, self._stats_mtime, "LocalSearcher")
 
     def _resident(self, cache: OrderedDict, terms: set[str], load) -> dict:
         """LRU-resident entries of ``cache`` for ``terms``: hits move to
@@ -154,7 +145,7 @@ class LocalSearcher:
 
     def _pruned_filter(self, missing: list[str]):
         """term IN missing, plus the bucket-directory pruning the Spark
-        plan gets from _bucket_filter."""
+        tier's file selection applies (SearchEngine._segment_files)."""
         import pyarrow.compute as pc
 
         bks = sorted({term_bucket(t, self._n_buckets) for t in missing})
@@ -195,19 +186,7 @@ class LocalSearcher:
     def _positions_dataset(self, fields: set[str]):
         """Open (once) and validate the positional sidecar for the
         phrase fields — same errors as the Spark path."""
-        from quicker_spark.operators.positions import positions_meta
-
-        meta = positions_meta(self.index_dir)
-        if meta is None:
-            raise ValueError(
-                "phrase clauses need the positional sidecar; run "
-                "operators.positions.build_positions(spark, index_dir) "
-                "first")
-        for f in fields:
-            if f not in meta["fields"]:
-                raise ValueError(
-                    f"field {f!r} has no positions (sidecar covers "
-                    f"{meta['fields']})")
+        require_positions(self.index_dir, fields)
         if self._pos_ds is None:
             import pyarrow.dataset as pads
             self._pos_ds = pads.dataset(

@@ -1,8 +1,8 @@
 """Serving-latency measurement on a large single-segment index.
 
 BASELINE.md tracks top-k BM25 p50 on a 150k-doc single-segment index —
-the worst case for the segment-kernel scorers (one applyInPandas group,
-so one core does all kernel work; multi-segment indexes parallelize).
+the worst case for the segment-kernel scorers (one segment task, so
+one core does all kernel work; multi-segment indexes parallelize).
 Round 2 measured 1.4-2.0 s there with the per-doc pivot-walk kernels;
 this script re-measures after the round-3 interval-at-a-time rewrite.
 

@@ -1,13 +1,13 @@
 """Multi-segment serving: 1M-doc p50 + batched throughput (queries/sec).
 
 BENCH.md's serving p50 was measured on a 150k-doc SINGLE-segment index —
-the kernel worst case (one applyInPandas group = one core does all the
+the kernel worst case (one segment task = one core does all the
 scoring). This script measures the scale shape instead: a 1M-doc,
 multi-segment index where segments score in parallel (Spark's stage
 execution IS the reference's scatter-gather, sentinel.go:137-187), plus
 `SearchEngine.search_many` batch throughput — N heterogeneous queries
-answered by ONE Spark job over one shared pruned postings scan, the
-cluster-serving amortization shape.
+answered by one map-only segment stage over one shared pruned read per
+segment, the cluster-serving amortization shape.
 
 Usage: python scripts/serving_scale_bench.py [--docs 1000000]
        [--seg-docs 100000] [--reps 5] [--cpus 32] [--batch 24]
@@ -73,7 +73,7 @@ def main() -> None:
         return (Or if kind == "or" else And)(
             *[NewTermQuery("content", t) for t in terms])
 
-    # -- single-query p50, auto mode (cost-based strategy pick) ------------
+    # -- single-query p50, auto mode (TAAT) vs the pruned scorers ----------
     lat: dict[str, dict] = {}
     for mode in ("auto", "wand", "conj"):
         lats = []

@@ -2,7 +2,7 @@
 
 The batch path must be rank- AND score-identical to one-at-a-time
 `search` calls (it runs the same per-segment code per query), while
-planning ONE postings scan + ONE Spark job for the whole batch — the
+planning ONE postings read per segment for the whole batch — the
 property that makes it the cluster serving shape (reference multiplexes
 concurrent RPCs over one resident index the same way,
 index_service/sentinel.go:137-187).
@@ -168,14 +168,24 @@ def test_batch_empty_inputs(eng):
     assert got == {"ok"}
 
 
-def test_batch_plans_one_postings_scan(eng):
-    """The whole batch must read the postings table ONCE (that single
-    shared scan is the point of batching)."""
-    plan = eng.search_many(_queries(), k=5)._jdf.queryExecution() \
+def test_batch_plans_one_postings_scan(eng, monkeypatch):
+    """The whole batch must read the postings ONCE (that single shared
+    read is the point of batching): one file selection for the union of
+    every query's terms, and one segment stage (map node) in the plan."""
+    calls = []
+    select = eng._segment_files
+
+    def spy(tree, terms, segments=None):
+        calls.append(set(terms))
+        return select(tree, terms, segments)
+
+    monkeypatch.setattr(eng, "_segment_files", spy)
+    qs = _queries()
+    plan = eng.search_many(qs, k=5)._jdf.queryExecution() \
         .executedPlan().toString()
-    scans = [ln for ln in plan.splitlines()
-             if "Scan parquet" in ln and "postings" in ln]
-    assert len(scans) == 1, plan
+    assert calls == [set().union(*(q.terms() for q in qs.values()))]
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Scan parquet" not in plan, plan
 
 
 def test_batch_nested_must_not_matches_single(eng):

@@ -340,6 +340,30 @@ def test_stale_after_maintenance(spark, tmp_path):
     assert 0 not in set(fresh.search(Or(_t("def")), k=50)["doc_id"])
 
 
+def test_engine_stale_after_maintenance(spark, tmp_path):
+    """A SearchEngine opened before maintenance refuses the replaced
+    generation with StaleIndexError (not a missing-file error from its
+    old listings); a fresh engine serves the new one."""
+    from quicker_spark.operators.maintain import delete_docs
+
+    out = str(tmp_path / "idx_stale_engine")
+    build_index(spark, spark.createDataFrame(corpus_pdf(200)), out,
+                IndexConfig(seg_docs=100), resume=False)
+    eng = SearchEngine(spark, out)
+    assert eng.search(Or(_t("def")), k=3).collect()
+    delete_docs(spark, out, [0, 1])
+    for call in (lambda: eng.search(Or(_t("def")), k=3).collect(),
+                 lambda: eng.search_many({"a": Or(_t("def"))}).collect(),
+                 lambda: eng.expand_prefix("content", "de")):
+        with pytest.raises(StaleIndexError):
+            call()
+    fresh = SearchEngine(spark, out)
+    got = {r["doc_id"] for r in fresh.search(Or(_t("def")), k=50).collect()}
+    assert got and not got & {0, 1}
+    _assert_same(fresh.search(Or(_t("def")), k=50),
+                 LocalSearcher(out).search(Or(_t("def")), k=50))
+
+
 # -- term-dictionary expansion + query strings on the local tier --------------
 
 def test_local_expansions_equal_engine(eng, ls):

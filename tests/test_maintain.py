@@ -20,6 +20,7 @@ from quicker_spark.fixtures import corpus_pdf
 from quicker_spark.operators.build import IndexConfig, build_index
 from quicker_spark.operators.maintain import delete_docs, upsert_docs
 from quicker_spark.oracle import Oracle
+from quicker_spark.serving import LocalSearcher
 from quicker_spark.plans.term_query import And, NewTermQuery, Or
 
 N_DOCS = 300
@@ -156,8 +157,21 @@ def test_upsert_docs(spark, index_dir):
     oracle = Oracle(__import__("pandas").concat([kept, batch]))
     _assert_matches_oracle(spark, index_dir, oracle)
 
-    # fresh-id contract: every upserted doc got an id past the old max
+    # the upserted index spans several waves, rewritten segments and a
+    # new one (3); both tiers read it bitwise identically
     eng = SearchEngine(spark, index_dir)
+    trees = eng.describe()["trees"]["postings"]
+    assert trees["waves"] >= 2 and trees["segments"] == 4
+    ls = LocalSearcher(index_dir)
+    for q in QUERIES:
+        for kw in ({}, {"exclude": NewTermQuery("content", "zebra")}):
+            want = [(r["doc_id"], r["score"])
+                    for r in eng.search(q, k=10, **kw).collect()]
+            got = ls.search(q, k=10, **kw)
+            assert want and list(zip(got["doc_id"].tolist(),
+                                     got["score"].tolist())) == want
+
+    # fresh-id contract: every upserted doc got an id past the old max
     new_rows = eng.docs.filter(F.col("doc_id") > old_max).count()
     assert new_rows == len(batch)
     # replaced keys exist once: originals out, whole batch in

@@ -39,32 +39,73 @@ def _formatted(df) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
-def test_term_filter_pushed_to_postings_scan(eng):
-    df = eng._postings_for({"content\x01def", "content\x01return"})
-    plan = _formatted(df)
-    assert "PushedFilters" in plan
-    # the IN-filter on term must reach the parquet reader
-    assert "In(term" in plan or "term IN" in plan
-
-
 def test_postings_scan_is_bucket_partition_pruned(eng):
-    """v5 layout contract: the term-pruned scan must carry
-    PartitionFilters on the terms' md5 buckets — the scan reads
-    1/term_buckets of every segment directory, not the whole tree.
-    Directory-level pruning is what holds at 10^12 docs, where row-group
-    stats alone cannot skip files holding hash-random term subsets."""
+    """v5 layout contract: a search selects, for every segment, exactly
+    the files in its query terms' md5-bucket directories — a segment task
+    reads len(buckets)/term_buckets of its directory, never the whole
+    tree. Directory-level pruning is what holds at 10^12 docs, where
+    row-group stats alone cannot skip files holding hash-random term
+    subsets."""
+    import glob
+    import os
+    import re
+
     from quicker_spark.functions.buckets import term_bucket
 
     terms = {"content\x01def", "content\x01return"}
     nb = int(eng.stats["term_buckets"])
     assert nb > 1
-    plan = _formatted(eng._postings_for(terms))
-    scan = [ln for ln in plan.splitlines()
-            if "PartitionFilters" in ln and "bucket" in ln]
-    assert scan, plan
-    # the pruned bucket set is exactly the query terms' buckets
-    expect = sorted({term_bucket(t, nb) for t in terms})
-    assert any(str(b) in scan[0] for b in expect), (expect, scan)
+    buckets = {term_bucket(t, nb) for t in terms}
+    want: dict = {}
+    for path in glob.glob(os.path.join(eng.index_dir, "postings", "*", "*",
+                                       "*", "*.parquet")):
+        seg, bk = re.search(r"segment_id=(\d+)/bucket=(\d+)/", path).groups()
+        if int(bk) in buckets:
+            want.setdefault(int(seg), set()).add(os.path.abspath(path))
+    assert set(want) == {0, 1}   # every segment holds the terms
+    got = eng._segment_files(eng._post_files, terms)
+    assert {s: set(fs) for s, fs in got.items()} == want
+    assert {s: set(fs) for s, fs in eng._segment_files(
+        eng._post_files, terms, segments={1}).items()} == {1: want[1]}
+
+
+def test_term_filter_pushed_to_postings_scan(eng, tmp_path, monkeypatch):
+    """A segment task reads its files through ``engine.term_filter``
+    (row-group spans AND ``term IN``): on a term-sorted file of many row
+    groups the filter keeps at most one row group per query term, and the
+    frame holds exactly the query terms' rows."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from quicker_spark import engine as E
+
+    rows = (pads.dataset(eng.index_dir + "/postings", partitioning="hive")
+            .to_table(filter=pc.field("segment_id") == 0)
+            .drop_columns(["wave", "segment_id", "bucket"])
+            .sort_by("term"))
+    path = str(tmp_path / "seg0.parquet")
+    pq.write_table(rows, path, row_group_size=32)
+    n_groups = pq.ParquetFile(path).num_row_groups
+    assert n_groups >= 8
+    vocab = rows.column("term").to_pylist()
+    terms = sorted({vocab[0], vocab[len(vocab) // 2], vocab[-1],
+                    "content\x01qs_absent_term"})
+    seen = []
+    term_filter = E.term_filter
+
+    def spy(ds, want):
+        seen.append(list(want))
+        f = term_filter(ds, want)
+        seen.append(sum(len(frag.split_by_row_group(f))
+                        for frag in ds.get_fragments()))
+        return f
+
+    monkeypatch.setattr(E, "term_filter", spy)
+    pdf = E._read_segment([path], terms, [], [])
+    assert seen[0] == terms
+    assert 1 <= seen[1] <= len(terms) < n_groups
+    assert sorted(pdf["term"]) == sorted(t for t in vocab if t in terms)
 
 
 def test_postings_scan_prunes_columns(eng):
@@ -199,16 +240,35 @@ def test_lsh_candidates_is_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_explain_scan_is_term_and_segment_pruned(eng):
-    ex = eng.explain(Or(NewTermQuery("content", "def"),
-                        NewTermQuery("content", "return")), k=5)
+def test_explain_scan_is_term_and_segment_pruned(eng, monkeypatch):
+    """explain re-reads ONLY the winners' postings: its file selection is
+    the scored terms' bucket files of the winners' segments, and its
+    plan is one map-only stage (no exchange) under the final order."""
+    q = Or(NewTermQuery("content", "def"), NewTermQuery("content", "return"))
+    hits = eng.search(q, k=3).collect()
+    seg_docs = int(eng.stats["seg_docs"])
+    winners = {r["doc_id"] // seg_docs for r in hits}
+    calls = []
+    select = eng._segment_files
+
+    def spy(tree, terms, segments=None):
+        out = select(tree, terms, segments)
+        calls.append((sorted(terms), segments, set(out)))
+        return out
+
+    monkeypatch.setattr(eng, "_segment_files", spy)
+    ex = eng.explain(q, k=3)
+    # the winners' search, then the re-read of the winners' segments
+    assert [c[1] for c in calls] == [None, winners]
+    assert calls[1] == (["content\x01def", "content\x01return"], winners,
+                        winners)
     plan = _formatted(ex)
-    # winners' postings re-read: term IN-filter pushed, and the scan is
-    # restricted to the winners' segment DIRECTORIES
-    assert "In(term" in plan or "term IN" in plan
-    pf = [ln for ln in plan.splitlines()
-          if "PartitionFilters" in ln and "segment_id" in ln]
-    assert pf, "explain postings scan lost its segment partition filter"
+    tree = _tree(plan)
+    at_map = [i for i, ln in enumerate(tree) if "MapInPandas" in ln]
+    assert len(at_map) == 1, plan
+    assert all(i < at_map[0] for i, ln in enumerate(tree)
+               if "Exchange" in ln), plan   # only the final order's
+    assert {r["doc_id"] for r in ex.collect()} == {r["doc_id"] for r in hits}
 
 
 def test_sig_terms_foreground_scan_is_column_pruned(eng):
@@ -256,4 +316,66 @@ def test_topk_plans_read_no_term_stats(eng):
         plan = _formatted(df)
         assert "term_stats" not in plan, (verb, plan)
         assert "BroadcastExchange" not in plan, (verb, plan)
-        assert "FlatMapGroupsInPandas" in plan, (verb, plan)  # the kernel
+        assert "MapInPandas" in plan, (verb, plan)  # the segment kernel
+        assert "FlatMapGroupsInPandas" not in plan, (verb, plan)
+
+
+def _tree(plan: str) -> list[str]:
+    """The operator-tree lines of a formatted plan (root first)."""
+    return plan.split("\n\n", 1)[0].splitlines()
+
+
+def test_search_plans_have_no_exchange(eng):
+    """Segment kernels run in one map-only stage over the segment list:
+    no top-k verb's plan (nor the full match set's) shuffles — a
+    groupBy(segment_id) would add an exchange and a second job."""
+    from quicker_spark.operators.positions import build_positions
+
+    build_positions(eng.spark, eng.index_dir)
+    q = Or(NewTermQuery("content", "def"), NewTermQuery("content", "return"))
+    for verb, df in {
+            "search": eng.search(q, k=5),
+            "search_exclude": eng.search(
+                q, k=5, exclude=NewTermQuery("content", "import")),
+            "search_phrase": eng.search_phrase(["return", "self"], k=5),
+            "search_dismax": eng.search_dismax(["def", "return"], k=5),
+            "search_synonyms": eng.search_synonyms(
+                {"fn": ["def", "func"]}, k=5),
+            "_scored_matches": eng._scored_matches(q)}.items():
+        plan = _formatted(df)
+        assert "MapInPandas" in plan, (verb, plan)
+        assert "Exchange" not in plan, (verb, plan)
+
+
+def test_search_runs_one_spark_job(eng):
+    """One ``search(...).collect()`` is ONE Spark job: the segment tasks
+    and the TakeOrdered merge share it."""
+    sc = eng.spark.sparkContext
+    q = Or(NewTermQuery("content", "def"), NewTermQuery("content", "return"))
+    for i, run in enumerate((lambda: eng.search(q, k=5).collect(),
+                             lambda: eng.search(q, k=5, exclude=NewTermQuery(
+                                 "content", "qs_absent")).collect())):
+        group = f"one-job-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            assert run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_search_many_exchanges_sit_above_the_map(eng):
+    """``search_many`` scores every query in the same map-only segment
+    stage; its exchanges are the per-qid window and the global order,
+    both above the map node — none is keyed on segment_id."""
+    q = Or(NewTermQuery("content", "def"), NewTermQuery("content", "return"))
+    plan = _formatted(eng.search_many(
+        {"a": q, "b": NewTermQuery("content", "import")}, k=5))
+    tree = _tree(plan)
+    at_map = [i for i, ln in enumerate(tree) if "MapInPandas" in ln]
+    exchanges = [i for i, ln in enumerate(tree) if "Exchange" in ln]
+    assert len(at_map) == 1 and exchanges, plan
+    assert max(exchanges) < at_map[0], plan   # root first: above the map
+    parts = [ln for ln in plan.splitlines() if "partitioning(" in ln]
+    assert sum("hashpartitioning(qid" in ln for ln in parts) == 1, plan
+    assert not any("segment_id" in ln for ln in parts), plan
