@@ -389,6 +389,213 @@ def check_fresh(index_dir: str, opened_mtime: float, reader: str) -> None:
             f"re-open a {reader} on the new generation")
 
 
+# Most term_stats rows one dictionary verb reads into the calling
+# process. On a 4-core host a 10^5-row slice costs 0.14 s (prefix) to
+# 0.23 s (fuzzy) and 60-80 MB of peak memory, growing linearly (10^6
+# rows: 1.7-3.3 s, 380-560 MB), so this bound keeps one call under
+# ~0.6 s and ~200 MB. Every slice of the test and benchmark
+# vocabularies (<= 2.5*10^4 terms) sits far below it; a one-letter
+# prefix of a 10^9-term vocabulary sits far above it.
+DICT_SLICE_MAX_ROWS = 250_000
+
+_REGEX_META = set(".^$*+?{}[]|()\\")
+
+
+def _count(n, name: str) -> int:
+    n = int(n)
+    if n < 0:
+        raise ValueError(f"{name} must be >= 0, got {n}")
+    return n
+
+
+def _ranked(sl: pd.DataFrame, by: list, ascending: list,
+            n: int) -> pd.DataFrame:
+    return sl.sort_values(by, ascending=ascending, kind="mergesort").head(n)
+
+
+def _regexp_anchor(pattern: str) -> str:
+    """The literal prefix of every whole-word match of ``pattern``: the
+    run before its first metacharacter, minus the run's last character
+    when that metacharacter (``?``, ``*``, ``{``) can make it optional;
+    empty when the pattern has a ``|`` (an alternative may start with
+    anything)."""
+    if "|" in pattern:
+        return ""
+    for i, ch in enumerate(pattern):
+        if ch in _REGEX_META:
+            return pattern[:max(i - 1, 0)] if ch in "?*{" else pattern[:i]
+    return pattern
+
+
+def _levenshtein(words, word: str) -> np.ndarray:
+    """Edit distance (substitution cost 1, no transpositions) of each of
+    ``words`` to ``word``: the Wagner-Fischer table of every word at
+    once, one numpy row step per character of the longest word."""
+    n, m = len(words), len(word)
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=n)
+    width = int(lens.max(initial=0))
+    chars = np.array(words, dtype=f"<U{width + 1}").view(np.int32) \
+        .reshape(n, width + 1)
+    target = np.array([ord(c) for c in word], dtype=np.int32)
+    prev = np.broadcast_to(np.arange(m + 1), (n, m + 1))
+    dist = np.full(n, m, dtype=np.int64)      # the empty words' distance
+    for i in range(1, width + 1):
+        cur = np.empty((n, m + 1), dtype=np.int64)
+        cur[:, 0] = i
+        sub = chars[:, i - 1, None] != target
+        for j in range(1, m + 1):
+            cur[:, j] = np.minimum(np.minimum(prev[:, j], cur[:, j - 1]) + 1,
+                                   prev[:, j - 1] + sub[:, j - 1])
+        dist[lens == i] = cur[lens == i, m]
+        prev = cur
+    return dist
+
+
+class TermDictionary:
+    """The term-dictionary verbs, one implementation for both tiers.
+
+    ``term_stats`` is term-sorted and range-partitioned in ~1 MB row
+    groups, so every verb reads one string-range slice of it with
+    pyarrow in the calling process (row groups outside the range are
+    pruned on their min/max statistics), then filters and ranks the
+    slice in pandas: no Spark job runs. The index directory must
+    therefore be readable with pyarrow where the verb is called.
+    Subclasses provide ``_ts_ds`` (the ``term_stats`` dataset) and
+    ``_check_fresh``.
+
+    A negative count, an invalid pattern, and a slice of more than
+    :data:`DICT_SLICE_MAX_ROWS` rows raise ValueError before any result
+    is built."""
+
+    def _dict_slice(self, field: str, start: str) -> pd.DataFrame:
+        """(term, df_global, word) rows of ``field`` whose word starts
+        with ``start`` ('\\x80' upper-bounds every [a-z0-9_\\x01]
+        vocabulary byte), read batch by batch so an over-long slice is
+        refused before it is collected. Every verb reads through here,
+        so this is where they refuse a generation that maintenance has
+        replaced."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        self._check_fresh()
+        pref = f"{field}\x01{start}"
+        scan = self._ts_ds.scanner(
+            columns=["term", "df_global"],
+            filter=(pc.field("term") >= pref) & (pc.field("term")
+                                                 < pref + "\x80"))
+        batches, rows = [], 0
+        for b in scan.to_batches():
+            rows += b.num_rows
+            if rows > DICT_SLICE_MAX_ROWS:
+                raise ValueError(
+                    f"the dictionary slice {field}:{start}* holds more "
+                    f"than {DICT_SLICE_MAX_ROWS} terms (read {rows} so "
+                    "far), more than one process expands; lengthen the "
+                    "prefix")
+            batches.append(b)
+        sl = pa.Table.from_batches(batches, scan.projected_schema) \
+            .to_pandas()
+        return sl.assign(word=sl["term"].str[len(field) + 1:])
+
+    def _within_edits(self, field: str, word: str, max_edits: int,
+                      prefix_len: int) -> pd.DataFrame:
+        """Slice rows whose word starts with ``word[:prefix_len]`` (the
+        required common prefix) and lies within ``max_edits``
+        Levenshtein of ``word``, with their ``distance``; a length band
+        drops most rows before any distance is computed."""
+        if max_edits < 0:
+            raise ValueError("max_edits must be >= 0")
+        sl = self._dict_slice(field, word[:prefix_len])
+        sl = sl[(sl["word"].str.len() - len(word)).abs() <= max_edits]
+        sl = sl.assign(distance=_levenshtein(sl["word"].tolist(), word))
+        return sl[sl["distance"] <= max_edits]
+
+    def expand_prefix(self, field: str, prefix: str,
+                      max_expansions: int = 64) -> list[str]:
+        """Prefix -> matching vocabulary terms, highest df first, ties by
+        term: the deterministic top-N rewrite of Lucene's PrefixQuery."""
+        n = _count(max_expansions, "max_expansions")
+        sl = self._dict_slice(field, prefix)
+        return _ranked(sl, ["df_global", "term"], [False, True],
+                       n)["term"].tolist()
+
+    def expand_fuzzy(self, field: str, word: str, max_edits: int = 1,
+                     prefix_len: int = 1,
+                     max_expansions: int = 64) -> list[str]:
+        """Fuzzy expansion (Lucene FuzzyQuery rewrite): vocabulary terms
+        within ``max_edits`` Levenshtein of the lower-cased ``word``
+        whose first ``prefix_len`` characters match it literally —
+        Lucene's required common prefix, which bounds the dictionary
+        slice (prefix_len=0 reads the field's whole vocabulary).
+        Ranked distance asc, df desc, term asc; top
+        ``max_expansions``."""
+        n = _count(max_expansions, "max_expansions")
+        sl = self._within_edits(field, str(word).lower(), int(max_edits),
+                                prefix_len)
+        return _ranked(sl, ["distance", "df_global", "term"],
+                       [True, False, True], n)["term"].tolist()
+
+    def expand_regexp(self, field: str, pattern: str,
+                      max_expansions: int = 64) -> list[str]:
+        """Regexp expansion (Lucene RegexpQuery rewrite): vocabulary
+        terms whose WHOLE word matches ``pattern`` (Python ``re``
+        syntax, applied with ``fullmatch``). The pattern's literal
+        prefix (:func:`_regexp_anchor`) bounds the dictionary slice, so
+        ``tab.*le`` reads the ``tab`` range; an unanchored pattern
+        reads the field's whole vocabulary. Ranked df desc, term asc;
+        top ``max_expansions``."""
+        import re
+
+        n = _count(max_expansions, "max_expansions")
+        try:
+            rx = re.compile(pattern)
+        except re.error as e:
+            raise ValueError(f"invalid regexp {pattern!r}: {e}") from None
+        sl = self._dict_slice(field, _regexp_anchor(pattern))
+        sl = sl[np.array([rx.fullmatch(w) is not None for w in sl["word"]],
+                         dtype=bool)]
+        return _ranked(sl, ["df_global", "term"], [False, True],
+                       n)["term"].tolist()
+
+    @staticmethod
+    def wildcard_to_regexp(pattern: str) -> str:
+        """Lucene WildcardQuery syntax -> whole-word regexp source:
+        ``*`` = any run (incl. empty), ``?`` = exactly one char; every
+        other char is matched literally (tokenizer terms are
+        [a-z0-9_]+, but escaping keeps arbitrary input safe)."""
+        out = []
+        for ch in pattern:
+            if ch == "*":
+                out.append("[a-z0-9_]*")
+            elif ch == "?":
+                out.append("[a-z0-9_]")
+            elif ch in _REGEX_META:
+                out.append("\\" + ch)
+            else:
+                out.append(ch)
+        return "".join(out)
+
+    def suggest(self, field: str, word: str, max_edits: int = 2,
+                prefix_len: int = 1, n: int = 5) -> pd.DataFrame:
+        """Spell suggestion ("did you mean", the ES term suggester /
+        Lucene DirectSpellChecker contract) -> pandas (word, distance,
+        df): the :meth:`expand_fuzzy` candidates of the lower-cased
+        ``word``, minus the word itself (a correct word is not a
+        suggestion for itself), ranked distance asc, df desc, word asc;
+        top ``n``. ``df`` lets callers apply DirectSpellChecker's
+        more-popular refinement."""
+        n = _count(n, "n")
+        word = str(word).lower()
+        sl = self._within_edits(field, word, int(max_edits), prefix_len)
+        sl = _ranked(sl[sl["word"] != word],
+                     ["distance", "df_global", "word"], [True, False, True],
+                     n)
+        return pd.DataFrame({
+            "word": sl["word"].to_numpy(dtype=object),
+            "distance": sl["distance"].to_numpy(dtype=np.int64),
+            "df": sl["df_global"].to_numpy(dtype=np.int64)})
+
+
 def _bucket_files(root: str) -> dict:
     """{bucket: {segment: [file paths]}} of a ``segment_id=S/bucket=B``
     partitioned tree, from one pyarrow dataset listing (no file read)."""
@@ -640,7 +847,7 @@ _HYDRATE_MAX = 10_000
 _SIG_TERMS_BCAST_MAX = 2_000_000
 
 
-class SearchEngine:
+class SearchEngine(TermDictionary):
     """Load an index directory built by :func:`quicker_spark.operators.build.build_index`."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -1199,101 +1406,41 @@ class SearchEngine:
                 .limit(int(k)))
         return self.hydrate(hits) if hydrate else hits
 
-    def expand_prefix(self, field: str, prefix: str,
-                      max_expansions: int = 64) -> list[str]:
-        """Prefix -> matching vocabulary terms from the (vocabulary-sized)
-        term-stats table, highest-df first, ties by term — the
-        deterministic top-N rewrite Lucene's PrefixQuery uses. The
-        StartsWith filter pushes down to the term-sorted parquet as a
-        string range, so this reads a slice of the dictionary, never the
-        postings tree."""
-        key = f"{field}\x01{prefix}"
-        rows = (self.term_stats
-                .filter(F.col("term").startswith(key))
-                .orderBy(F.desc("df_global"), F.asc("term"))
-                .limit(int(max_expansions)).collect())
-        return [r["term"] for r in rows]
+    def _search_expansion(self, terms: list[str], k: int, on: int,
+                          off: int, or_flags: tuple,
+                          hydrate: bool) -> DataFrame:
+        """BM25 top-k of a dictionary expansion served as one flat OR
+        through :meth:`search` (one Spark job), rank-identical to
+        spelling the OR out by hand. Each expansion scores with its OWN
+        idf (a rare misspelling outranks its common neighbor for docs
+        that contain it — Lucene's constant-score rewrite is a
+        different, cheaper contract; this is the scoring one). No
+        reference analog (the reference matches whole keywords only)."""
+        if not terms:
+            return self._empty_hits(hydrate)
+        return self.search(Or(*[TermQuery(keyword=t) for t in terms]),
+                           k=k, on=on, off=off, or_flags=or_flags,
+                           hydrate=hydrate)
 
     def search_prefix(self, field: str, prefix: str, k: int = 10,
                       on: int = 0, off: int = 0, or_flags: tuple = (),
                       max_expansions: int = 64,
                       hydrate: bool = False) -> DataFrame:
-        """BM25 top-k for a prefix query (``field:prefix*``): expand the
-        prefix against the term dictionary, then serve the expansion as
-        a flat OR through the normal WAND path — rank-identical to
-        spelling the OR out by hand. No reference analog (the reference
-        matches whole keywords only)."""
-        terms = self.expand_prefix(field, prefix, max_expansions)
-        if not terms:
-            return self._empty_hits(hydrate)
-        q = TermQuery(should=tuple(TermQuery(keyword=t) for t in terms)) \
-            if len(terms) > 1 else TermQuery(keyword=terms[0])
-        return self.search(q, k=k, on=on, off=off, or_flags=or_flags,
-                           hydrate=hydrate)
-
-    def expand_fuzzy(self, field: str, word: str, max_edits: int = 1,
-                     prefix_len: int = 1,
-                     max_expansions: int = 64) -> list[str]:
-        """Fuzzy expansion (Lucene FuzzyQuery rewrite): vocabulary terms
-        within ``max_edits`` Levenshtein distance of ``word``. The first
-        ``prefix_len`` characters must match literally — Lucene's
-        required common prefix — which turns the dictionary scan into a
-        pushed-down string-range slice of the term-sorted parquet
-        instead of a full vocabulary pass (at web scale the vocabulary
-        is billions of terms; an unanchored scan per query is the wrong
-        plan, so prefix_len=0 is allowed but costs a full slice). A
-        cheap length-band prefilter (|len(t)| within max_edits of
-        len(word)) runs JVM-side before the levenshtein; selection is
-        deterministic: distance asc, then df desc, then term asc, top
-        ``max_expansions``."""
-        if max_edits < 0:
-            raise ValueError("max_edits must be >= 0")
-        pref = f"{field}\x01{word[:prefix_len]}" if prefix_len \
-            else f"{field}\x01"
-        wordpart = F.expr(f"substring(term, {len(field) + 2})")
-        dist = F.levenshtein(wordpart, F.lit(word))
-        rows = (self.term_stats
-                .filter(F.col("term").startswith(pref))
-                .filter(F.abs(F.length(wordpart) - F.lit(len(word)))
-                        <= F.lit(int(max_edits)))
-                .withColumn("_d", dist)
-                .filter(F.col("_d") <= F.lit(int(max_edits)))
-                .orderBy(F.asc("_d"), F.desc("df_global"), F.asc("term"))
-                .limit(int(max_expansions)).collect())
-        return [r["term"] for r in rows]
+        """BM25 top-k for a prefix query (``field:prefix*``):
+        :meth:`expand_prefix`, then :meth:`_search_expansion`."""
+        return self._search_expansion(
+            self.expand_prefix(field, prefix, max_expansions), k, on, off,
+            or_flags, hydrate)
 
     def suggest(self, field: str, word: str, max_edits: int = 2,
                 prefix_len: int = 1, n: int = 5) -> DataFrame:
-        """Spell suggestion ("did you mean" — the ES term-suggester /
-        Lucene DirectSpellChecker contract): vocabulary terms within
-        ``max_edits`` Levenshtein of ``word``, the word itself excluded
-        (a correct word is not a suggestion for itself), ranked
-        (distance asc, df desc, term asc), top ``n``, returned lazily
-        as (word, distance, df). Same pushed-down dictionary-slice plan
-        as :meth:`expand_fuzzy`: the ``prefix_len`` literal-prefix
-        anchor turns the vocabulary scan into a string-range slice of
-        the term-sorted parquet, and the length band prefilters
-        JVM-side before the levenshtein. The ``df`` column lets callers
-        apply DirectSpellChecker's more-popular refinement (only
-        suggest terms more frequent than the typed one)."""
-        if max_edits < 0:
-            raise ValueError("max_edits must be >= 0")
-        word = str(word).lower()
-        pref = f"{field}\x01{word[:prefix_len]}" if prefix_len \
-            else f"{field}\x01"
-        wordpart = F.expr(f"substring(term, {len(field) + 2})")
-        return (self.term_stats
-                .filter(F.col("term").startswith(pref))
-                .filter(F.abs(F.length(wordpart) - F.lit(len(word)))
-                        <= F.lit(int(max_edits)))
-                .select(wordpart.alias("word"),
-                        F.levenshtein(wordpart, F.lit(word))
-                        .cast("long").alias("distance"),
-                        F.col("df_global").cast("long").alias("df"))
-                .filter((F.col("distance") <= F.lit(int(max_edits)))
-                        & (F.col("word") != F.lit(word)))
-                .orderBy(F.asc("distance"), F.desc("df"), F.asc("word"))
-                .limit(int(n)))
+        """:meth:`TermDictionary.suggest` as a DataFrame (word, distance,
+        df): its <= ``n`` rows become a local relation, which collects
+        without a Spark job when it has a row (an empty one runs one
+        trivial job, as :meth:`_empty_hits` does)."""
+        return self.spark.createDataFrame(
+            super().suggest(field, word, max_edits, prefix_len, n),
+            "word string, distance long, df long")
 
     def search_fuzzy(self, field: str, word: str, k: int = 10,
                      max_edits: int = 1, prefix_len: int = 1,
@@ -1301,82 +1448,21 @@ class SearchEngine:
                      max_expansions: int = 64,
                      hydrate: bool = False) -> DataFrame:
         """BM25 top-k for a fuzzy term (``field:word~max_edits``):
-        expand against the term dictionary, then serve the expansion as
-        a flat OR through the normal WAND path — rank-identical to
-        spelling the OR out by hand. Each expansion scores with its OWN
-        idf (a rare misspelling outranks its common neighbor for docs
-        that contain it — Lucene's constant-score rewrite is a
-        different, cheaper contract; this is the scoring one). No
-        reference analog (whole-keyword matching only)."""
-        terms = self.expand_fuzzy(field, word, max_edits, prefix_len,
-                                  max_expansions)
-        if not terms:
-            return self._empty_hits(hydrate)
-        q = Or(*[TermQuery(keyword=t) for t in terms])
-        return self.search(q, k=k, on=on, off=off, or_flags=or_flags,
-                           hydrate=hydrate)
-
-    _REGEX_META = set(".^$*+?{}[]|()\\")
-
-    def expand_regexp(self, field: str, pattern: str,
-                      max_expansions: int = 64) -> list[str]:
-        """Regexp/wildcard expansion (Lucene RegexpQuery rewrite):
-        vocabulary terms whose WHOLE word matches ``pattern``. Like
-        Lucene's automaton common-prefix extraction, any literal prefix
-        of the pattern anchors the dictionary scan to a pushed-down
-        string range first, so `tab.*le` reads the `tab` slice of the
-        term-sorted parquet, never the full vocabulary (an unanchored
-        pattern is allowed but costs a full dictionary slice — the
-        vocabulary table is still tiny next to the postings tree).
-        Deterministic selection: df desc, term asc, top N."""
-        lit = []
-        for ch in pattern:
-            if ch in self._REGEX_META:
-                break
-            lit.append(ch)
-        pref = f"{field}\x01" + "".join(lit)
-        wordpart = F.expr(f"substring(term, {len(field) + 2})")
-        rows = (self.term_stats
-                .filter(F.col("term").startswith(pref))
-                .filter(wordpart.rlike(f"^(?:{pattern})$"))
-                .orderBy(F.desc("df_global"), F.asc("term"))
-                .limit(int(max_expansions)).collect())
-        return [r["term"] for r in rows]
+        :meth:`expand_fuzzy`, then :meth:`_search_expansion`."""
+        return self._search_expansion(
+            self.expand_fuzzy(field, word, max_edits, prefix_len,
+                              max_expansions), k, on, off, or_flags,
+            hydrate)
 
     def search_regexp(self, field: str, pattern: str, k: int = 10,
                       on: int = 0, off: int = 0, or_flags: tuple = (),
                       max_expansions: int = 64,
                       hydrate: bool = False) -> DataFrame:
-        """BM25 top-k for a whole-term regexp query (`field:/pattern/`):
-        dictionary expansion served as a scored OR through WAND, each
-        expansion with its own idf (same contract as prefix/fuzzy). No
-        reference analog (whole-keyword matching only)."""
-        terms = self.expand_regexp(field, pattern, max_expansions)
-        if not terms:
-            return self._empty_hits(hydrate)
-        q = Or(*[TermQuery(keyword=t) for t in terms])
-        return self.search(q, k=k, on=on, off=off, or_flags=or_flags,
-                           hydrate=hydrate)
-
-    @staticmethod
-    def wildcard_to_regexp(pattern: str) -> str:
-        """Lucene WildcardQuery syntax -> anchored regexp source:
-        ``*`` = any run (incl. empty), ``?`` = exactly one char; every
-        other char is matched literally (tokenizer terms are
-        [a-z0-9_]+, but escaping keeps arbitrary input safe). The
-        translation preserves the literal prefix, so ``tab*`` still
-        anchors the dictionary scan to the ``tab`` string range."""
-        out = []
-        for ch in pattern:
-            if ch == "*":
-                out.append("[a-z0-9_]*")
-            elif ch == "?":
-                out.append("[a-z0-9_]")
-            elif ch in SearchEngine._REGEX_META:
-                out.append("\\" + ch)
-            else:
-                out.append(ch)
-        return "".join(out)
+        """BM25 top-k for a whole-term regexp query (``field:/pattern/``):
+        :meth:`expand_regexp`, then :meth:`_search_expansion`."""
+        return self._search_expansion(
+            self.expand_regexp(field, pattern, max_expansions), k, on, off,
+            or_flags, hydrate)
 
     def search_wildcard(self, field: str, pattern: str, k: int = 10,
                         on: int = 0, off: int = 0, or_flags: tuple = (),
@@ -1653,7 +1739,8 @@ class SearchEngine:
               .agg(F.count(F.lit(1)).alias("fg_df"))
               .filter(F.col("fg_df") >= F.lit(int(min_doc_count))))
         bg = (self.term_stats
-              .filter(F.col("term").startswith(f"{field}\x01"))
+              .filter((F.col("term") >= f"{field}\x01")
+                      & (F.col("term") < f"{field}\x02"))
               .select(F.expr(f"substring(term, {len(field) + 2})")
                       .alias("word"),
                       F.col("df_global").alias("bg_df")))

@@ -119,33 +119,23 @@ def near_pairs(emb: DataFrame, threshold: float = 0.9,
 def near_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
                    n_planes: int = 16, bands: int = 8, dim: int = 64,
                    id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   verify: str = "bucket") -> DataFrame:
+                   vec_col: str = "embedding") -> DataFrame:
     """(a, b, cos): near pairs through banded sign-LSH — the scale path
     for embedding near-dup detection.
 
     Each vector gets ``n_planes`` hyperplane sign bits, grouped into
     ``bands`` band keys; a pair is a candidate iff it shares >= 1 bucket
-    (band, key). Both verify strategies return bit-identical results
-    (the pairwise dot is an ascending-d per-dimension fold — the EXACT
-    float64 add order of :func:`dot`'s Catalyst aggregate and of a SQL
-    oracle performing the same left fold) and both are exactly-once
-    WITHOUT a ``distinct`` over the candidate set: a pair colliding in m
-    buckets is kept only where its FIRST colliding band matches (band bj
-    collides iff the signatures' XOR has a zero bj-th r-bit slice).
-
-    ``verify='bucket'`` (default): ONE shuffle (repartition by bucket) +
-    a blocked all-pairs numpy verify per bucket in ``applyInPandas``.
-    Shuffles the vector ``bands``x, but never materializes candidate
-    rows — the right plan when candidates approach |all pairs| (low
-    thresholds / tight corpora).
-
-    ``verify='pairs'``: explode (id, sig) only — the wide vector column
-    stays OUT of the band shuffle; candidates come from a band-key
-    self-equi-join + the first-band filter, then vectors join back and
-    an Arrow kernel scores each pair. Shuffle ~ |candidates|, the right
-    plan at high thresholds where LSH is selective and candidates are
-    rare (true near-dup mining at 10^9 vectors).
+    (band, key). ONE shuffle (repartition by bucket) + a blocked
+    all-pairs numpy verify per bucket in ``applyInPandas``: the vector
+    shuffles ``bands``x, but candidate rows are never materialized, so
+    the plan holds when candidates approach |all pairs| (low thresholds
+    / tight corpora). The pairwise dot is an ascending-d per-dimension
+    fold — the EXACT float64 add order of :func:`dot`'s Catalyst
+    aggregate and of a SQL oracle performing the same left fold — and
+    each pair is emitted exactly once WITHOUT a ``distinct`` over the
+    candidate set: a pair colliding in m buckets is kept only where its
+    FIRST colliding band matches (band bj collides iff the signatures'
+    XOR has a zero bj-th r-bit slice).
 
     Probabilistic recall: a pair at cosine c collides per plane with
     prob 1 - arccos(c)/pi, so with 8 bands of 2 a 0.9-cosine pair is
@@ -161,8 +151,6 @@ def near_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
             f"n_planes ({n_planes}) must be divisible by bands ({bands}) — "
             "otherwise the top n_planes % bands sign bits are silently "
             "ignored and the documented recall is weakened")
-    if verify not in ("bucket", "pairs"):
-        raise ValueError(f"verify must be 'bucket' or 'pairs', got {verify!r}")
     e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
     r = n_planes // bands
     # one Arrow pass computes all n_planes sign bits as a single long;
@@ -173,76 +161,13 @@ def near_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
         .bitwiseAND(F.lit((1 << r) - 1))
         for bi in range(bands)
     ]
-    if verify == "bucket":
-        tagged = e.select(F.col(id_col), F.col("v"), sig.alias("sig"))
-        rows = tagged.select(
-            F.col(id_col), F.col("v"), F.col("sig"),
-            F.posexplode(F.array(*band_keys)).alias("band", "bkey"))
-        fn = _bucket_verify_fn(threshold, r, id_col)
-        return (rows.groupBy("band", "bkey")
-                .applyInPandas(fn, "a long, b long, cos double"))
-    return _near_pairs_pairwise(e, sig, band_keys, threshold, r, bands,
-                                id_col)
-
-
-def _near_pairs_pairwise(e: DataFrame, sig, band_keys, threshold: float,
-                         r: int, bands: int, id_col: str) -> DataFrame:
-    """verify='pairs' plan for :func:`near_pairs_lsh` (see its docstring)."""
-    signed = e.select(F.col(id_col), sig.alias("sig"))
-    rows = signed.select(
-        F.col(id_col), F.col("sig"),
-        F.posexplode(F.array(*[k.cast("string") for k in band_keys]))
-        .alias("band", "bkey"))
-    rows = rows.withColumn(
-        "band_key", F.concat_ws(":", F.col("band").cast("string"),
-                                F.col("bkey")))
-    a, b = rows.alias("a"), rows.alias("b")
-    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-    # first-colliding-band filter, pipelined inside the join stage
-    x = F.col("a.sig").bitwiseXOR(F.col("b.sig"))
-    first = F.lit(True)
-    for bj in range(bands - 1):
-        first = first & (
-            (F.lit(bj) >= F.col("a.band"))
-            | (F.shiftrightunsigned(x, bj * r)
-               .bitwiseAND(F.lit((1 << r) - 1)) != 0))
-    cand = (
-        a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (ib > ia))
-        .filter(first)
-        .select(ia.alias("a"), ib.alias("b"))
-    )
-    # norms are per-VECTOR functions — fold each once here instead of
-    # twice per candidate pair
-    va = e.select(F.col(id_col).alias("a"), F.col("v").alias("va"),
-                  F.sqrt(dot(F.col("v"), F.col("v"))).alias("na"))
-    vb = e.select(F.col(id_col).alias("b"), F.col("v").alias("vb"),
-                  F.sqrt(dot(F.col("v"), F.col("v"))).alias("nb"))
-    paired = cand.join(va, "a").join(vb, "b")
-    cos = (_pair_dot_udf()(F.col("va"), F.col("vb"))
-           / (F.col("na") * F.col("nb")))
-    return (paired.select("a", "b", cos.alias("cos"))
-            .filter(F.col("cos") >= threshold))
-
-
-def _pair_dot_udf():
-    """Arrow UDF: row-wise dot of two array<double> columns, ascending-d
-    fold (bit-identical to :func:`dot`'s Catalyst aggregate)."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def pair_dot(a, b):
-        import pandas as pd
-
-        if not len(a):
-            return pd.Series(np.zeros(0))
-        av = np.array(a.tolist(), dtype=np.float64)
-        bv = np.array(b.tolist(), dtype=np.float64)
-        acc = np.zeros(len(av))
-        for d in range(av.shape[1]):
-            acc += av[:, d] * bv[:, d]
-        return pd.Series(acc)
-
-    return pair_dot
+    tagged = e.select(F.col(id_col), F.col("v"), sig.alias("sig"))
+    rows = tagged.select(
+        F.col(id_col), F.col("v"), F.col("sig"),
+        F.posexplode(F.array(*band_keys)).alias("band", "bkey"))
+    fn = _bucket_verify_fn(threshold, r, id_col)
+    return (rows.groupBy("band", "bkey")
+            .applyInPandas(fn, "a long, b long, cos double"))
 
 
 def _bucket_verify_fn(threshold: float, r: int, id_col: str):

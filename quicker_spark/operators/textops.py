@@ -70,14 +70,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Return df with exact-duplicate rows (by content hash) removed,
-    keeping the lowest id per hash group."""
-    keep = exact_duplicates(df, id_col, text_col).filter("keep").select(id_col)
-    return df.join(keep, id_col, "left_semi")
-
-
 # -- MinHash + LSH -------------------------------------------------------------
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",

@@ -63,9 +63,10 @@ Restriction that remains: ``min_should_match``/pruned-mode arguments
 keep their flat-query contracts (engine-level, unchanged).
 
 Multi-term expansions (fuzzy/wildcard/regexp/prefix) happen at compile
-time against the term dictionary (engine.expand_*: anchored,
-partition-pruned scans), then the whole request runs as ONE scored
-search — same plan shape as any other query.
+time against the term dictionary (engine.TermDictionary.expand_*:
+anchored string-range slices of ``term_stats``, read without a Spark
+job), then the whole request runs as ONE scored search — same plan
+shape as any other query.
 
 Every string compiles to one ``search`` call — a lone phrase is a
 phrase clause like any other, so its boost, the paging cursor and the
@@ -73,10 +74,10 @@ quorum check apply to it as to any query.
 
 The compiler is duck-typed over BOTH serving tiers: `SearchEngine`
 (Spark scatter-gather) and `serving.LocalSearcher` (resident
-point-query tier), which exposes the same expand_*/search surface — the
-same string returns bitwise-identical rankings from either
-(tests/test_local_serving.py), phrases included (both read the
-positional sidecar).
+point-query tier), which share the expand_* implementation and expose
+the same search surface — the same string returns bitwise-identical
+rankings from either (tests/test_local_serving.py), phrases included
+(both read the positional sidecar).
 """
 
 from __future__ import annotations
@@ -470,9 +471,8 @@ def _expand_leaf(eng, leaf: Leaf, default_field: str,
                                 prefix_len=0,
                                 max_expansions=max_expansions)
     elif leaf.kind == "wildcard":
-        from quicker_spark.engine import SearchEngine
         keys = eng.expand_regexp(
-            f, SearchEngine.wildcard_to_regexp(leaf.text[0]),
+            f, eng.wildcard_to_regexp(leaf.text[0]),
             max_expansions=max_expansions)
     elif leaf.kind == "regexp":
         keys = eng.expand_regexp(f, leaf.text[0],

@@ -57,6 +57,7 @@ import pandas as pd
 
 from quicker_spark.engine import (
     SearchSpec,
+    TermDictionary,
     _row_to_encoded,
     _score_segment_rows,
     batch_entries,
@@ -74,13 +75,16 @@ from quicker_spark.operators.positions import require_positions
 from quicker_spark.plans.term_query import TermQuery
 
 
-class LocalSearcher:
+class LocalSearcher(TermDictionary):
     """Serve BM25 top-k point queries from an index directory built by
     :func:`quicker_spark.operators.build.build_index` — no SparkSession,
     no Spark job; pyarrow pruned reads + the engine's numpy kernels.
 
     ``max_terms`` bounds the resident cache (LRU over terms; a term's
     residency = its df_global + per-segment encoded and decoded runs).
+    The term-dictionary verbs (``expand_*``, ``suggest`` -> pandas) are
+    :class:`~quicker_spark.engine.TermDictionary`'s, the one
+    implementation both tiers share.
 
     Safe to share between threads: concurrent calls return exactly the
     sequential answers (tested), whatever the ``max_terms`` cap.
@@ -228,119 +232,6 @@ class LocalSearcher:
         return {seg: phrase_leaf_ids(phrases, runs.get(seg, {}), on, off,
                                      or_flags)
                 for seg in segments}
-
-    # -- term-dictionary expansion (the query-string compiler's needs) ------
-    def _dict_slice(self, pref: str) -> pd.DataFrame:
-        """(term, df_global) rows for the ``pref`` string range — a
-        pushed-down range filter over the term-sorted stats files (the
-        pyarrow analog of the engine's StartsWith dictionary slice;
-        '\\x80' upper-bounds every [a-z0-9_\\x01] vocabulary byte).
-        Every dictionary verb reads through here, so this is where they
-        refuse a generation that maintenance has replaced."""
-        import pyarrow.compute as pc
-
-        self._check_fresh()
-        filt = (pc.field("term") >= pref) & (pc.field("term")
-                                             < pref + "\x80")
-        return self._ts_ds.to_table(
-            filter=filt, columns=["term", "df_global"]).to_pandas()
-
-    def expand_prefix(self, field: str, prefix: str,
-                      max_expansions: int = 64) -> list[str]:
-        """Same contract + ordering as :meth:`SearchEngine.expand_prefix`
-        (df desc, term asc, top N), served from the local stats files."""
-        sl = self._dict_slice(f"{field}\x01{prefix}")
-        sl = sl.sort_values(["df_global", "term"],
-                            ascending=[False, True],
-                            kind="mergesort")
-        return sl["term"].head(int(max_expansions)).tolist()
-
-    def expand_regexp(self, field: str, pattern: str,
-                      max_expansions: int = 64) -> list[str]:
-        """Same contract as :meth:`SearchEngine.expand_regexp`: any
-        literal prefix of the pattern anchors the dictionary slice, then
-        the WHOLE word must match. Vocabulary terms are [a-z0-9_]+ and
-        the supported pattern alphabet is shared by Java and Python
-        regex, so the expansion set equals the Spark path's."""
-        import re as _re
-
-        from quicker_spark.engine import SearchEngine
-
-        lit = []
-        for ch in pattern:
-            if ch in SearchEngine._REGEX_META:
-                break
-            lit.append(ch)
-        sl = self._dict_slice(f"{field}\x01" + "".join(lit))
-        if not len(sl):
-            return []
-        words = sl["term"].str[len(field) + 1:]
-        rx = _re.compile(f"^(?:{pattern})$")
-        sl = sl[words.map(lambda w: rx.fullmatch(w) is not None)]
-        sl = sl.sort_values(["df_global", "term"],
-                            ascending=[False, True], kind="mergesort")
-        return sl["term"].head(int(max_expansions)).tolist()
-
-    def expand_fuzzy(self, field: str, word: str, max_edits: int = 1,
-                     prefix_len: int = 1,
-                     max_expansions: int = 64) -> list[str]:
-        """Same contract + (distance asc, df desc, term asc) ordering as
-        :meth:`SearchEngine.expand_fuzzy`."""
-        if max_edits < 0:
-            raise ValueError("max_edits must be >= 0")
-        word = str(word).lower()
-        pref = f"{field}\x01{word[:prefix_len]}" if prefix_len \
-            else f"{field}\x01"
-        sl = self._dict_slice(pref)
-        if not len(sl):
-            return []
-        words = sl["term"].str[len(field) + 1:]
-        sl = sl[(words.str.len() - len(word)).abs() <= int(max_edits)]
-        if not len(sl):
-            return []
-        dist = sl["term"].str[len(field) + 1:].map(
-            lambda t: _levenshtein(t, word))
-        sl = sl.assign(_d=dist)
-        sl = sl[sl["_d"] <= int(max_edits)]
-        sl = sl.sort_values(["_d", "df_global", "term"],
-                            ascending=[True, False, True],
-                            kind="mergesort")
-        return sl["term"].head(int(max_expansions)).tolist()
-
-    def suggest(self, field: str, word: str, max_edits: int = 2,
-                prefix_len: int = 1, n: int = 5) -> pd.DataFrame:
-        """Spell suggestion from the local term-stats files — same
-        contract, exclusions, and (distance asc, df desc, word asc)
-        ranking as :meth:`SearchEngine.suggest`; returns pandas
-        (word, distance, df)."""
-        if max_edits < 0:
-            raise ValueError("max_edits must be >= 0")
-        word = str(word).lower()
-        pref = f"{field}\x01{word[:prefix_len]}" if prefix_len \
-            else f"{field}\x01"
-        sl = self._dict_slice(pref)
-        empty = pd.DataFrame({"word": pd.Series(dtype=object),
-                              "distance": pd.Series(dtype=np.int64),
-                              "df": pd.Series(dtype=np.int64)})
-        if not len(sl):
-            return empty
-        words = sl["term"].str[len(field) + 1:]
-        sl = sl.assign(word=words)
-        sl = sl[(sl["word"].str.len() - len(word)).abs()
-                <= int(max_edits)]
-        if not len(sl):
-            return empty
-        sl = sl.assign(distance=sl["word"].map(
-            lambda t: _levenshtein(t, word)))
-        sl = sl[(sl["distance"] <= int(max_edits))
-                & (sl["word"] != word)]
-        sl = sl.sort_values(["distance", "df_global", "word"],
-                            ascending=[True, False, True],
-                            kind="mergesort").head(int(n))
-        return pd.DataFrame({
-            "word": sl["word"].to_numpy(dtype=object),
-            "distance": sl["distance"].to_numpy(dtype=np.int64),
-            "df": sl["df_global"].to_numpy(dtype=np.int64)})
 
     # -- serving ------------------------------------------------------------
     def search(self, q: TermQuery, k: int = 10, on: int = 0, off: int = 0,
@@ -515,21 +406,6 @@ class LocalSearcher:
         if cols is not None:
             docs = docs[["doc_id", *[c for c in cols if c != "doc_id"]]]
         return hits.merge(docs, on="doc_id", how="left", sort=False)
-
-
-def _levenshtein(a: str, b: str) -> int:
-    """Plain edit distance — same metric as Spark's `levenshtein`
-    (substitution cost 1, no transpositions)."""
-    if a == b:
-        return 0
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 def _top_k(ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:

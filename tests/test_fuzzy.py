@@ -9,6 +9,7 @@ from quicker_spark.fixtures import corpus_df, corpus_pdf
 from quicker_spark.operators.build import IndexConfig, build_index
 from quicker_spark.oracle import Oracle
 from quicker_spark.plans.term_query import NewTermQuery, Or
+from quicker_spark.serving import LocalSearcher
 
 N_DOCS = 300
 CFG = IndexConfig(seg_docs=80, wave_segments=2, block_size=32)
@@ -19,6 +20,11 @@ def engine(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("fuzzy_index"))
     build_index(spark, corpus_df(spark, N_DOCS, partitions=4), out, CFG)
     return SearchEngine(spark, out)
+
+
+@pytest.fixture(scope="module")
+def local(engine):
+    return LocalSearcher(engine.index_dir)
 
 
 @pytest.fixture(scope="module")
@@ -110,6 +116,21 @@ def test_regexp_expansion_matches_brute_force(engine, oracle):
     assert got == exp and len(exp) >= 2
 
 
+@pytest.mark.parametrize("pat", ["tok50?", "tok50{0,1}", "tok50|def",
+                                 "def|tok50"])
+def test_regexp_anchor_keeps_optional_and_alternative_matches(
+        engine, local, oracle, pat):
+    # the literal run before '?', '*' or '{' may lose its last character,
+    # and an alternative may start with anything: the dictionary slice
+    # must not be anchored past what every match starts with
+    import re
+
+    exp = {f"content\x01{t}" for t in _vocab(oracle) if re.fullmatch(pat, t)}
+    got = engine.expand_regexp("content", pat, max_expansions=10_000)
+    assert set(got) == exp and len(exp) == 2
+    assert local.expand_regexp("content", pat, max_expansions=10_000) == got
+
+
 def test_regexp_whole_term_semantics(engine, oracle):
     # 'de.' must match 'def' but NOT e.g. 'def'-prefixed longer tokens
     import re
@@ -132,6 +153,31 @@ def test_regexp_search_matches_expanded_or(engine, oracle):
     exp = [(h.doc_id, h.score) for h in oracle.search_topk(q, k=10)]
     assert [d for d, _ in got] == [d for d, _ in exp]
     assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, exp))
+
+
+def test_dictionary_verbs_run_no_spark_job(engine):
+    """The dictionary verbs read term_stats in the calling process (0
+    Spark jobs, suggest's local relation included); each search over an
+    expansion is the one job of ``search``."""
+    sc = engine.spark.sparkContext
+    runs = (
+        (0, lambda: engine.expand_prefix("content", "tok5")),
+        (0, lambda: engine.expand_fuzzy("content", "tok50")),
+        (0, lambda: engine.expand_regexp("content", "tok5[0-9]")),
+        (0, lambda: engine.suggest("content", "tok5x").collect()),
+        (1, lambda: engine.search_prefix("content", "tok5").collect()),
+        (1, lambda: engine.search_fuzzy("content", "tok50").collect()),
+        (1, lambda: engine.search_regexp("content", "tok5[0-9]").collect()),
+        (1, lambda: engine.search_wildcard("content", "tok5?").collect()),
+    )
+    for i, (jobs, run) in enumerate(runs):
+        group = f"dict-verb-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            assert run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, i
 
 
 # -- wildcard queries ----------------------------------------------------------

@@ -377,10 +377,50 @@ def test_local_expansions_equal_engine(eng, ls):
                   {"max_edits": 1, "prefix_len": 3}),
                  ("expand_fuzzy", ("content", "tok50"),
                   {"max_edits": 2, "prefix_len": 1,
-                   "max_expansions": 9})):
+                   "max_expansions": 9}),
+                 ("expand_fuzzy", ("content", "TOK50"),
+                  {"max_edits": 1, "prefix_len": 3})):
         name, a, kw = args
         assert getattr(ls, name)(*a, **kw) == \
             getattr(eng, name)(*a, **kw), args
+
+
+def test_dictionary_verbs_refuse_bad_arguments(eng, ls):
+    # a negative count and an invalid pattern are ValueErrors on both
+    # tiers, raised before anything is read; a zero count answers []
+    for tier in (eng, ls):
+        for call in (
+                lambda: tier.expand_prefix("content", "tok",
+                                           max_expansions=-1),
+                lambda: tier.expand_fuzzy("content", "tok50",
+                                          max_expansions=-1),
+                lambda: tier.expand_regexp("content", "tok.",
+                                           max_expansions=-1),
+                lambda: tier.suggest("content", "tok5x", n=-1),
+                lambda: tier.expand_regexp("content", "tok5["),
+                lambda: tier.expand_regexp("content", r"tok5\p{Digit}")):
+            with pytest.raises(ValueError):
+                call()
+        assert tier.expand_prefix("content", "tok", max_expansions=0) == []
+
+
+def test_dictionary_slice_bound(eng, ls, monkeypatch):
+    # a slice past DICT_SLICE_MAX_ROWS is refused, naming the prefix to
+    # lengthen; a slice under it answers as before
+    import quicker_spark.engine as engine_mod
+
+    want = ls.expand_prefix("content", "tok5", max_expansions=500)
+    assert len(want) > 1
+    monkeypatch.setattr(engine_mod, "DICT_SLICE_MAX_ROWS", len(want) + 5)
+    for tier in (eng, ls):
+        for call in (lambda: tier.expand_prefix("content", "t"),
+                     lambda: tier.expand_fuzzy("content", "tok50"),
+                     lambda: tier.expand_regexp("content", "t.*"),
+                     lambda: tier.suggest("content", "tok5x")):
+            with pytest.raises(ValueError, match="lengthen the prefix"):
+                call()
+        assert tier.expand_prefix("content", "tok5",
+                                  max_expansions=500) == want
 
 
 def test_search_string_local_equals_spark(eng, ls):

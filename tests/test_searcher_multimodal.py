@@ -1,15 +1,13 @@
-"""Searcher template (Q10-Q14 parity) + multimodal kernel plumbing."""
+"""Searcher template (Q10-Q14 parity) + embedding similarity."""
 
 from __future__ import annotations
 
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from quicker_spark.engine import SearchEngine
 from quicker_spark.fixtures import corpus_pdf
-from quicker_spark.operators import multimodal as mm
 from quicker_spark.operators.build import IndexConfig, build_index
 from quicker_spark.plans.searcher import (
     KeywordAuthorRecaller,
@@ -105,57 +103,6 @@ def test_searcher_unknown_fusion_raises(eng):
     s = Searcher(eng, fusion="nope")
     with pytest.raises(ValueError, match="unknown fusion"):
         s.search(SearchContext(keywords=("def",)), k=5)
-
-
-# -- multimodal ---------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def media(spark):
-    pdf = corpus_pdf(40)
-    df = spark.createDataFrame(pdf).withColumn(
-        "rid", F.monotonically_increasing_id())
-    return mm.media_table(df, "rid", "content")
-
-
-def test_image_features_shapes(media):
-    feats = mm.image_features(media).collect()
-    assert len(feats) == 40
-    for r in feats:
-        assert r["width"] == mm.FAKE_W and r["height"] == mm.FAKE_H
-        assert 0.0 <= r["mean_r"] <= 255.0
-        assert len(r["sha"]) == 64
-
-
-def test_features_partition_invariant(media):
-    a = sorted((r["media_id"], r["sha"]) for r in
-               mm.image_features(media.repartition(1)).collect())
-    b = sorted((r["media_id"], r["sha"]) for r in
-               mm.image_features(media.repartition(7)).collect())
-    assert a == b
-
-
-def test_resize_payload_roundtrip(media):
-    out = mm.resize_images(media, 4, 3).collect()
-    assert len(out) == 40
-    for r in out:
-        assert len(bytes(r["payload"])) == 4 * 3 * 3  # w*h*rgb
-        assert r["width"] == 4 and r["height"] == 3
-
-
-def test_frame_sample_fanout(media):
-    frames = mm.frame_sample(media, every_n=2, n_frames=8)
-    rows = frames.collect()
-    assert len(rows) == 40 * 4  # frames 0,2,4,6 per media row
-    per_media = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] == 4 for r in per_media)
-    # frames differ per index (fake decode is index-salted)
-    one = [r for r in rows if r["media_id"] == rows[0]["media_id"]]
-    assert len({r["frame_sha"] for r in one}) == len(one)
-
-
-def test_decode_strict_raises():
-    with pytest.raises(NotImplementedError):
-        mm.decode_rgb(b"abc", strict=True)
 
 
 # -- embedding similarity: ANN quality + plan contracts -----------------------
@@ -258,9 +205,9 @@ def test_near_pairs_exactly_once_across_buckets(spark):
 
 
 def test_near_pairs_verify_modes_bit_identical(spark):
-    """verify='bucket' (bucket-local all-pairs) and verify='pairs'
-    (candidate join + Arrow pair scoring) must return the same pairs with
-    bit-identical cosines — both use the ascending-d fold."""
+    """The bucket verify finds every pair of the exact all-pairs check on
+    a 40-vector corpus whose pairs all collide, with bit-identical
+    cosines: both fold the dot in ascending-d order."""
     from quicker_spark.operators import simsearch
 
     rows = [(i, [float((i * 7 + d * 3) % 5 - 2) for d in range(64)])
@@ -268,10 +215,9 @@ def test_near_pairs_verify_modes_bit_identical(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     bucket = {(r.a, r.b): r.cos
               for r in simsearch.near_pairs_lsh(emb, threshold=0.3).collect()}
-    pairs = {(r.a, r.b): r.cos
-             for r in simsearch.near_pairs_lsh(
-                 emb, threshold=0.3, verify="pairs").collect()}
-    assert bucket == pairs and len(bucket) > 0
+    exact = {(r.a, r.b): r.cos
+             for r in simsearch.near_pairs(emb, threshold=0.3).collect()}
+    assert bucket == exact and len(bucket) > 0
 
 
 def test_near_pairs_blocked_verify_matches_unblocked(spark, monkeypatch):
